@@ -24,46 +24,24 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the reference's full
     `/ask` dataflow per SURVEY.md §3.1 — clean → chunk → embed → exact
     top-k with threshold cascade → cross-encoder rerank (stub scorer) →
-    greedy context packing."""
+    greedy context packing — for the first 8 documents' openings."""
     from pyspark.sql import functions as F
 
     from knowledge_model_spark.operators.retrieval import (
+        ask,
         build_passage_index,
         lexical_overlap_scorer,
-        pack_context,
-        rerank_top_k,
-        retrieve,
     )
     from knowledge_model_spark.session import load_tables
 
-    t = load_tables(spark, "/root/testdata/sf0.001")
-    docs = t["documents"]
-    index = build_passage_index(docs)
+    docs = load_tables(spark, "/root/testdata/sf0.001")["documents"]
     queries = docs.filter(F.col("doc_id") < 8).select(
         F.col("doc_id").cast("string").alias("query_id"),
         F.substring("text", 1, 120).alias("query_text"),
     )
-    hits = retrieve(index, queries, k=8)
-    passages = index.select(
-        F.concat_ws("#", F.col("doc_id"), F.col("chunk_index")).alias("__pid"),
-        "chunk_text",
-    )
-    reranked = rerank_top_k(
-        hits.join(queries, "query_id").join(F.broadcast(passages), "__pid"),
-        lexical_overlap_scorer(),
-        k=5,
-        query_text="query_text",
-        doc_text="chunk_text",
-        tiebreak="__pid",
-    )
-    packed = pack_context(reranked, budget=200, order_col="re_score")
-    return packed.select(
-        "query_id",
-        F.col("__pid").alias("passage_id"),
-        "score",
-        F.round("re_score", 6).alias("re_score"),
-        F.col("re_rank").alias("rank"),
-        "n_tok",
+    return ask(
+        build_passage_index(docs), queries,
+        k=8, rerank_k=5, budget=200, scorer=lexical_overlap_scorer(),
     )
 
 

@@ -694,8 +694,9 @@ def minhash_incremental_pairs(
     pass over new rows), join its banded buckets against a durable
     Parquet ``sketch_store`` of all previously-sketched documents, emit
     new-vs-old and new-vs-new pairs, and append the new sketches to the
-    store for the next batch.  Cost per batch ∝ batch size + matched
-    bucket occupancy — never ∝ corpus size.
+    store for the next batch.  Cost per batch is ∝ corpus size: every
+    stored band row is re-read and re-shuffled into the ``(band, bucket)``
+    groupBy (pruning the store to the batch's buckets is ROADMAP direction 3).
 
     Old-vs-old pairs are deliberately NOT re-emitted (they were reported
     when those batches arrived); the pair filter keeps only pairs with at

@@ -5,18 +5,21 @@ and the recall@K eval gate (pipelines/tasks/eval_snapshot.py:74-108,
 flows/continuous.py:34-36) as batch DataFrame jobs:
 
   clean → split passages → embed (hash stub or pluggable pandas_udf) →
-  exact top-k scored join → threshold cascade → context packing budget.
+  exact top-k scored join → threshold cascade → rerank → context packing
+  budget — composed once, in :func:`ask`.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import math
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from knowledge_model_spark.functions.chunking import explode_passages
+from knowledge_model_spark.functions.text_analysis import token_count
 from knowledge_model_spark.functions.text_cleaning import clean_text
 from knowledge_model_spark.functions.vectors import hash_embed
 from knowledge_model_spark.operators.relational import greedy_budget_pack
@@ -26,6 +29,29 @@ DEFAULT_TOP_K = 12  # reference: vector_store.py:19
 MIN_SCORE = 0.75  # reference: vector_store.py:134
 FALLBACK_MIN_SCORE = 0.55  # reference: main.py:380
 CONTEXT_TOKEN_BUDGET = 800  # reference: main.py:355
+
+Scorer = Callable[[Column, Column], Column]
+
+
+def passage_id(doc_id: Column, chunk_index: Column) -> Column:
+    """The passage key ``doc_id#chunk_index`` that hits carry as ``__pid``."""
+    return F.concat_ws("#", doc_id, chunk_index)
+
+
+def passage_doc_id(pid: Column) -> Column:
+    """Inverse of :func:`passage_id` on its document part: the long doc_id."""
+    return F.split(pid, "#").getItem(0).cast("long")
+
+
+def threshold_cascade(hits: DataFrame, min_score: float, query_id: str = "query_id") -> DataFrame:
+    """Two-phase threshold cascade over hits already cut at the fallback
+    threshold (reference: main.py:374-381): keep score >= min_score, except
+    that a query whose best hit is below min_score keeps all its hits."""
+    return (
+        hits.withColumn("__best", F.max("score").over(Window.partitionBy(query_id)))
+        .filter((F.col("score") >= min_score) | (F.col("__best") < min_score))
+        .drop("__best")
+    )
 
 
 def build_passage_index(
@@ -85,25 +111,11 @@ def stats_model_udf():
 
     @F.pandas_udf("array<double>")
     def model(texts: pd.Series) -> pd.Series:
-        import math
         import re
 
-        if "vowel" not in state:  # lazy init: once per executor process
-            state["vowel"] = re.compile(r"[aeiou]")
-            state["ws"] = re.compile(r"\s+")
-        vowel_re, ws_re = state["vowel"], state["ws"]
-        out = []
-        for t in texts:
-            t = t or ""
-            v = [
-                float(len(t)),
-                float(len([w for w in ws_re.split(t) if w])),
-                float(len(vowel_re.findall(t.lower()))),
-                1.0,
-            ]
-            n = math.sqrt(sum(x * x for x in v))
-            out.append([x / n for x in v])
-        return pd.Series(out)
+        if not state:  # lazy init: once per executor process
+            state.update(vowel=re.compile(r"[aeiou]"), ws=re.compile(r"\s+"))
+        return _stats_embed(texts, state["vowel"], state["ws"])
 
     return model
 
@@ -118,27 +130,26 @@ def stats_model_iter_udf():
     and parity between the two is gated in tests/test_retrieval.py."""
     @F.pandas_udf("array<double>")
     def model(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import math
         import re
 
         # expensive-init site: ONCE per task, before any batch
         vowel_re = re.compile(r"[aeiou]")
         ws_re = re.compile(r"\s+")
         for texts in batches:
-            out = []
-            for t in texts:
-                t = t or ""
-                v = [
-                    float(len(t)),
-                    float(len([w for w in ws_re.split(t) if w])),
-                    float(len(vowel_re.findall(t.lower()))),
-                    1.0,
-                ]
-                n = math.sqrt(sum(x * x for x in v))
-                out.append([x / n for x in v])
-            yield pd.Series(out)
+            yield _stats_embed(texts, vowel_re, ws_re)
 
     return model
+
+
+def _stats_embed(texts: pd.Series, vowel_re, ws_re) -> pd.Series:
+    """The per-text kernel both stats-model UDF forms share."""
+    out = []
+    for t in texts:
+        t = t or ""
+        v = [len(t), len([w for w in ws_re.split(t) if w]), len(vowel_re.findall(t.lower())), 1]
+        n = math.sqrt(sum(x * x for x in v))
+        out.append([x / n for x in v])
+    return pd.Series(out)
 
 
 def retrieve(
@@ -163,7 +174,7 @@ def retrieve(
         F.col(query_id), hash_embed(F.col(query_text), dim).alias("qvec")
     )
     hits = brute_force_top_k(
-        index.withColumn("__pid", F.concat_ws("#", F.col("doc_id"), F.col("chunk_index"))),
+        index.withColumn("__pid", passage_id(F.col("doc_id"), F.col("chunk_index"))),
         qv,
         corpus_id="__pid",
         corpus_vec="vector",
@@ -173,15 +184,7 @@ def retrieve(
         min_score=fallback_min_score,
         normalized=True,
     )
-    wq = Window.partitionBy(query_id)
-    return (
-        hits.withColumn("__best", F.max("score").over(wq))
-        .filter(
-            (F.col("score") >= min_score)
-            | (F.col("__best") < min_score)  # cascade: whole query fell back
-        )
-        .drop("__best")
-    )
+    return threshold_cascade(hits, min_score, query_id)
 
 
 def pack_context(
@@ -195,38 +198,33 @@ def pack_context(
     main.py:355-363): keep hits while the running whitespace-token total
     stays within budget.  ``order_col`` is the walk order — pass the
     rerank score when packing reranked hits."""
-    with_cost = hits.withColumn(
-        "n_tok", F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda w: F.length(w) > 0))
-    )
+    with_cost = hits.withColumn("n_tok", token_count(F.col(text_col)))
     return greedy_budget_pack(
         with_cost, [query_id], order_col=order_col, cost_col="n_tok", budget=budget
     )
 
 
-def lexical_overlap_scorer():
-    """Deterministic stub cross-encoder: word-set Jaccard between query
-    and passage text, as an Arrow-batched pandas UDF.
+def lexical_overlap_scorer() -> Scorer:
+    """Deterministic stub cross-encoder: word-set Jaccard (0.0 when both
+    sets are empty) over the ``[a-z0-9]`` runs of the lowercased text, as
+    a Column expression — no Python worker.
 
     Stands in for the reference's CrossEncoder.predict
     (reference: embeddings/re_rank.py:44-47) so the rerank seam is
     testable (and DuckDB-expressible) without model downloads; a real
-    model plugs in as any ``(query_text, doc_text) -> double`` pandas UDF
-    with per-executor lazy model init (the reference's @lru_cache analog,
-    re_rank.py:20-24).
+    model plugs into the same seam as a ``(query_text, doc_text) ->
+    double`` pandas UDF (:func:`cross_encoder_udf`).
     """
-    import re as _re
 
-    @F.pandas_udf("double")
-    def scorer(q: pd.Series, d: pd.Series) -> pd.Series:
-        def toks(t):
-            return {w for w in _re.split(r"[^a-z0-9]+", (t or "").lower()) if w}
+    def toks(x: Column) -> Column:
+        return F.array_remove(F.split(F.lower(F.coalesce(x, F.lit(""))), "[^a-z0-9]+"), "")
 
-        out = []
-        for a, b in zip(q, d):
-            ta, tb = toks(a), toks(b)
-            u = ta | tb
-            out.append(len(ta & tb) / len(u) if u else 0.0)
-        return pd.Series(out, dtype=float)
+    def scorer(q: Column, d: Column) -> Column:
+        a, b = toks(q), toks(d)
+        n_union = F.size(F.array_union(a, b))
+        return F.when(n_union == 0, F.lit(0.0)).otherwise(
+            F.size(F.array_intersect(a, b)) / n_union
+        )
 
     return scorer
 
@@ -243,15 +241,16 @@ def rerank_top_k(
     rank_name: str = "re_rank",
 ) -> DataFrame:
     """Cross-encoder rerank hook: score each (query, passage) pair with a
-    pluggable pandas-UDF ``scorer``, keep the top-k per query by the new
-    score (reference: embeddings/re_rank.py:28-51 — CE.predict +
+    pluggable ``scorer``, keep the top-k per query by the new score
+    (reference: embeddings/re_rank.py:28-51 — CE.predict +
     argsort[:top_k]).
 
-    The batch analog scores every candidate (the reference's
-    skip-when-len<=k short-circuit is a serving-latency optimization;
-    queries with ≤ k candidates keep all rows here too, just re-ordered
-    by the new score).  Scoring is one Arrow-batched UDF pass; the top-k
-    is a per-query window — no collect, no per-row Python.
+    ``scorer`` maps (query, doc) Columns to a score Column: an expression
+    (:func:`lexical_overlap_scorer`) or a pandas UDF
+    (:func:`cross_encoder_udf`).  The batch analog scores every candidate
+    (the reference's skip-when-len<=k short-circuit is a serving-latency
+    optimization; queries with ≤ k candidates keep all rows here too,
+    just re-ordered by the new score).  The top-k is a per-query window.
     """
     order = [F.col(score_name).desc()]
     if tiebreak is not None:
@@ -261,6 +260,39 @@ def rerank_top_k(
         hits.withColumn(score_name, scorer(F.col(query_text), F.col(doc_text)))
         .withColumn(rank_name, F.row_number().over(w))
         .filter(F.col(rank_name) <= k)
+    )
+
+
+def ask(
+    index: DataFrame, queries: DataFrame, k: int, rerank_k: int, budget: int, scorer: Scorer
+) -> DataFrame:
+    """The `/ask` request (reference: main.py:355-421) over a
+    :func:`build_passage_index` table for ``queries`` (query_id,
+    query_text): exact top-``k`` with the threshold cascade → rerank to
+    ``rerank_k`` → greedy ``budget``-token packing, walked in ``re_rank``
+    order (unique per query, so a budget cut on a score tie is
+    deterministic).  Returns (query_id, passage_id, score, re_score, rank,
+    n_tok).
+    """
+    hits = retrieve(index, queries, k=k)
+    passages = index.select(
+        passage_id(F.col("doc_id"), F.col("chunk_index")).alias("__pid"), "chunk_text"
+    )
+    pairs = hits.join(queries, "query_id").join(F.broadcast(passages), "__pid")
+    reranked = rerank_top_k(pairs, scorer, k=rerank_k, tiebreak="__pid").withColumn(
+        "n_tok", token_count(F.col("chunk_text"))
+    )
+    packed = greedy_budget_pack(
+        reranked, ["query_id"], order_col="re_rank", cost_col="n_tok",
+        budget=budget, ascending=True,
+    )
+    return packed.select(
+        "query_id",
+        F.col("__pid").alias("passage_id"),
+        "score",
+        F.round("re_score", 6).alias("re_score"),
+        F.col("re_rank").alias("rank"),
+        "n_tok",
     )
 
 

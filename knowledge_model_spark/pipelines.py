@@ -114,11 +114,11 @@ def continuous_update(
 
     recall = 1.0
     if eval_queries is not None:
-        from knowledge_model_spark.operators.retrieval import retrieve
+        from knowledge_model_spark.operators.retrieval import passage_doc_id, retrieve
 
         index = spark.read.parquet(sink_path)
         hits = retrieve(index, eval_queries, dim=dim).withColumn(
-            "doc_id", F.split(F.col("__pid"), "#").getItem(0).cast("long")
+            "doc_id", passage_doc_id(F.col("__pid"))
         )
         row = recall_at_k(hits, eval_queries, k=10).first()
         recall = float(row["recall"])

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from knowledge_model_spark.functions.chunking import split_words
 from knowledge_model_spark.plans import register
 from knowledge_model_spark.session import load_tables
 
@@ -148,9 +149,7 @@ def chunk_word_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     words = t["documents_spread"].select(
         "doc_id",
-        F.posexplode(
-            F.filter(F.split(F.trim("text"), r"\s+"), lambda w: F.length(w) > 0)
-        ).alias("idx", "word"),
+        F.posexplode(split_words(F.col("text"))).alias("idx", "word"),
     )
     return (
         words.groupBy(

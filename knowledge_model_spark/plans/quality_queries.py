@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from knowledge_model_spark.functions.pii import oracle_sql_redact, redact_pii
-from knowledge_model_spark.functions.text_analysis import gopher_quality_flags
+from knowledge_model_spark.functions.text_analysis import gopher_quality_flags, token_count
 from knowledge_model_spark.operators.decontam import (
     contamination_pairs,
     decontaminate,
@@ -773,11 +773,7 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     B = 64
     x = t["documents_spread"].select(
         "doc_id",
-        F.size(
-            F.filter(
-                F.split(F.trim("text"), r"\s+"), lambda w: F.length(w) > 0
-            )
-        ).alias("n_tok"),
+        token_count(F.col("text")).alias("n_tok"),
     )
     rep = x.select(
         "doc_id",

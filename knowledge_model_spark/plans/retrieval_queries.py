@@ -23,8 +23,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from knowledge_model_spark.functions.text_analysis import token_count
 from knowledge_model_spark.functions.vectors import dot, l2_normalize
 from knowledge_model_spark.operators.relational import greedy_budget_pack
+from knowledge_model_spark.operators.retrieval import (
+    lexical_overlap_scorer,
+    rerank_top_k,
+    threshold_cascade,
+)
 from knowledge_model_spark.operators.similarity import brute_force_top_k
 from knowledge_model_spark.plans import register
 from knowledge_model_spark.session import load_tables, spread_vectors
@@ -83,12 +89,7 @@ def _cascade_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=K,
         min_score=T2,
     )
-    wq = Window.partitionBy("query_id")
-    return (
-        hits.withColumn("__best", F.max("score").over(wq))
-        .filter((F.col("score") >= T1) | (F.col("__best") < T1))
-        .drop("__best")
-    )
+    return threshold_cascade(hits, T1)
 
 
 @register(
@@ -142,10 +143,7 @@ def retrieval_pack_context(spark: SparkSession, sf_dir: str) -> DataFrame:
         broadcast(t["documents"].select(F.col("doc_id").alias("vec_id"), "text")),
         "vec_id",
     )
-    costed = hits.withColumn(
-        "n_tok",
-        F.size(F.filter(F.split(F.trim("text"), r"\s+"), lambda w: F.length(w) > 0)),
-    )
+    costed = hits.withColumn("n_tok", token_count(F.col("text")))
     packed = greedy_budget_pack(
         costed,
         ["query_id"],
@@ -200,15 +198,10 @@ RERANK_K = 5
     """,
     doc="cross-encoder rerank hook (reference: embeddings/re_rank.py:28-51): "
     f"top-{RERANK_POOL} cosine candidates per query re-scored by a pluggable "
-    f"pandas-UDF scorer (deterministic lexical-overlap stub), window top-{RERANK_K} "
+    f"scorer (deterministic lexical-overlap stub, a Column expression), window top-{RERANK_K} "
     "by the new score",
 )
 def retrieval_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from knowledge_model_spark.operators.retrieval import (
-        lexical_overlap_scorer,
-        rerank_top_k,
-    )
-
     t = load_tables(spark, sf_dir)
     e = t["embeddings"]
     q = e.filter(F.col("vec_id") < 8).select(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from knowledge_model_spark.functions.text_analysis import token_count
 from knowledge_model_spark.operators.ordering import (
     grid_global_row_number,
     grid_global_running_sum,
@@ -86,9 +87,7 @@ def pack_training_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = t["documents_spread"].select(
         "doc_id",
         (F.col("doc_id") % PACK_GROUPS).alias("grp"),
-        F.size(
-            F.filter(F.split(F.trim("text"), r"\s+"), lambda w: F.length(w) > 0)
-        ).alias("n_tok"),
+        token_count(F.col("text")).alias("n_tok"),
     )
     w = (
         Window.partitionBy("grp")

@@ -10,7 +10,7 @@ partitioning-invariance of the deterministic sketches.
 from __future__ import annotations
 
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -94,6 +94,64 @@ def test_greedy_budget_pack_is_maximal_prefix(spark, costs, budget):
             break
         want.append(i)
     assert got == want
+
+
+def _udf_jaccard_scorer():
+    """The rerank stub as it was before it became a Column expression: a
+    pandas UDF over Python ``str.lower`` / ``re.split`` word sets."""
+    import re
+
+    @F.pandas_udf("double")
+    def scorer(q: pd.Series, d: pd.Series) -> pd.Series:
+        def toks(t):
+            return {w for w in re.split(r"[^a-z0-9]+", (t or "").lower()) if w}
+
+        out = []
+        for a, b in zip(q, d):
+            ta, tb = toks(a), toks(b)
+            u = ta | tb
+            out.append(len(ta & tb) / len(u) if u else 0.0)
+        return pd.Series(out, dtype=float)
+
+    return scorer
+
+
+# case-mapping edge cases: dotted capital I, Kelvin sign, sharp s, fi
+# ligature, fullwidth letters, Greek capital/final sigma
+_UNICODE_EDGES = ["İ", "\u212a", "ß", "ﬁ", "ＡＢＣ", "ΣΑΣ σς"]
+_SCORER_TEXT = st.one_of(
+    st.none(),
+    st.sampled_from(["", " ", "\t\n "] + _UNICODE_EDGES),
+    st.text(
+        alphabet=st.sampled_from(sorted(set("abkiKI09 _-.\t" + "".join(_UNICODE_EDGES)))),
+        max_size=24,
+    ),
+)
+
+
+@given(pairs=st.lists(st.tuples(_SCORER_TEXT, _SCORER_TEXT), min_size=1, max_size=8))
+@example(pairs=[(e, e.lower()) for e in _UNICODE_EDGES] + [(None, ""), ("", " "), ("\t\n ", None)])
+@example(pairs=[("Kelvin İstanbul", "\u212aelvin i\u0307stanbul"), ("ßﬁ", "ss fi")])
+@settings(**_SETTINGS)
+def test_lexical_overlap_scorer_matches_pandas_udf(spark, pairs):
+    """The Column-expression Jaccard stub reranks exactly like the pandas
+    UDF it replaced — same rows, bit-equal scores — and the rerank seam
+    still takes a pandas UDF."""
+    from knowledge_model_spark.operators.retrieval import (
+        lexical_overlap_scorer,
+        rerank_top_k,
+    )
+
+    df = spark.createDataFrame(
+        [(i % 3, q, i, d) for i, (q, d) in enumerate(pairs)],
+        "query_id int, query_text string, doc_id int, chunk_text string",
+    )
+
+    def ranked(scorer):
+        out = rerank_top_k(df, scorer, k=len(pairs), tiebreak="doc_id")
+        return {r["doc_id"]: tuple(r) for r in out.collect()}
+
+    assert ranked(lexical_overlap_scorer()) == ranked(_udf_jaccard_scorer())
 
 
 @given(parts=st.sampled_from([1, 3, 8, 17]))

@@ -5,8 +5,10 @@ these skip cleanly there, like the faiss branch in
 sources/faiss_export.py), the embed/rerank seams must run the genuine
 models the reference uses (all-MiniLM-L6-v2, ms-marco-MiniLM; reference
 build_faiss.py:69-85, re_rank.py:28-51) and recover planted relevance.
-The deterministic twins (hash_embed / stats_model_udf /
-lexical_overlap_scorer) remain the oracle-checked paths.
+The deterministic twins remain the oracle-checked paths: hash_embed and
+stats_model_udf for the embed seam, and lexical_overlap_scorer — a
+Column expression, where the real cross-encoder is a pandas UDF — for
+the rerank seam, which takes either kind of scorer.
 """
 
 from __future__ import annotations

@@ -141,3 +141,77 @@ def test_weighted_fuse_degenerate_equal_scores(spark):
            weighted_fuse(lex, vec, "id", "sa", "sb").collect()}
     # all-equal lex list normalizes to 1.0 (max==min guard), vec too
     assert out[1] == 1.0 and out[2] == 0.6
+
+
+# entry() on the sf0.001 fixture, captured before ask() existed:
+# (query_id, passage_id, score, re_score, rank, n_tok)
+ENTRY_GOLDEN = [
+    ('0', '0#0', 0.964486, 0.888889, 2, 23),
+    ('0', '399#1', 0.822613, 0.538462, 4, 43),
+    ('0', '41#0', 0.84919, 0.538462, 5, 45),
+    ('0', '50#0', 0.9759, 0.941176, 1, 22),
+    ('0', '82#0', 0.932505, 0.888889, 3, 24),
+    ('1', '1#0', 0.773137, 0.62963, 1, 56),
+    ('1', '20#0', 0.759727, 0.571429, 3, 57),
+    ('1', '375#0', 0.762821, 0.583333, 2, 35),
+    ('2', '2#0', 0.811045, 0.586207, 3, 57),
+    ('2', '371#0', 0.784155, 0.64, 1, 43),
+    ('2', '478#0', 0.758333, 0.555556, 4, 39),
+    ('2', '90#1', 0.795395, 0.64, 2, 33),
+    ('3', '394#1', 0.813958, 0.413793, 4, 51),
+    ('3', '452#0', 0.765954, 0.583333, 1, 37),
+    ('3', '462#0', 0.784778, 0.464286, 3, 51),
+    ('3', '470#0', 0.770837, 0.5, 2, 54),
+    ('4', '291#0', 0.809917, 0.607143, 4, 57),
+    ('4', '376#0', 0.833393, 0.615385, 3, 55),
+    ('4', '4#0', 0.930342, 0.809524, 1, 31),
+    ('4', '40#0', 0.826033, 0.631579, 2, 22),
+    ('5', '109#1', 0.844357, 0.62963, 4, 46),
+    ('5', '309#0', 0.841151, 0.703704, 3, 56),
+    ('5', '450#0', 0.896653, 0.791667, 1, 42),
+    ('5', '5#0', 0.891485, 0.76, 2, 43),
+    ('6', '217#0', 0.778887, 0.518519, 4, 54),
+    ('6', '277#1', 0.862443, 0.521739, 3, 24),
+    ('6', '348#0', 0.852418, 0.615385, 1, 51),
+    ('6', '42#0', 0.880985, 0.535714, 2, 59),
+    ('7', '293#0', 0.831068, 0.576923, 2, 54),
+    ('7', '48#0', 0.866025, 0.52, 3, 42),
+    ('7', '7#0', 0.824958, 0.625, 1, 44),
+    ('7', '95#0', 0.816614, 0.518519, 4, 47),
+]
+
+
+def test_entry_ask_golden_and_rerun_stable(spark):
+    """entry() — load → build_passage_index → ask() — returns the
+    captured rows, with its schema, and a same-session rerun is identical."""
+    import __spark_entry__
+
+    df = __spark_entry__.entry(spark)
+    assert df.columns == ["query_id", "passage_id", "score", "re_score", "rank", "n_tok"]
+    first = sorted(tuple(r) for r in df.collect())
+    assert first == ENTRY_GOLDEN
+    assert sorted(tuple(r) for r in __spark_entry__.entry(spark).collect()) == first
+
+
+def test_ask_pack_cut_on_rerank_tie_is_order_independent(spark):
+    """Two passages tie on both scores and the budget cut falls between
+    them: ask() keeps the one with the smaller passage id, whatever the
+    input row order."""
+    from knowledge_model_spark.functions.vectors import hash_embed
+    from knowledge_model_spark.operators.retrieval import ask, lexical_overlap_scorer
+
+    query = spark.createDataFrame([("q", "alpha beta gamma")], "query_id string, query_text string")
+    rows = [(1, "alpha beta gamma"), (2, "alpha beta gamma delta"), (3, "alpha beta gamma delta")]
+
+    def kept(order):
+        index = spark.createDataFrame(
+            [(rows[i][0], 0, rows[i][1]) for i in order],
+            "doc_id long, chunk_index int, chunk_text string",
+        ).withColumn("vector", hash_embed(F.col("chunk_text"), 64))
+        out = ask(index, query, k=3, rerank_k=3, budget=3 + 4,
+                  scorer=lexical_overlap_scorer()).collect()
+        return sorted((r["passage_id"], r["re_score"], r["rank"], r["n_tok"]) for r in out)
+
+    want = [("1#0", 1.0, 1, 3), ("2#0", 0.75, 2, 4)]
+    assert kept([0, 1, 2]) == want
+    assert kept([0, 2, 1]) == want
