@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from knowledge_model_spark.functions.text_analysis import bind1
+
 
 def double_array_lit(xs) -> Column:
     """array<double> literal via ONE sql-parse round trip.
@@ -48,24 +50,24 @@ def l2_normalize(a: Column) -> Column:
     """L2-normalize (encode(normalize_embeddings=True) equivalent,
     reference: build_faiss.py:79-85).
 
-    Shaped as ONE aggregate whose ``finish`` lambda does the division:
-    the sum-of-squares is bound to a lambda VARIABLE there, so it is
-    computed once per vector.  The naive ``transform(a, x -> x / n)``
-    embeds the full norm fold inside the element lambda and Catalyst
-    re-evaluates it per element — a dim² blow-up (64× here) on every
-    normalize in every scoring pipeline.  Arithmetic is unchanged:
-    same x / sqrt(Σx²) divisions, same fold order, bit-identical
-    output (verified value-for-value against the old form over the
-    full embeddings table).
+    ``a`` is bound once (:func:`bind1`) and folded by ONE aggregate
+    whose ``finish`` lambda does the division: the vector and its
+    sum-of-squares are lambda VARIABLES
+    there, so each is computed once per vector.  Referencing ``a``
+    itself inside the lambdas would re-evaluate the whole upstream
+    expression (for :func:`hash_embed`, its token fold) per reference,
+    and the naive ``transform(a, x -> x / n)`` re-evaluates the norm
+    fold per element — a dim² blow-up.  Arithmetic is unchanged: same
+    x / sqrt(Σx²) divisions, same fold order, bit-identical output.
     """
-    return F.aggregate(
-        a,
+    return bind1(a, lambda v: F.aggregate(
+        v,
         F.lit(0.0),
         lambda acc, x: acc + x * x,
-        lambda ssq: F.when(F.sqrt(ssq) == 0, a.cast("array<double>")).otherwise(
-            F.transform(a, lambda x: x / F.sqrt(ssq))
+        lambda ssq: F.when(F.sqrt(ssq) == 0, v.cast("array<double>")).otherwise(
+            F.transform(v, lambda x: x / F.sqrt(ssq))
         ),
-    )
+    ))
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
@@ -81,13 +83,15 @@ def hash_embed(col: Column, dim: int = 64) -> Column:
     Model-free stand-in for the SentenceTransformer stage (reference:
     build_faiss.py:69-85) so pipelines are testable without model
     downloads: token t contributes ±1 to bucket xxhash64(t) % dim, then
-    L2-normalize.  Pure SQL: split → explode-free aggregate over the
-    token array.
+    L2-normalize.  Pure SQL: the text is tokenized once, one
+    ``transform`` maps each token to its (bucket, sign), and an
+    explode-free aggregate folds those into the vector.
     """
     tokens = F.filter(F.split(F.lower(col), r"[^a-z0-9]+"), lambda w: F.length(w) > 0)
-    buckets = F.transform(tokens, lambda t: F.abs(F.xxhash64(t)) % dim)
-    signs = F.transform(tokens, lambda t: F.when(F.xxhash64(t, F.lit(1)) % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0)))
-    pairs = F.zip_with(buckets, signs, lambda b, s: F.struct(b.alias("b"), s.alias("s")))
+    pairs = F.transform(tokens, lambda t: F.struct(
+        (F.abs(F.xxhash64(t)) % dim).alias("b"),
+        F.when(F.xxhash64(t, F.lit(1)) % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0)).alias("s"),
+    ))
     vec = F.aggregate(
         pairs,
         F.array_repeat(F.lit(0.0), dim),

@@ -295,6 +295,14 @@ def _minhash_banded(
     df: DataFrame, id_col: str, text_col: str, k: int, n_hashes: int, bands: int,
     persist: bool = False,
 ) -> DataFrame:
+    return _sketch_columns(_minhash_raw(df, id_col, text_col, k, n_hashes, bands, persist))
+
+
+def _minhash_raw(
+    df: DataFrame, id_col: str, text_col: str, k: int, n_hashes: int, bands: int,
+    persist: bool,
+) -> DataFrame:
+    """(id, mh) sketch-UDF output, cached when ``persist`` (caller unpersists)."""
     from knowledge_model_spark.session import ensure_min_partitions
 
     mh = _minhash_udf(n_hashes, bands, k)
@@ -315,6 +323,11 @@ def _minhash_banded(
 
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
         raw.count()
+    return raw
+
+
+def _sketch_columns(raw: DataFrame) -> DataFrame:
+    """(id, sig, bkt) of the non-empty sketches in :func:`_minhash_raw` output."""
     return (
         raw.filter(F.col("mh.sig").isNotNull())
         .select("id", F.col("mh.sig").alias("sig"), F.col("mh.bkt").alias("bkt"))
@@ -707,9 +720,8 @@ def minhash_incremental_pairs(
     from the month gap scan, pipelines.py).
     """
     spark = new_df.sparkSession
-    new_sk = _minhash_banded(
-        new_df, id_col, text_col, k, n_hashes, bands, persist=True
-    ).withColumn("is_new", F.lit(True))
+    raw_new = _minhash_raw(new_df, id_col, text_col, k, n_hashes, bands, persist=True)
+    new_sk = _sketch_columns(raw_new).withColumn("is_new", F.lit(True))
     try:
         old_sk = spark.read.parquet(sketch_store).withColumn("is_new", F.lit(False))
         all_sk = new_sk.unionByName(old_sk)
@@ -758,11 +770,13 @@ def minhash_incremental_pairs(
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
+    # materialize pairs BEFORE the append so the plan can't observe its
+    # own write; then extend the store with this batch's sketches and
+    # free the batch's cached sketches, which nothing reads any more
+    pairs = pairs.localCheckpoint(eager=True)
     if update_store:
-        # materialize pairs BEFORE the append so the plan can't observe
-        # its own write; then extend the store with this batch's sketches
-        pairs = pairs.localCheckpoint(eager=True)
         new_sk.select("id", "sig", "bkt").write.mode("append").parquet(sketch_store)
+    raw_new.unpersist()
     return pairs
 
 

@@ -12,11 +12,17 @@ flows/continuous.py:34-36) as batch DataFrame jobs:
 from __future__ import annotations
 
 import math
+import threading
+from decimal import ROUND_HALF_UP, Context, Decimal
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from knowledge_model_spark.functions.chunking import explode_passages
 from knowledge_model_spark.functions.text_analysis import token_count
@@ -24,11 +30,13 @@ from knowledge_model_spark.functions.text_cleaning import clean_text
 from knowledge_model_spark.functions.vectors import hash_embed
 from knowledge_model_spark.operators.relational import greedy_budget_pack
 from knowledge_model_spark.operators.similarity import brute_force_top_k
+from knowledge_model_spark.session import plan_size_bytes
 
 DEFAULT_TOP_K = 12  # reference: vector_store.py:19
 MIN_SCORE = 0.75  # reference: vector_store.py:134
 FALLBACK_MIN_SCORE = 0.55  # reference: main.py:380
 CONTEXT_TOKEN_BUDGET = 800  # reference: main.py:355
+RESIDENT_MAX_BYTES = 64 * 1024 * 1024  # plan-stat bytes; larger indexes: retrieve() runs Spark
 
 Scorer = Callable[[Column, Column], Column]
 
@@ -162,17 +170,30 @@ def retrieve(
     fallback_min_score: float = FALLBACK_MIN_SCORE,
     dim: int = 64,
 ) -> DataFrame:
-    """Top-k passages per query with the two-phase threshold cascade.
+    """Top-k passages per query with the two-phase threshold cascade:
+    (query_id, __pid, score, rank).
 
     Phase 1 keeps hits with score >= min_score; queries with no phase-1
     hit fall back to score >= fallback_min_score (reference:
     main.py:374-381).  Expressed as one scored join + per-query max-score
     bookkeeping — no second retrieval pass needed because the exact scored
     join already materializes all candidates above the weaker threshold.
+
+    An index of at most ``RESIDENT_MAX_BYTES`` plan-stat bytes, with a
+    deterministic plan and finite vectors of one length, is scored on the
+    driver (the reference's in-memory ``IndexFlatIP``) with the same rows:
+    its (__pid, vector) snapshot loads once, keyed on the analyzed plan
+    plus the input files (an appended Parquet index is a new snapshot;
+    two are kept; answers are never cached).  That path is EAGER: the
+    query-embedding job runs at call time and a local relation comes
+    back.  Any other index runs the lazy Spark plan.
     """
     qv = queries.select(
         F.col(query_id), hash_embed(F.col(query_text), dim).alias("qvec")
     )
+    snapshot = _resident_snapshot(index)
+    if snapshot is not None and snapshot[1].shape[0] == dim:
+        return _resident_retrieve(qv, snapshot, k, min_score, fallback_min_score)
     hits = brute_force_top_k(
         index.withColumn("__pid", passage_id(F.col("doc_id"), F.col("chunk_index"))),
         qv,
@@ -185,6 +206,95 @@ def retrieve(
         normalized=True,
     )
     return threshold_cascade(hits, min_score, query_id)
+
+
+# LRU (oldest first) of (semantic hash, input files, analyzed plan,
+# (pids, (dim, n) float64 matrix) or None for an ineligible index).
+_SNAPSHOTS: list = []
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def _resident_snapshot(index: DataFrame):
+    """The cached ``(pids, matrix)`` snapshot of ``index``, loading it on
+    first use; None when the index is over the gate or ineligible."""
+    plan = index._jdf.queryExecution().analyzed()
+    if not 0 < plan_size_bytes(index) <= RESIDENT_MAX_BYTES or not plan.deterministic():
+        return None
+    key = (plan.semanticHash(), sorted(index.inputFiles()))
+    with _SNAPSHOTS_LOCK:
+        for i, (h, files, cached, snap) in enumerate(_SNAPSHOTS):
+            if (h, files) == key and cached.sameResult(plan):
+                _SNAPSHOTS.append(_SNAPSHOTS.pop(i))
+                return snap
+        pdf = index.select(
+            passage_id(F.col("doc_id"), F.col("chunk_index")).alias("__pid"), "vector"
+        ).toPandas()
+        try:  # None or ragged vectors cannot stack
+            m = np.array(pdf["vector"].tolist(), dtype=np.float64)
+        except (TypeError, ValueError):
+            m = np.empty(0)
+        ok = m.ndim == 2 and len(m) and np.isfinite(m).all()
+        snap = (pdf["__pid"].tolist(), np.ascontiguousarray(m.T)) if ok else None
+        _SNAPSHOTS[:] = _SNAPSHOTS[-1:] + [(*key, plan, snap)]
+        return snap
+
+
+def _resident_retrieve(
+    qv: DataFrame, snapshot, k: int, min_score: float, fallback_min_score: float
+) -> DataFrame:
+    """:func:`retrieve`'s Spark-path rows for ``qv`` (query_id, qvec) from
+    a snapshot: the left fold over dims of ``vectors.dot``, Spark's
+    rounding, one ranking per query_id by (score desc, __pid), and the
+    :func:`threshold_cascade` rule, on the driver so hits need no shuffle."""
+    pids, m = snapshot
+    rows = [r for r in qv.collect() if r[1] is not None]
+    jvm = qv.sparkSession._jvm
+    groups: dict = {}
+    block = max(1, (1 << 20) // m.shape[1])  # queries scored per pass
+    for lo in range(0, len(rows), block):
+        qs = rows[lo:lo + block]
+        q = np.array([r[1] for r in qs], dtype=np.float64)
+        acc = np.zeros((len(qs), m.shape[1]))
+        for d in range(m.shape[0]):
+            acc += q[:, d:d + 1] * m[d]
+        for qi, ci in zip(*np.nonzero(acc >= fallback_min_score - 1e-6)):
+            score = spark_round6(float(acc[qi, ci]), jvm)
+            if score >= fallback_min_score:
+                groups.setdefault(qs[qi][0], []).append((score, pids[ci]))
+    out = []
+    for qid, cands in groups.items():
+        top = sorted(cands, key=lambda c: (-c[0], c[1]))[:max(k, 0)]
+        floor = min_score if top and top[0][0] >= min_score else -math.inf
+        out += [
+            {qv.columns[0]: qid, "__pid": pid, "score": score, "rank": rank}
+            for rank, (score, pid) in enumerate(top, 1)
+            if score >= floor
+        ]
+    schema = StructType([qv.schema[0]]).add("__pid", "string", False).add(
+        "score", "double").add("rank", "integer", False)
+    return qv.sparkSession.createDataFrame(
+        pa.Table.from_pylist(out, schema=to_arrow_schema(schema)), schema
+    )
+
+
+_MICRO = Decimal("1e-6")
+_WIDE = Context(prec=400)  # every finite double quantizes to 6 dp exactly
+
+
+def spark_round6(x: float, jvm) -> float:
+    """Spark's ``round(x, 6)`` of a double: the digits of java's
+    ``BigDecimal.valueOf(x)``, HALF_UP.  Those digits parse back to x, and
+    rounding is monotone, so when x ± 4 ulp round alike they do too; only
+    a value that close to a …5e-7 tie asks the JVM for them (JDK 17's
+    ``Double.toString`` is not always the shortest repr)."""
+    if not math.isfinite(x):
+        return x
+    lo, hi = (
+        Decimal(x + s * math.ulp(x)).quantize(_MICRO, ROUND_HALF_UP, _WIDE) for s in (-4, 4)
+    )
+    if lo == hi:
+        return float(lo)
+    return float(jvm.java.math.BigDecimal.valueOf(x).quantize(_MICRO, ROUND_HALF_UP, _WIDE))
 
 
 def pack_context(
@@ -273,6 +383,9 @@ def ask(
     order (unique per query, so a budget cut on a score tie is
     deterministic).  Returns (query_id, passage_id, score, re_score, rank,
     n_tok).
+
+    Under :func:`retrieve`'s size gate the top-k comes from the resident
+    snapshot, so ``ask`` runs the query-embedding job when it is called.
     """
     hits = retrieve(index, queries, k=k)
     passages = index.select(

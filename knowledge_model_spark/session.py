@@ -108,6 +108,16 @@ def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame
     return df
 
 
+def plan_size_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (optimized-plan stats), or 0
+    when the stats are unavailable."""
+    try:
+        # py4j auto-converts the scala BigInt to a Python int
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return 0
+
+
 def spread_vectors(df: DataFrame, per_partition_bytes: int = 256 * 1024) -> DataFrame:
     """:func:`ensure_min_partitions` with a bytes-derived target for
     vector tables feeding cheap per-row kernels (µs/row JVM HOF dots,
@@ -125,13 +135,8 @@ def spread_vectors(df: DataFrame, per_partition_bytes: int = 256 * 1024) -> Data
     boundaries and bit-identical float partials — is produced at any
     local core count the driver benches with.
     """
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    try:
-        # py4j auto-converts the scala BigInt to a Python int
-        nbytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # stats unavailable — fall back to full spread
-        nbytes = 0
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    nbytes = plan_size_bytes(df)
     if nbytes <= 0:
         return ensure_min_partitions(df)
     target = max(min(4, cores), min(cores, -(-nbytes // per_partition_bytes)))

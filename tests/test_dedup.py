@@ -296,6 +296,26 @@ def test_minhash_incremental_batches(spark, tmp_path):
     assert p2 == {p for p in union_pairs if not (p[0] <= 4 and p[1] <= 4)}
 
 
+def test_minhash_incremental_pairs_frees_its_sketch_cache(spark, tmp_path):
+    """A tick unpersists the batch sketches it cached, so repeated ticks do
+    not grow executor storage: after two ticks, no RDD they persisted is
+    still persistent.  Compared by id, not count, and local checkpoints
+    are left out: those hold the returned pairs and stay registered until
+    the JVM collects them, as RDDs of earlier tests may be meanwhile."""
+    from knowledge_model_spark.operators.dedup import minhash_incremental_pairs
+
+    def persistent():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {i for i in rdds if not rdds[i].rdd().isLocallyCheckpointed()}
+
+    store = str(tmp_path / "sketches")
+    before = persistent()
+    for ids in ((0, 1), (2, 3)):
+        batch = spark.createDataFrame([(i, BASE) for i in ids], ["doc_id", "text"])
+        assert minhash_incremental_pairs(batch, "doc_id", "text", store).count() >= 1
+    assert persistent() - before == set()
+
+
 # ------------------------------------------------------ semantic dedup
 
 

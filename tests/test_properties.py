@@ -990,3 +990,54 @@ def test_triage_never_raises_on_garbage(data):
             and r["page"] == i + 1
             for i, r in enumerate(rows)
         )
+
+
+def _hash_embed_before(col, dim):
+    """hash_embed as it was before it tokenized once and bound its vector
+    in l2_normalize: two token transforms zipped, and a normalize that
+    references the folded vector three times."""
+    tokens = F.filter(F.split(F.lower(col), r"[^a-z0-9]+"), lambda w: F.length(w) > 0)
+    buckets = F.transform(tokens, lambda t: F.abs(F.xxhash64(t)) % dim)
+    signs = F.transform(tokens, lambda t: F.when(F.xxhash64(t, F.lit(1)) % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0)))
+    pairs = F.zip_with(buckets, signs, lambda b, s: F.struct(b.alias("b"), s.alias("s")))
+    vec = F.aggregate(
+        pairs,
+        F.array_repeat(F.lit(0.0), dim),
+        lambda acc, p: F.transform(
+            acc, lambda v, i: F.when(i.cast("long") == p["b"], v + p["s"]).otherwise(v)
+        ),
+    )
+    return F.aggregate(
+        vec,
+        F.lit(0.0),
+        lambda acc, x: acc + x * x,
+        lambda ssq: F.when(F.sqrt(ssq) == 0, vec.cast("array<double>")).otherwise(
+            F.transform(vec, lambda x: x / F.sqrt(ssq))
+        ),
+    )
+
+
+_EMBED_TEXT = st.one_of(
+    _SCORER_TEXT,
+    st.lists(st.sampled_from(["alpha", "Beta", "gamma42", "x", "a-b", "  ", "0"]), max_size=30)
+    .map(" ".join),
+)
+
+
+@given(texts=st.lists(_EMBED_TEXT, min_size=1, max_size=10), dim=st.sampled_from([1, 8, 64]))
+@settings(max_examples=10, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+def test_hash_embed_matches_previous_expression(spark, tables, texts, dim):
+    """hash_embed (one tokenizer pass, vector bound once) returns exactly
+    the vectors of the expression it replaced, on the fixture documents
+    and on generated text with None, empty and whitespace rows."""
+    from knowledge_model_spark.functions.vectors import hash_embed
+
+    docs = tables["documents"].select("text").union(
+        spark.createDataFrame([(t,) for t in texts], "text string")
+    )
+    got = docs.select(
+        hash_embed(F.col("text"), dim).alias("new"), _hash_embed_before(F.col("text"), dim).alias("old")
+    ).collect()
+    assert len(got) > len(texts)
+    assert all(r["new"] == r["old"] for r in got)

@@ -1,10 +1,19 @@
-"""Embed-seam tests: pluggable model UDF (reference: build_faiss.py:69-85).
+"""Retrieval tests: the embed seam (reference: build_faiss.py:69-85),
+fusion and MMR, ask(), and retrieve's driver-resident path against its
+Spark plan.
 """
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+
+from knowledge_model_spark.operators import retrieval
+
 
 def test_embed_seam_injected_model_and_default(spark):
     """embed() routes text through an injected pandas-UDF model verbatim
@@ -215,3 +224,226 @@ def test_ask_pack_cut_on_rerank_tie_is_order_independent(spark):
     want = [("1#0", 1.0, 1, 3), ("2#0", 0.75, 2, 4)]
     assert kept([0, 1, 2]) == want
     assert kept([0, 2, 1]) == want
+
+
+# ------------------------------------------------ resident retrieve path
+
+_RESIDENT_SETTINGS = dict(
+    max_examples=6,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _spark_path(fn):
+    """Run ``fn`` with the size gate at 0 bytes, so retrieve takes the
+    Spark plan for every index."""
+    with mock.patch.object(retrieval, "RESIDENT_MAX_BYTES", 0):
+        return fn()
+
+
+@pytest.fixture(scope="module")
+def tie_index(tables):
+    """The sf0.001 passage index plus a copy of its first ten documents'
+    passages under doc_id + 100000: every copied vector scores exactly
+    like its original, so queries on them tie and __pid breaks the tie."""
+    index = retrieval.build_passage_index(tables["documents"])
+    copies = index.filter(F.col("doc_id") < 10).withColumn("doc_id", F.col("doc_id") + 100000)
+    texts = [r["chunk_text"] for r in index.filter(F.col("doc_id") < 10).collect()]
+    return index.unionByName(copies), texts
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c", None]),
+            st.one_of(
+                st.none(),
+                st.sampled_from(["", " ", "\t\n"]),
+                st.tuples(st.integers(0, 10_000), st.integers(0, 299), st.integers(1, 200)),
+            ),
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+    k=st.integers(1, 12),
+)
+@example(rows=[("a", (0, 0, 300)), ("b", (3, 0, 300))], k=1)
+@example(rows=[("a", (0, 0, 300)), ("a", (1, 0, 300)), (None, (2, 0, 300)), (None, None)], k=3)
+@settings(**_RESIDENT_SETTINGS)
+def test_resident_retrieve_equals_spark_path(spark, tie_index, rows, k):
+    """retrieve answers from the driver-resident snapshot with exactly the
+    Spark plan's rows and schema: random spans, duplicate and null
+    query ids, None, empty and whitespace text, and exact score ties at
+    the k-th rank (ties break by __pid)."""
+    index, texts = tie_index
+
+    def text(spec):
+        if not isinstance(spec, tuple):
+            return spec
+        t = texts[spec[0] % len(texts)]
+        return t[spec[1] % len(t):][: spec[2]]
+
+    queries = spark.createDataFrame(
+        [(qid, text(spec)) for qid, spec in rows], "query_id string, query_text string"
+    )
+    resident = retrieval.retrieve(index, queries, k=k)
+    spark_hits = _spark_path(lambda: retrieval.retrieve(index, queries, k=k))
+    assert "BroadcastNestedLoopJoin" not in _plan(resident)
+    assert "BroadcastNestedLoopJoin" in _plan(spark_hits)
+    assert resident.schema == spark_hits.schema
+
+    def key(r):
+        return (str(r["query_id"]), r["rank"], r["__pid"], r["score"])
+
+    assert sorted(resident.collect(), key=key) == sorted(spark_hits.collect(), key=key)
+
+
+def test_resident_snapshot_follows_parquet_appends(spark, tables, tmp_path):
+    """Appending a file to a Parquet index and reading it again is a new
+    snapshot that includes the new passages; the old read keeps its own
+    file listing and answers as before."""
+    path = str(tmp_path / "index")
+    index = retrieval.build_passage_index(tables["documents"].filter(F.col("doc_id") < 40))
+    index.filter(F.col("doc_id") < 20).write.parquet(path)
+    target = index.filter(F.col("doc_id") == 30).first()
+    queries = spark.createDataFrame([("q", target["chunk_text"])], "query_id string, query_text string")
+    want = f"30#{target['chunk_index']}"
+
+    before = spark.read.parquet(path)
+    assert want not in {r["__pid"] for r in retrieval.retrieve(before, queries).collect()}
+    index.filter(F.col("doc_id") >= 20).write.mode("append").parquet(path)
+    after = spark.read.parquet(path)
+    hits = retrieval.retrieve(after, queries)
+    assert "BroadcastNestedLoopJoin" not in _plan(hits)
+    assert (want, 1) in {(r["__pid"], r["rank"]) for r in hits.collect()}
+    assert want not in {r["__pid"] for r in retrieval.retrieve(before, queries).collect()}
+    assert len(retrieval._SNAPSHOTS) <= 2
+
+
+def test_retrieve_runs_spark_plan_above_gate_and_for_ineligible_index(spark):
+    """Over the size gate, and for an index with a null or short vector or
+    a nondeterministic plan, retrieve runs the Spark plan; an ineligible
+    snapshot is remembered instead of being loaded again."""
+    import pandas as pd
+
+    from knowledge_model_spark.functions.vectors import hash_embed
+
+    texts = ["alpha beta gamma", "alpha beta", "delta epsilon", "alpha gamma"]
+    queries = spark.createDataFrame([("q", "alpha beta gamma")], "query_id string, query_text string")
+    vectors = [
+        r[0] for r in spark.createDataFrame(pd.DataFrame({"t": texts}))
+        .select(hash_embed(F.col("t"), 64)).collect()
+    ]
+
+    def local_index(vecs):  # a LocalRelation, whose size Catalyst knows
+        return spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(len(vecs)), "chunk_index": 0, "vector": vecs}),
+            "doc_id long, chunk_index int, vector array<double>",
+        )
+
+    good = local_index(vectors)
+    want = sorted(tuple(r) for r in retrieval.retrieve(good, queries).collect())
+    assert want and "BroadcastNestedLoopJoin" not in _plan(retrieval.retrieve(good, queries))
+
+    over = _spark_path(lambda: retrieval.retrieve(good, queries))
+    assert "BroadcastNestedLoopJoin" in _plan(over)
+    assert sorted(tuple(r) for r in over.collect()) == want
+
+    # short, null, NaN-holding (Spark ranks NaN first) and null-holding vectors
+    for bad in ([0.5] * 8, None, [float("nan")] * 64, [None] + [0.125] * 63):
+        index = local_index(vectors + [bad])
+        hits = retrieval.retrieve(index, queries)
+        assert "BroadcastNestedLoopJoin" in _plan(hits)
+        assert sorted(repr(tuple(r)) for r in hits.collect()) == sorted(
+            repr(tuple(r)) for r in _spark_path(lambda: retrieval.retrieve(index, queries)).collect()
+        )
+        assert retrieval._SNAPSHOTS[-1][-1] is None
+        with mock.patch.object(type(index), "toPandas", side_effect=AssertionError("reloaded")):
+            assert "BroadcastNestedLoopJoin" in _plan(retrieval.retrieve(index, queries))
+
+    nondeterministic = good.withColumn("noise", F.rand())
+    assert "BroadcastNestedLoopJoin" in _plan(retrieval.retrieve(nondeterministic, queries))
+
+
+def test_spark_round6_matches_spark_round(spark):
+    """The driver-side rounding equals F.round(x, 6) on random doubles in
+    [0.5, 1), on the doubles nearest to (and next to) sampled
+    k·1e-6 + 5e-7 ties, and around the 0.55 and 0.75 thresholds."""
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(20261017)
+    xs = list(rng.uniform(0.5, 1.0, 20_000))
+    ties = [k * 1e-6 + 5e-7 for k in rng.integers(500_000, 1_000_000, 400)]
+    ties += [0.5499995, 0.55, 0.7499995, 0.75, 0.5500005, 0.7500005]
+    for t in ties:
+        lo = hi = t
+        for _ in range(3):
+            lo, hi = math.nextafter(lo, 0.0), math.nextafter(hi, 2.0)
+            xs += [lo, hi]
+        xs.append(t)
+    want = [
+        r[0] for r in spark.createDataFrame(pd.DataFrame({"x": xs}))
+        .select(F.round("x", 6)).collect()
+    ]
+    jvm = spark._jvm
+    assert [retrieval.spark_round6(x, jvm) for x in xs] == want
+
+
+def test_resident_snapshots_under_concurrent_callers(spark):
+    """Threads that retrieve from three indexes at once, with frequent
+    thread switches, all get the single-threaded answers, and at most two
+    snapshots stay resident."""
+    import sys
+    import threading
+
+    import pandas as pd
+
+    from knowledge_model_spark.functions.vectors import hash_embed
+
+    texts = ["alpha beta gamma", "alpha beta", "alpha gamma delta", "beta gamma", "alpha"]
+    vecs = [
+        r[0] for r in spark.createDataFrame(pd.DataFrame({"t": texts}))
+        .select(hash_embed(F.col("t"), 64)).collect()
+    ]
+    indexes = [
+        spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(10 * n, 11 * n), "chunk_index": 0, "vector": vecs[:n]}),
+            "doc_id long, chunk_index int, vector array<double>",
+        )
+        for n in (3, 4, 5)
+    ]
+    queries = spark.createDataFrame(pd.DataFrame({"query_id": ["q"], "query_text": ["alpha beta"]}))
+    want = [sorted(tuple(r) for r in retrieval.retrieve(ix, queries).collect()) for ix in indexes]
+    assert len({tuple(w) for w in want}) == 3
+    got, errors = [], []
+
+    def client(c):
+        try:
+            for i in range(4):
+                ix = (c + i) % 3
+                got.append((ix, sorted(tuple(r) for r in retrieval.retrieve(indexes[ix], queries).collect())))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=client, args=(c,)) for c in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert len(got) == 24 and all(rows == want[ix] for ix, rows in got)
+    assert len(retrieval._SNAPSHOTS) <= 2
