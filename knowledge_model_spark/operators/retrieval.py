@@ -36,7 +36,10 @@ DEFAULT_TOP_K = 12  # reference: vector_store.py:19
 MIN_SCORE = 0.75  # reference: vector_store.py:134
 FALLBACK_MIN_SCORE = 0.55  # reference: main.py:380
 CONTEXT_TOKEN_BUDGET = 800  # reference: main.py:355
-RESIDENT_MAX_BYTES = 64 * 1024 * 1024  # plan-stat bytes; larger indexes: retrieve() runs Spark
+# retrieve() scores an index on the driver when its plan estimate and its
+# (n, dim) float64 matrix both fit.  On a 4-vCPU host a fresh snapshot up to
+# 16 MiB repaid its load on its first call; larger ones took more calls.
+RESIDENT_MAX_BYTES = 16 * 1024 * 1024
 
 Scorer = Callable[[Column, Column], Column]
 
@@ -179,14 +182,15 @@ def retrieve(
     bookkeeping — no second retrieval pass needed because the exact scored
     join already materializes all candidates above the weaker threshold.
 
-    An index of at most ``RESIDENT_MAX_BYTES`` plan-stat bytes, with a
-    deterministic plan and finite vectors of one length, is scored on the
-    driver (the reference's in-memory ``IndexFlatIP``) with the same rows:
-    its (__pid, vector) snapshot loads once, keyed on the analyzed plan
-    plus the input files (an appended Parquet index is a new snapshot;
-    two are kept; answers are never cached).  That path is EAGER: the
-    query-embedding job runs at call time and a local relation comes
-    back.  Any other index runs the lazy Spark plan.
+    An index whose plan estimate and loaded float64 matrix are both at
+    most ``RESIDENT_MAX_BYTES``, with a deterministic plan and finite
+    vectors of one length, is scored on the driver (the reference's
+    in-memory ``IndexFlatIP``) with the same rows: its (__pid, vector)
+    snapshot loads once, keyed on the analyzed plan plus the input files
+    (an appended Parquet index is a new snapshot; two are kept; an
+    ineligible or failed load is remembered; answers are never cached).
+    That path is EAGER: the query-embedding job runs at call time and a
+    local relation comes back.  Any other index runs the lazy Spark plan.
     """
     qv = queries.select(
         F.col(query_id), hash_embed(F.col(query_text), dim).alias("qvec")
@@ -226,14 +230,16 @@ def _resident_snapshot(index: DataFrame):
             if (h, files) == key and cached.sameResult(plan):
                 _SNAPSHOTS.append(_SNAPSHOTS.pop(i))
                 return snap
-        pdf = index.select(
-            passage_id(F.col("doc_id"), F.col("chunk_index")).alias("__pid"), "vector"
-        ).toPandas()
-        try:  # None or ragged vectors cannot stack
+        try:  # a failed load (e.g. over maxResultSize) or None / ragged vectors
+            pdf = index.select(
+                passage_id(F.col("doc_id"), F.col("chunk_index")).alias("__pid"), "vector"
+            ).toPandas()
             m = np.array(pdf["vector"].tolist(), dtype=np.float64)
-        except (TypeError, ValueError):
+        except Exception:
             m = np.empty(0)
-        ok = m.ndim == 2 and len(m) and np.isfinite(m).all()
+        # the plan estimate need not bound the matrix (Generate keeps its
+        # child's size), so the gate is checked again on the loaded bytes
+        ok = m.ndim == 2 and len(m) and m.nbytes <= RESIDENT_MAX_BYTES and np.isfinite(m).all()
         snap = (pdf["__pid"].tolist(), np.ascontiguousarray(m.T)) if ok else None
         _SNAPSHOTS[:] = _SNAPSHOTS[-1:] + [(*key, plan, snap)]
         return snap

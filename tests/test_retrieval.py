@@ -371,6 +371,39 @@ def test_retrieve_runs_spark_plan_above_gate_and_for_ineligible_index(spark):
     assert "BroadcastNestedLoopJoin" in _plan(retrieval.retrieve(nondeterministic, queries))
 
 
+def test_gate_bounds_the_loaded_matrix_not_just_the_plan_estimate(spark, tables):
+    """A lazily built index's plan estimate follows its documents, not
+    passages × dim: when the estimate passes the gate but the loaded
+    matrix does not, or the load fails, retrieve runs the Spark plan and
+    keeps no matrix."""
+    from knowledge_model_spark.session import plan_size_bytes
+
+    dim = 512
+    index = retrieval.build_passage_index(tables["documents"].filter(F.col("doc_id") < 30), dim=dim)
+    queries = spark.createDataFrame(
+        [("q", index.first()["chunk_text"])], "query_id string, query_text string"
+    )
+    resident = retrieval.retrieve(index, queries, dim=dim)  # under the real gate
+    want = sorted(tuple(r) for r in resident.collect())
+    assert want and "BroadcastNestedLoopJoin" not in _plan(resident)
+
+    big = index.filter(F.col("doc_id") < 1000)  # same rows, a new snapshot key
+    estimate, matrix_bytes = plan_size_bytes(big), big.count() * dim * 8
+    assert 0 < estimate < matrix_bytes
+    with mock.patch.object(retrieval, "RESIDENT_MAX_BYTES", estimate):
+        hits = retrieval.retrieve(big, queries, dim=dim)
+        assert "BroadcastNestedLoopJoin" in _plan(hits)
+        assert sorted(tuple(r) for r in hits.collect()) == want
+        assert retrieval._SNAPSHOTS[-1][-1] is None
+
+    failing = index.filter(F.col("doc_id") >= 0)
+    with mock.patch.object(type(failing), "toPandas", side_effect=RuntimeError("load failed")):
+        hits = retrieval.retrieve(failing, queries, dim=dim)
+    assert "BroadcastNestedLoopJoin" in _plan(hits)
+    assert sorted(tuple(r) for r in hits.collect()) == want
+    assert retrieval._SNAPSHOTS[-1][-1] is None
+
+
 def test_spark_round6_matches_spark_round(spark):
     """The driver-side rounding equals F.round(x, 6) on random doubles in
     [0.5, 1), on the doubles nearest to (and next to) sampled
