@@ -286,16 +286,8 @@ def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, k: int = 5, n_hashes: int = N_HASHES
 ) -> DataFrame:
     """(id, sig: array<bigint>) MinHash signatures over word k-shingles."""
-    return _minhash_banded(df, id_col, text_col, k, n_hashes, bands=n_hashes // 4).select(
-        "id", "sig"
-    )
-
-
-def _minhash_banded(
-    df: DataFrame, id_col: str, text_col: str, k: int, n_hashes: int, bands: int,
-    persist: bool = False,
-) -> DataFrame:
-    return _sketch_columns(_minhash_raw(df, id_col, text_col, k, n_hashes, bands, persist))
+    raw = _minhash_raw(df, id_col, text_col, k, n_hashes, n_hashes // 4, persist=False)
+    return _sketch_columns(raw).select("id", "sig")
 
 
 def _minhash_raw(
@@ -358,6 +350,55 @@ def _bucket_pairs(buckets: DataFrame, arr: str) -> DataFrame:
     )
 
 
+def _lsh_candidates(sk: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """(id_a, id_b, sig_a, sig_b) for the distinct pairs of sketches
+    ``sk`` = (id, sig, bkt, is_new) that share a (band, bucket) and have
+    at least one new side: the candidate kernel of the MinHash family.
+
+    One shuffle groups the banded rows by (band, bucket); a bucket with no
+    new member, or over ``max_bucket_size`` members, is dropped before the
+    pair expansion.  Members are distinct and sorted by id, so each pair
+    comes out as id_a < id_b, once after the distinct, and an id given
+    twice never pairs with itself.
+    """
+    banded = sk.select("id", "is_new", F.posexplode("bkt").alias("band", "bucket"))
+    buckets = (
+        banded.groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_set(F.struct("id", "is_new"))).alias("ms"))
+        .filter(F.size("ms") > 1)
+        .filter(F.exists("ms", lambda m: m["is_new"]))
+    )
+    if max_bucket_size is not None:
+        buckets = buckets.filter(F.size("ms") <= max_bucket_size)
+    a, b = F.col("a"), F.col("b")
+    cands = (
+        _bucket_pairs(buckets, "ms")
+        .filter((a["is_new"] | b["is_new"]) & (a["id"] != b["id"]))
+        .select(a["id"].alias("id_a"), b["id"].alias("id_b"))
+        .distinct()
+    )
+    sig = sk.select("id", "sig")
+    return cands.join(
+        sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a"
+    ).join(sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
+
+
+def _n_match():
+    """Count of equal positions in ``sig_a`` and ``sig_b``, as a Column."""
+    eq = F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int"))
+    return F.size(F.filter(eq, lambda v: v == 1))
+
+
+def _verify_estimate(cands: DataFrame, n_hashes: int, threshold: float) -> DataFrame:
+    """(id_a, id_b, est_jaccard) of the candidates whose signature estimate,
+    rounded to 6 places, is ≥ ``threshold``."""
+    return (
+        cands.withColumn("est_jaccard", F.round(_n_match() / F.lit(float(n_hashes)), 6))
+        .filter(F.col("est_jaccard") >= threshold)
+        .select("id_a", "id_b", "est_jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -366,18 +407,16 @@ def minhash_lsh_pairs(
     n_hashes: int = N_HASHES,
     bands: int = 32,
     threshold: float = 0.8,
-    persist_sketches: bool = True,
     max_bucket_size: int | None = 1000,
-    sketch_path: str | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs via MinHash LSH banding, verified by
     signature-estimated Jaccard ≥ threshold.
 
     bands=32 × rows=4 over 128 hashes → s-curve threshold ≈ (1/32)^(1/4)
-    ≈ 0.42, catching 0.8-similar pairs with high probability.  Candidate
-    generation groups the slim (id, band, bucket) rows by (band, bucket)
-    and explodes in-bucket pairs: ONE shuffle of 3 longs/row/band, no
-    self-join, and only same-bucket docs ever pair — linear-ish in corpus
+    ≈ 0.42, catching 0.8-similar pairs with high probability.  This is
+    :func:`minhash_incremental_pairs` over an empty store: every sketch
+    is new, and :func:`_lsh_candidates` groups the slim banded rows by
+    (band, bucket) and explodes in-bucket pairs — linear-ish in corpus
     size, the 100 TB path.
 
     ``max_bucket_size`` (default 1000) skips degenerate hot buckets the
@@ -388,57 +427,13 @@ def minhash_lsh_pairs(
     OOM.  A capped bucket only loses pairs that every OTHER band also
     skips; recall vs exact Jaccard with the cap on is gated in
     tests/test_dedup.py.
-
-    ``sketch_path``: when set, the signature table is written to Parquet
-    once and read back instead of persist()+count() — the durable variant
-    for true 100 TB runs where an in-memory/disk cache of the sketch
-    table won't fit or must survive executor loss.
     """
     # The sketch table feeds three plan branches (bucket groupBy, two
-    # signature join-backs); persisting (or writing) the raw UDF output
-    # computes it exactly once.
-    if sketch_path is not None:
-        _minhash_banded(
-            df, id_col, text_col, k, n_hashes, bands, persist=False
-        ).write.mode("overwrite").parquet(sketch_path)
-        sigs = df.sparkSession.read.parquet(sketch_path)
-    else:
-        sigs = _minhash_banded(
-            df, id_col, text_col, k, n_hashes, bands, persist=persist_sketches
-        )
-    banded = sigs.select("id", F.posexplode("bkt").alias("band", "bucket"))
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    # In-bucket pair expansion: ids are distinct (collect_set — duplicate
-    # input ids can't emit (x,x) self-pairs) and sorted, so emitting
-    # (ids[i], ids[j>i]) yields each pair in canonical order; the same
-    # pair surfacing from several bands is collapsed by the distinct.
-    cands = (
-        _bucket_pairs(buckets, "ids")
-        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-    )
-    # Verify survivors only: join signatures back for the estimate.
-    sig_tbl = sigs.select("id", "sig")
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / F.lit(float(n_hashes))
-    return (
-        cands.join(sig_tbl.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
-        .join(sig_tbl.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    # signature join-backs); persisting the raw UDF output computes it
+    # exactly once.
+    raw = _minhash_raw(df, id_col, text_col, k, n_hashes, bands, persist=True)
+    sk = _sketch_columns(raw).withColumn("is_new", F.lit(True))
+    return _verify_estimate(_lsh_candidates(sk, max_bucket_size), n_hashes, threshold)
 
 
 # --------------------------------------------------------------- SimHash
@@ -503,7 +498,6 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_distance: int = 3,
-    persist_sketches: bool = True,
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ max_distance.
@@ -524,8 +518,7 @@ def simhash_pairs(
     # rides through the block groupBy at negligible shuffle cost: a single
     # aggregation replaces the former self-join + two-sided sketch scan,
     # and no persist/eager-count job is needed — the 63-bit-sum agg runs
-    # exactly once.  ``persist_sketches`` is kept for API compatibility.
-    del persist_sketches
+    # exactly once.
     sigs = simhash(df, id_col, text_col)
     return hash64_hamming_pairs(sigs, max_distance, max_bucket_size)
 
@@ -696,7 +689,6 @@ def minhash_incremental_pairs(
     bands: int = 32,
     threshold: float = 0.8,
     max_bucket_size: int | None = 1000,
-    update_store: bool = True,
 ) -> DataFrame:
     """Near-dup pairs of a NEW document batch against the accumulated
     corpus — the continuous-ingest form of :func:`minhash_lsh_pairs`.
@@ -709,15 +701,17 @@ def minhash_incremental_pairs(
     new-vs-old and new-vs-new pairs, and append the new sketches to the
     store for the next batch.  Cost per batch is ∝ corpus size: every
     stored band row is re-read and re-shuffled into the ``(band, bucket)``
-    groupBy (pruning the store to the batch's buckets is ROADMAP direction 3).
+    groupBy of :func:`_lsh_candidates` (pruning the store to the batch's
+    buckets is ROADMAP direction 3).
 
     Old-vs-old pairs are deliberately NOT re-emitted (they were reported
-    when those batches arrived); the pair filter keeps only pairs with at
-    least one new side.  Pairs are (id_a < id_b) with the same
-    ``est_jaccard`` verification as the batch operator.  The store append
-    is idempotent per batch only if batch ids are disjoint — resubmitting
-    a batch duplicates sketch rows, so feed it exactly-once input (e.g.
-    from the month gap scan, pipelines.py).
+    when those batches arrived): stored sketches enter the kernel with
+    ``is_new`` false, so only pairs with at least one new side come out.
+    Pairs are (id_a < id_b) with the same ``est_jaccard`` verification as
+    the batch operator, which is this operator over an empty store.  The
+    store append is idempotent per batch only if batch ids are disjoint —
+    resubmitting a batch duplicates sketch rows, so feed it exactly-once
+    input (e.g. from the month gap scan, pipelines.py).
     """
     spark = new_df.sparkSession
     raw_new = _minhash_raw(new_df, id_col, text_col, k, n_hashes, bands, persist=True)
@@ -726,56 +720,13 @@ def minhash_incremental_pairs(
         old_sk = spark.read.parquet(sketch_store).withColumn("is_new", F.lit(False))
         all_sk = new_sk.unionByName(old_sk)
     except Exception:  # first batch: empty store
-        old_sk = None
         all_sk = new_sk
-
-    banded = all_sk.select(
-        "id", "is_new", F.posexplode("bkt").alias("band", "bucket")
-    )
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(
-            F.sort_array(F.collect_set(F.struct("id", "is_new"))).alias("ms")
-        )
-        .filter(F.size("ms") > 1)
-        # a bucket containing no new doc cannot produce a reportable pair —
-        # prune it BEFORE pair expansion (the common case: old-corpus
-        # buckets untouched by this batch)
-        .filter(F.exists("ms", lambda m: m["is_new"]))
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ms") <= max_bucket_size)
-    cands = (
-        _bucket_pairs(buckets, "ms")
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            (F.col("a.is_new") | F.col("b.is_new")).alias("reportable"),
-        )
-        .filter(F.col("reportable") & (F.col("id_a") != F.col("id_b")))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sig_tbl = all_sk.select("id", "sig")
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / F.lit(float(n_hashes))
-    pairs = (
-        cands.join(sig_tbl.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
-        .join(sig_tbl.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    pairs = _verify_estimate(_lsh_candidates(all_sk, max_bucket_size), n_hashes, threshold)
     # materialize pairs BEFORE the append so the plan can't observe its
     # own write; then extend the store with this batch's sketches and
     # free the batch's cached sketches, which nothing reads any more
     pairs = pairs.localCheckpoint(eager=True)
-    if update_store:
-        new_sk.select("id", "sig", "bkt").write.mode("append").parquet(sketch_store)
+    new_sk.select("id", "sig", "bkt").write.mode("append").parquet(sketch_store)
     raw_new.unpersist()
     return pairs
 
@@ -1158,14 +1109,14 @@ def minhash_lsh_pairs_md5(
     fraction, bit-identical cross-engine, while round() at a decimal
     tie is not).
 
-    Scale shape: identical to the fast path — explode shingles, ONE
-    partial-agg groupBy(doc) carrying 128 min aggregates, slim
-    (id, band, bucket) shuffle, in-bucket incremental pair expansion
-    (:func:`_bucket_pairs`), no self-join of the corpus.  The md5 cost
-    is one digest per shingle occurrence (vs one vectorized siphash
-    batch) — measured 3.7 s vs the fast path's 1.3 s full-query min at
-    sf0.1 (~2.8×), the price of driver certifiability; both variants
-    stay registered, the xxhash64 path remains the 100 TB default.
+    Scale shape: explode shingles, ONE partial-agg groupBy(doc) carrying
+    128 min aggregates, then the fast path's candidate kernel
+    (:func:`_lsh_candidates`, every sketch new, md5 keys as ``bkt``) —
+    no self-join of the corpus.  The md5 cost is one digest per
+    shingle occurrence (vs one vectorized siphash batch) — measured
+    3.7 s vs the fast path's 1.3 s full-query min at sf0.1 (~2.8×), the
+    price of driver certifiability; both variants stay registered, the
+    xxhash64 path remains the 100 TB default.
     """
     rows_per_band = n_hashes // bands
     sets = df.select(
@@ -1184,11 +1135,6 @@ def minhash_lsh_pairs_md5(
             for i in range(n_hashes)
         )
     )
-    sig = (
-        sets.groupBy("id")
-        .agg(F.expr(sig_sql))
-        .localCheckpoint(eager=True)  # sig feeds banding + both verify sides
-    )
     band_sql = ", ".join(
         "md5(concat_ws(',', {}))".format(
             ", ".join(
@@ -1198,38 +1144,19 @@ def minhash_lsh_pairs_md5(
         )
         for b in range(bands)
     )
-    banded = sig.select(
-        "id", F.expr(f"posexplode(array({band_sql})) AS (band, bucket)")
-    )
-    buckets = (
-        banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    cands = (
-        _bucket_pairs(buckets, "ids")
-        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-    )
-    n_match = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
+    # the sketches feed banding + both verify sides; the band keys are
+    # materialized with them, or the explode's inferred size(bkt) > 0
+    # filter would re-inline all 32 md5 digests below the projection
+    sk = (
+        sets.groupBy("id")
+        .agg(F.expr(sig_sql))
+        .select("id", "sig", F.expr(f"array({band_sql})").alias("bkt"))
+        .localCheckpoint(eager=True)
+        .withColumn("is_new", F.lit(True))
     )
     return (
-        cands.join(
-            sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")),
-            "id_a",
-        )
-        .join(
-            sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")),
-            "id_b",
-        )
-        .withColumn("n_match", n_match)
+        _lsh_candidates(sk, max_bucket_size)
+        .withColumn("n_match", _n_match())
         .filter(
             F.col("n_match") * threshold_den >= F.lit(n_hashes * threshold_num)
         )

@@ -26,13 +26,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# connected_components, kcore and bfs_hops solve a graph on the driver when
+# its symmetrized edge list holds at most this many rows.
+DRIVER_GATE = 200_000
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    driver_gate: int = 200_000,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``.
 
@@ -43,7 +46,7 @@ def connected_components(
     diameter fits in an int).
 
     Small-graph short-circuit (the BPE/unigram-LM driver-EM recipe):
-    when the symmetrized edge list holds at most ``driver_gate`` rows
+    when the symmetrized edge list holds at most ``DRIVER_GATE`` rows
     (a count that rides the edge checkpoint's materializing job via
     observe()), the fixpoint runs as a min-rooted union-find on the
     driver — the pair graph a DEDUP pipeline feeds here is near-dup
@@ -74,7 +77,7 @@ def connected_components(
         return sym.select(
             F.col("a").alias("node"), F.col("a").alias("component")
         ).limit(0)
-    if n_sym <= driver_gate:
+    if n_sym <= DRIVER_GATE:
         from pyspark.sql.types import StructField, StructType
 
         parent: dict = {}
@@ -523,7 +526,6 @@ def kcore(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    driver_gate: int = 200_000,
 ) -> DataFrame:
     """k-core decomposition: the maximal subgraph where every node has
     degree >= k (within the subgraph).  Returns (node, core_degree) for
@@ -559,7 +561,7 @@ def kcore(
         .observe(sym_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    if int(sym_obs.get["n"]) <= driver_gate:
+    if int(sym_obs.get["n"]) <= DRIVER_GATE:
         # small-graph short-circuit (connected_components' recipe): the
         # peel is exact integer arithmetic, so the driver result is
         # identical to the distributed fixpoint (pinned by test)
@@ -622,7 +624,6 @@ def bfs_hops(
     dst: str = "id_b",
     node_col: str = "node",
     max_iter: int = 50,
-    driver_gate: int = 200_000,
 ) -> DataFrame:
     """Minimum hop count from any source node, by synchronous frontier
     expansion (the BSP BFS every distributed graph engine runs).
@@ -634,7 +635,7 @@ def bfs_hops(
     side — broadcasts while it fits) + one anti join against the
     visited set; O(diameter) rounds, lineage truncated each round.
     Convergence = empty frontier, an exact driver scalar.  Small
-    graphs (symmetrized edges ≤ ``driver_gate``) run the identical
+    graphs (symmetrized edges ≤ ``DRIVER_GATE``) run the identical
     BFS on the driver — exact integer hop counts, two jobs total
     instead of two per depth (connected_components' recipe, pinned
     equal by test).
@@ -648,7 +649,7 @@ def bfs_hops(
         .observe(sym_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    if int(sym_obs.get["n"]) <= driver_gate:
+    if int(sym_obs.get["n"]) <= DRIVER_GATE:
         from collections import defaultdict
 
         from pyspark.sql.types import LongType, StructField, StructType

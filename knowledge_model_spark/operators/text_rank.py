@@ -284,7 +284,7 @@ def bow_cosine_pairs(
     # Three consumers of toks (df cut, both join sides) would re-run
     # the regex shingling + tf shuffle each; persist keeps it one
     # materialization (at true corpus scale, write this table to
-    # Parquet once instead — same seam as the minhash sketch_path).
+    # Parquet once instead).
     from pyspark import StorageLevel
 
     toks = toks.withColumn(

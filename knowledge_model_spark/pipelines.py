@@ -109,8 +109,7 @@ def continuous_update(
     written = spark.read.parquet(sink_path).filter(
         (F.col("year") == year) & (F.col("month") == month)
     )
-    n_passages = written.count()
-    n_docs = written.select("doc_id").distinct().count()
+    n_passages, n_docs = written.agg(F.count("*"), F.countDistinct("doc_id")).first()
 
     recall = 1.0
     if eval_queries is not None:

@@ -113,10 +113,12 @@ def stream_dedup_ingest(
 
     The composed form of the reference's monthly ingest + skip-if-exists
     idempotency (pipeline.py:78-81) — except dedup here is NEAR-dup over
-    the whole accumulated corpus, at per-batch cost: the sketch store
-    grows by one append per batch and candidate work is ∝ matched-bucket
-    occupancy, never corpus size.  Assumes ids are assigned monotonically
-    across batches (keep-min convention then always dooms the newer doc).
+    the whole accumulated corpus.  The sketch store grows by one append
+    per batch, and candidate work is ∝ corpus size: every batch
+    re-shuffles the whole store into the bucket groupBy (pruning it to
+    the batch's buckets is ROADMAP direction 3).  Assumes ids are
+    assigned monotonically across batches (keep-min convention then
+    always dooms the newer doc).
     """
     from pyspark.sql import functions as SF
 

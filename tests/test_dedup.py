@@ -27,6 +27,9 @@ BASE = (
     "long through spring summer and early autumn afternoons quietly"
 )
 
+# malformed input: every id given twice
+DUP_ID_ROWS = [(0, BASE), (0, BASE), (1, BASE + " tail"), (1, BASE + " tail")]
+
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -189,23 +192,6 @@ def test_ngram_max_df_prunes_stop_shingles(spark):
     assert got[(0, 1)] > 0.7
 
 
-def test_minhash_sketch_path_roundtrip(spark, docs, tmp_path):
-    """sketch_path writes the signature table to Parquet once and reads
-    it back — results identical to the persist() path."""
-    via_persist = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8).collect()
-    }
-    via_parquet = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.8,
-            sketch_path=str(tmp_path / "sketches"),
-        ).collect()
-    }
-    assert via_parquet == via_persist and via_persist
-
-
 def test_bucket_cap_default_keeps_recall_on_true_pairs(spark, docs):
     """The default max_bucket_size must not drop the planted near-dups
     (test buckets are far below the cap), and a tiny explicit cap only
@@ -239,8 +225,7 @@ def test_bucket_cap_default_keeps_recall_on_true_pairs(spark, docs):
 
 def test_duplicate_input_ids_never_self_pair(spark):
     """Malformed input (same id twice) must not emit (x,x) pairs."""
-    rows = [(0, BASE), (0, BASE), (1, BASE + " tail"), (1, BASE + " tail")]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(DUP_ID_ROWS, ["doc_id", "text"])
     for pairs in (
         minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5),
         simhash_pairs(docs, "doc_id", "text", max_distance=3),
@@ -248,6 +233,19 @@ def test_duplicate_input_ids_never_self_pair(spark):
         got = pairs.select("id_a", "id_b").collect()
         assert all(r["id_a"] != r["id_b"] for r in got)
         assert {(r["id_a"], r["id_b"]) for r in got} == {(0, 1)}
+
+
+def test_minhash_batch_is_incremental_over_empty_store(spark, docs, tmp_path):
+    """The batch operator returns exactly the rows of one ingest tick into
+    an empty store, est_jaccard included — also for duplicate input ids."""
+    from knowledge_model_spark.operators.dedup import minhash_incremental_pairs
+
+    dup_ids = spark.createDataFrame(DUP_ID_ROWS, ["doc_id", "text"])
+    for i, df in enumerate((docs, dup_ids)):
+        batch = sorted(minhash_lsh_pairs(df, "doc_id", "text", threshold=0.5).collect())
+        store = str(tmp_path / f"sketches{i}")
+        tick = minhash_incremental_pairs(df, "doc_id", "text", store, threshold=0.5)
+        assert batch and sorted(tick.collect()) == batch
 
 
 def test_minhash_incremental_batches(spark, tmp_path):

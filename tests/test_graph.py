@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from knowledge_model_spark.operators import graph
 from knowledge_model_spark.operators.graph import (
     connected_components,
     dedup_cluster_survivors,
@@ -26,17 +27,18 @@ def test_triangle_and_isolated_pair(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
-def test_long_chain_converges_by_pointer_jumping(spark):
+def test_long_chain_converges_by_pointer_jumping(spark, monkeypatch):
     # a 64-node path: plain propagation needs 63 rounds; with pointer
     # jumping ~log2(63) — must finish well inside max_iter=10.
-    # driver_gate=0 forces the distributed loop (the small-graph
+    # A 0 driver gate forces the distributed loop (the small-graph
     # short-circuit would otherwise solve this on the driver).
+    monkeypatch.setattr(graph, "DRIVER_GATE", 0)
     edges = [(i, i + 1) for i in range(63)]
-    got = _cc(spark, edges, max_iter=10, driver_gate=0)
+    got = _cc(spark, edges, max_iter=10)
     assert got == {(i, 0) for i in range(64)}
 
 
-def test_driver_shortcircuit_equals_distributed_loop(spark):
+def test_driver_shortcircuit_equals_distributed_loop(spark, monkeypatch):
     # the small-graph union-find path must produce exactly the
     # distributed fixpoint — same rows, same types
     edges = (
@@ -44,7 +46,8 @@ def test_driver_shortcircuit_equals_distributed_loop(spark):
         + [(9, 4), (4, 7), (8, 9), (100, 3), (50, 51), (51, 0)]
     )
     fast = _cc(spark, edges)  # gate default: driver path
-    slow = _cc(spark, edges, driver_gate=0)  # distributed loop
+    monkeypatch.setattr(graph, "DRIVER_GATE", 0)
+    slow = _cc(spark, edges)  # distributed loop
     assert fast == slow
 
 
@@ -54,10 +57,11 @@ def test_component_is_min_reachable_id_regardless_of_edge_direction(spark):
     assert got == {(4, 4), (7, 4), (8, 4), (9, 4)}
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
+    monkeypatch.setattr(graph, "DRIVER_GATE", 0)
     df = spark.createDataFrame([(i, i + 1) for i in range(20)], ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iter=1, driver_gate=0)
+        connected_components(df, max_iter=1)
 
 
 def test_cluster_survivors_keeps_min_per_cluster_and_all_nonmembers(spark):
@@ -238,7 +242,7 @@ def test_bfs_multi_source_takes_nearest(spark):
     assert out == {0: 0, 4: 0, 1: 1, 3: 1, 2: 2}
 
 
-def test_kcore_and_bfs_driver_paths_equal_distributed(spark):
+def test_kcore_and_bfs_driver_paths_equal_distributed(spark, monkeypatch):
     from knowledge_model_spark.operators.graph import bfs_hops, kcore
 
     edges = spark.createDataFrame(
@@ -247,13 +251,12 @@ def test_kcore_and_bfs_driver_paths_equal_distributed(spark):
         + [(3, 14), (23, 44)],
         "id_a long, id_b long",
     )
-    kc_fast = sorted(map(tuple, kcore(edges, k=2).collect()))
-    kc_slow = sorted(map(tuple, kcore(edges, k=2, driver_gate=0).collect()))
-    assert kc_fast == kc_slow
     src = spark.createDataFrame([(0,), (23,)], "node long")
+    kc_fast = sorted(map(tuple, kcore(edges, k=2).collect()))
     b_fast = sorted(map(tuple, bfs_hops(edges, src).collect()))
-    b_slow = sorted(map(tuple, bfs_hops(edges, src, driver_gate=0).collect()))
-    assert b_fast == b_slow
+    monkeypatch.setattr(graph, "DRIVER_GATE", 0)  # distributed loops
+    assert sorted(map(tuple, kcore(edges, k=2).collect())) == kc_fast
+    assert sorted(map(tuple, bfs_hops(edges, src).collect())) == b_fast
 
 
 def test_personalized_pagerank_unreachable_gets_zero(spark):
