@@ -702,16 +702,18 @@ def minhash_incremental_pairs(
     store for the next batch.  Cost per batch is ∝ corpus size: every
     stored band row is re-read and re-shuffled into the ``(band, bucket)``
     groupBy of :func:`_lsh_candidates` (pruning the store to the batch's
-    buckets is ROADMAP direction 3).
+    buckets is ROADMAP direction 4).
 
     Old-vs-old pairs are deliberately NOT re-emitted (they were reported
     when those batches arrived): stored sketches enter the kernel with
     ``is_new`` false, so only pairs with at least one new side come out.
     Pairs are (id_a < id_b) with the same ``est_jaccard`` verification as
-    the batch operator, which is this operator over an empty store.  The
-    store append is idempotent per batch only if batch ids are disjoint —
-    resubmitting a batch duplicates sketch rows, so feed it exactly-once
-    input (e.g. from the month gap scan, pipelines.py).
+    the batch operator, which is this operator over an empty store.
+
+    A replayed batch appends its sketches again.  Its distinct pairs, so
+    its doomed ids, stay the same (an id never pairs with its stored copy)
+    unless doubled members push a bucket over ``max_bucket_size``; but a
+    pair comes out once per copy of each side (each copy joins its sig).
     """
     spark = new_df.sparkSession
     raw_new = _minhash_raw(new_df, id_col, text_col, k, n_hashes, bands, persist=True)
@@ -729,6 +731,20 @@ def minhash_incremental_pairs(
     new_sk.select("id", "sig", "bkt").write.mode("append").parquet(sketch_store)
     raw_new.unpersist()
     return pairs
+
+
+def minhash_incremental_survivors(
+    new_df: DataFrame, id_col: str, text_col: str, sketch_store: str, threshold: float = 0.8
+) -> DataFrame:
+    """Rows of ``new_df`` left by :func:`minhash_incremental_pairs` against
+    ``sketch_store`` (which it extends), first-seen-wins: a broadcast
+    left-anti join drops each distinct ``id_b``.  The rule assumes ids grow
+    across batches: a new doc whose stored twin has the larger id is kept."""
+    pairs = minhash_incremental_pairs(
+        new_df, id_col, text_col, sketch_store, threshold=threshold
+    )
+    doomed = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return new_df.join(F.broadcast(doomed), id_col, "left_anti")
 
 
 # ------------------------------------------- fingerprint containment

@@ -8,12 +8,14 @@ pipelines/flows/continuous.py:8-38, deployments/nas_daily.py:19-32):
    (reference: pipelines/tasks/fetch_clean.py:35-53 probes directory
    existence; here it is a calendar anti-join against the sink's
    partitions — pure metadata, no data scan),
-2. clean + chunk + embed exactly that month (partition pruning limits
-   the scan to one month of a 100 TB corpus),
-3. write it as one idempotent dynamic-overwrite partition
-   (replaces skip-if-exists, reference: ingestion/pipeline.py:78-81),
-4. run the recall@K gate and FAIL the run if it regresses
-   (reference: continuous.py:34-36, hard floor 0.80).
+2. drop the month's MinHash near-duplicates of earlier docs, then clean +
+   chunk + embed the survivors (partition pruning scans one month only),
+3. stage the passages and gate recall@K over them plus the committed
+   months; FAIL the run if it regresses, sink untouched (reference:
+   continuous.py:34-36, hard floor 0.80),
+4. only then rename the month into the sink (replaces skip-if-exists,
+   reference: ingestion/pipeline.py:78-81): a failed month stays the
+   first missing one.
 
 Prefect process hops become Spark stage boundaries; a cron scheduler (or
 Structured Streaming with Trigger.AvailableNow over the landing dir)
@@ -22,19 +24,27 @@ drives `continuous_update` instead of a workflow engine.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from knowledge_model_spark.operators.retrieval import build_passage_index, recall_at_k
+from knowledge_model_spark.operators.dedup import minhash_incremental_survivors
+from knowledge_model_spark.operators.retrieval import (
+    build_passage_index,
+    passage_doc_id,
+    recall_at_k,
+    retrieve,
+)
 
 RECALL_FLOOR = 0.80  # reference: continuous.py:34-36
 
 
 class RecallGateError(RuntimeError):
-    """Raised when the post-ingest retrieval quality gate fails."""
+    """Raised when the pre-commit retrieval quality gate fails."""
 
 
 @dataclass(frozen=True)
@@ -53,28 +63,92 @@ def first_missing_month(
     sink's partitions — the watermark-by-directory pattern
     (reference: fetch_clean.py:35-53) as a calendar anti-join.
 
-    Reads ONLY partition values from the sink (metadata listing for a
-    partitioned parquet sink), never its data.
+    Lists the sink's ``year=*/month=*`` directories, never its data; a
+    month that kept no passages is one too, empty (Spark's reads skip it).
     """
-    wanted = source.select("year", "month").distinct()
-    if os.path.exists(sink_path):
-        have = spark.read.parquet(sink_path).select("year", "month").distinct()
-        wanted = wanted.join(have, ["year", "month"], "left_anti")
-    nxt = wanted.orderBy("year", "month").limit(1).collect()
+    done = [
+        tuple(int(d.split("=", 1)[1]) for d in path.split(os.sep)[-2:])
+        for path in glob.glob(os.path.join(glob.escape(sink_path), "year=*", "month=*"))
+    ]
+    nxt = (
+        source.select("year", "month").distinct()
+        .join(spark.createDataFrame(done, "year int, month int"), ["year", "month"], "left_anti")
+        .orderBy("year", "month").limit(1).collect()
+    )
     if not nxt:
         return None
     return int(nxt[0]["year"]), int(nxt[0]["month"])
 
 
-def process_month(
-    source: DataFrame, year: int, month: int, dim: int = 64
-) -> DataFrame:
+def process_month(source: DataFrame, year: int, month: int) -> DataFrame:
     """Clean → chunk → hash-embed one month of documents (the §3.2 ingest
     body).  The month filter sits directly on the partition columns, so
     Catalyst prunes every other month at the scan."""
     docs = source.filter((F.col("year") == year) & (F.col("month") == month))
-    passages = build_passage_index(docs, dim=dim)
+    passages = build_passage_index(docs)
     return passages.withColumn("year", F.lit(year)).withColumn("month", F.lit(month))
+
+
+def ingest_tick(
+    source: DataFrame, year: int, month: int, sink: str, gate_queries: DataFrame | None = None
+) -> MonthReport:
+    """One month of ``source`` into the partitioned ``sink``, all or
+    nothing: dedup → process → stage → gate → commit.
+
+    The docs are deduped first-seen-wins against the sketch store at
+    ``<sink>/_sketches`` and the survivors' passages staged at
+    ``<sink>/_staging``; Spark lists neither as part of the sink.  With
+    ``gate_queries`` (query_id, query_text, expected_doc_id), recall@10
+    over the other committed months plus the staged one must reach
+    ``RECALL_FLOOR``, else :class:`RecallGateError` with the sink
+    untouched.  The commit is :func:`swap_dir` of the month's partition.
+    A retry after any fault dooms the same docs (replays: see
+    ``minhash_incremental_pairs``).
+    """
+    spark = source.sparkSession
+    docs = source.filter((F.col("year") == year) & (F.col("month") == month))
+    survivors = minhash_incremental_survivors(
+        docs, "doc_id", "text", os.path.join(sink, "_sketches")
+    )
+    passages = process_month(survivors, year, month)
+    staging = os.path.join(sink, "_staging")
+    try:
+        passages.write.mode("overwrite").partitionBy("year", "month").parquet(staging)
+        staged = spark.read.schema(passages.schema).parquet(staging)
+        n_passages, n_docs = staged.agg(F.count("*"), F.countDistinct("doc_id")).first()
+        recall = 1.0
+        if gate_queries is not None:
+            others = spark.read.schema(passages.schema).parquet(sink).filter(
+                (F.col("year") != year) | (F.col("month") != month)
+            )
+            hits = retrieve(others.unionByName(staged), gate_queries).withColumn(
+                "doc_id", passage_doc_id(F.col("__pid"))
+            )
+            recall = float(recall_at_k(hits, gate_queries, k=10).first()["recall"])
+            if recall < RECALL_FLOOR:
+                raise RecallGateError(
+                    f"recall@10 {recall:.3f} < floor {RECALL_FLOOR} after "
+                    f"ingesting {year}-{month:02d}"
+                )
+        part = os.path.join(f"year={year}", f"month={month}")
+        new, dest = os.path.join(staging, part), os.path.join(sink, part)
+        os.makedirs(new, exist_ok=True)  # a month that kept no passages commits empty
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        swap_dir(new, dest, os.path.join(staging, "_old"))
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return MonthReport(year, month, n_docs, n_passages, recall)
+
+
+def swap_dir(new: str, dest: str, retired: str) -> None:
+    """Rename directory ``new`` to ``dest``.  A ``dest`` already there is
+    renamed to ``retired`` first and deleted last, so a crash at any point
+    leaves a complete copy at ``dest`` or ``retired``, never a torn one."""
+    shutil.rmtree(retired, ignore_errors=True)
+    if os.path.exists(dest):
+        os.replace(dest, retired)
+    os.replace(new, dest)
+    shutil.rmtree(retired, ignore_errors=True)
 
 
 def continuous_update(
@@ -82,51 +156,19 @@ def continuous_update(
     source: DataFrame,
     sink_path: str,
     eval_queries: DataFrame | None = None,
-    recall_floor: float = RECALL_FLOOR,
-    dim: int = 64,
 ) -> MonthReport | None:
-    """One tick of the continuous flow: process the first missing month,
-    write it idempotently, gate on retrieval quality.
+    """One tick of the continuous flow: :func:`ingest_tick` of the first
+    missing month, gated on recall@10 over ``eval_queries``.
 
     Returns None when the sink is already caught up.  Raises
-    :class:`RecallGateError` if the post-write recall@10 over
-    ``eval_queries`` (query_id, query_text, expected_doc_id) falls below
-    ``recall_floor`` — the caller decides whether to roll back the
-    partition or page someone, exactly like the flow failure in the
-    reference (continuous.py:34-36).
+    :class:`RecallGateError` when the gate fails — the flow failure of
+    the reference (continuous.py:34-36) — and commits nothing, so the
+    next call redoes the same month.
     """
     nxt = first_missing_month(spark, source, sink_path)
     if nxt is None:
         return None
-    year, month = nxt
-    passages = process_month(source, year, month, dim=dim)
-    (
-        passages.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "month")
-        .parquet(sink_path)
-    )
-    written = spark.read.parquet(sink_path).filter(
-        (F.col("year") == year) & (F.col("month") == month)
-    )
-    n_passages, n_docs = written.agg(F.count("*"), F.countDistinct("doc_id")).first()
-
-    recall = 1.0
-    if eval_queries is not None:
-        from knowledge_model_spark.operators.retrieval import passage_doc_id, retrieve
-
-        index = spark.read.parquet(sink_path)
-        hits = retrieve(index, eval_queries, dim=dim).withColumn(
-            "doc_id", passage_doc_id(F.col("__pid"))
-        )
-        row = recall_at_k(hits, eval_queries, k=10).first()
-        recall = float(row["recall"])
-        if recall < recall_floor:
-            raise RecallGateError(
-                f"recall@10 {recall:.3f} < floor {recall_floor} after "
-                f"ingesting {year}-{month:02d}"
-            )
-    return MonthReport(year, month, n_docs, n_passages, recall)
+    return ingest_tick(source, *nxt, sink_path, eval_queries)
 
 
 def audited(df: DataFrame, name: str, **metrics):

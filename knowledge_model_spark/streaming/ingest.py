@@ -13,9 +13,9 @@ a file-source stream:
   stop: exactly the cron-batch semantics, but offsets live in the
   checkpoint, so a crashed run resumes mid-listing instead of
   reprocessing the month,
-- ``foreachBatch`` sink running the clean→chunk batch pipeline and
-  writing partitioned Parquet — the sink is idempotent per batch id,
-  giving effectively-exactly-once file output.
+- ``foreachBatch`` sinks running batch pipelines per micro-batch.  Spark
+  may replay a batch after a crash, so an appending sink is
+  at-least-once; ``stream_vocab_ingest`` skips replays by batch id.
 
 State scales because the only streaming state is the file-listing
 offset log; the heavy lifting happens in the batch engine per
@@ -23,8 +23,6 @@ micro-batch (Catalyst-optimized, same plans as the batch twins).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,35 +44,24 @@ CORPUS_SCHEMA = StructType(
 )
 
 
-def stream_corpus_ingest(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    max_files_per_trigger: int | None = None,
+def _drain(stream: DataFrame, sink, checkpoint_dir: str) -> None:
+    """Run ``sink(batch_df, batch_id)`` over every micro-batch of ``stream``
+    available now, offsets checkpointed at ``checkpoint_dir``, then stop."""
+    (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _append_corpus(
+    spark: SparkSession, landing_dir: str, out_dir: str, checkpoint_dir: str, keep
 ) -> int:
-    """Drain all new JSONL files from ``landing_dir`` into partitioned
-    Parquet at ``out_dir``; returns the number of micro-batches run.
-
-    ``transform`` maps each micro-batch DataFrame (default: passthrough
-    with a ``batch_source_file`` lineage column); plug the clean/chunk
-    pipeline here.  Re-running after new files land processes ONLY the
-    new files (checkpointed offsets); re-running with no new files is a
-    zero-batch no-op.
-    """
-    reader = (
-        spark.readStream.schema(CORPUS_SCHEMA)
-        .option("multiLine", "false")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.json(landing_dir).withColumn(
-        "batch_source_file", F.input_file_name()
-    )
-    if transform is not None:
-        stream = transform(stream)
-
+    """Append ``keep(batch_df)`` of each JSONL micro-batch from
+    ``landing_dir`` (with a ``batch_source_file`` lineage column) to
+    ``out_dir``, partitioned by source; returns the micro-batches run."""
     n_batches = 0
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -82,16 +69,24 @@ def stream_corpus_ingest(
         n_batches += 1
         # partition by source → pruning-friendly layout, mirrors the
         # reference's YYYY/MM directory convention (upload_s3.py:125-131)
-        batch_df.write.mode("append").partitionBy("source").parquet(out_dir)
+        keep(batch_df).write.mode("append").partitionBy("source").parquet(out_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(CORPUS_SCHEMA).json(landing_dir)
+    _drain(stream.withColumn("batch_source_file", F.input_file_name()), sink, checkpoint_dir)
     return n_batches
+
+
+def stream_corpus_ingest(
+    spark: SparkSession, landing_dir: str, out_dir: str, checkpoint_dir: str
+) -> int:
+    """Drain all new JSONL files from ``landing_dir`` into partitioned
+    Parquet at ``out_dir``; returns the number of micro-batches run.
+
+    Re-running after new files land processes ONLY the new files
+    (checkpointed offsets); re-running with no new files is a zero-batch
+    no-op.
+    """
+    return _append_corpus(spark, landing_dir, out_dir, checkpoint_dir, lambda df: df)
 
 
 def stream_dedup_ingest(
@@ -100,55 +95,29 @@ def stream_dedup_ingest(
     out_dir: str,
     checkpoint_dir: str,
     sketch_store: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     threshold: float = 0.8,
 ) -> int:
     """Streaming ingest with near-dup suppression against ALL history:
-    each micro-batch is minhash-sketched once, compared to the durable
-    sketch store (operators/dedup.minhash_incremental_pairs), its
-    duplicate rows dropped (first-seen-wins: a doc pairing as the larger
-    id of any near-dup pair is doomed), and only survivors land in
-    ``out_dir``.  Returns the number of micro-batches run.
+    each micro-batch keeps only its
+    :func:`~knowledge_model_spark.operators.dedup.minhash_incremental_survivors`
+    against the durable sketch store (the first-seen-wins step of
+    ``pipelines.ingest_tick``).  Returns the number of micro-batches run.
 
     The composed form of the reference's monthly ingest + skip-if-exists
     idempotency (pipeline.py:78-81) — except dedup here is NEAR-dup over
     the whole accumulated corpus.  The sketch store grows by one append
     per batch, and candidate work is ∝ corpus size: every batch
     re-shuffles the whole store into the bucket groupBy (pruning it to
-    the batch's buckets is ROADMAP direction 3).  Assumes ids are
-    assigned monotonically across batches (keep-min convention then
-    always dooms the newer doc).
+    the batch's buckets is ROADMAP direction 4).
     """
-    from pyspark.sql import functions as SF
+    from knowledge_model_spark.operators.dedup import minhash_incremental_survivors
 
-    from knowledge_model_spark.operators.dedup import minhash_incremental_pairs
-
-    n_batches = 0
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        pairs = minhash_incremental_pairs(
-            batch_df, id_col, text_col, sketch_store, threshold=threshold
+    def keep(batch_df: DataFrame) -> DataFrame:
+        return minhash_incremental_survivors(
+            batch_df, "doc_id", "text", sketch_store, threshold=threshold
         )
-        doomed = pairs.select(SF.col("id_b").alias(id_col)).distinct()
-        survivors = batch_df.join(SF.broadcast(doomed), id_col, "left_anti")
-        survivors.write.mode("append").partitionBy("source").parquet(out_dir)
 
-    stream = (
-        spark.readStream.schema(CORPUS_SCHEMA)
-        .json(landing_dir)
-        .withColumn("batch_source_file", F.input_file_name())
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    return _append_corpus(spark, landing_dir, out_dir, checkpoint_dir, keep)
 
 
 EMBEDDING_SCHEMA = StructType(
@@ -207,14 +176,7 @@ def stream_index_ingest(
     reader = spark.readStream.schema(EMBEDDING_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(reader.parquet(landing_dir), sink, checkpoint_dir)
     return n_batches
 
 
@@ -226,8 +188,6 @@ def stream_vocab_ingest(
     landing_dir: str,
     vocab_path: str,
     checkpoint_dir: str,
-    min_count: int = 2,
-    max_files_per_trigger: int | None = None,
 ) -> int:
     """Streaming maintenance of the vocabulary count table
     (operators/ngram_lm.merge_vocab_counts): each micro-batch of new
@@ -243,7 +203,7 @@ def stream_vocab_ingest(
 
     The durable table stores UNCUT counts (min_count=1) so cumulative
     sub-threshold terms can clear the cutoff across batches; readers
-    apply ``min_count`` on load (mirrors the batch-side contract proven
+    apply their cutoff on load (mirrors the batch-side contract proven
     in tests/test_ngram_lm.py).  Returns micro-batches run.
     """
     from knowledge_model_spark.operators.ngram_lm import merge_vocab_counts
@@ -325,18 +285,15 @@ def stream_vocab_ingest(
         merged = merge_vocab_counts(
             old, batch_df, "doc_id", "text", min_count=1
         ).select("term", "c", "df_docs")
-        # swap protocol: stage new table (+ batch_id marker) → retire
-        # current to __old → rename staging into place → drop __old.
-        # Every crash window leaves a COMPLETE copy readable (either the
-        # live path or __old, which _read_current falls back to) — an
-        # rmtree-first swap would have a window with no vocab at all.
+        # stage new table (+ batch_id marker), then swap it in: every
+        # crash window leaves a COMPLETE copy readable, the live path or
+        # the __old one _read_current falls back to
         staging = vocab_path + "__staging"
-        retired = vocab_path + "__old"
         merged.write.mode("overwrite").parquet(staging)
-        import os
-        import shutil
-
         import json
+        import os
+
+        from knowledge_model_spark.pipelines import swap_dir
 
         with open(
             os.path.join(staging, _MARKER), "w", encoding="ascii"
@@ -346,23 +303,7 @@ def stream_vocab_ingest(
                     {"batch_id": batch_id, "ckpt": _checkpoint_identity()}
                 )
             )
-        if os.path.exists(retired):
-            shutil.rmtree(retired)
-        if os.path.exists(vocab_path):
-            os.replace(vocab_path, retired)
-        os.replace(staging, vocab_path)
-        if os.path.exists(retired):
-            shutil.rmtree(retired)
+        swap_dir(staging, vocab_path, vocab_path + "__old")
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark.readStream.schema(DOC_SCHEMA).parquet(landing_dir), sink, checkpoint_dir)
     return n_batches

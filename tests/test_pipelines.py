@@ -1,11 +1,15 @@
-"""Continuous ingest flow: month gap detection, pruned processing,
-idempotent partition write, recall gate (reference: continuous.py:8-38)."""
+"""Continuous ingest flow: month gap detection, dedup, pruned processing,
+recall gate before an all-or-nothing partition commit, replay after
+faults (reference: continuous.py:8-38)."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from knowledge_model_spark import pipelines
 from knowledge_model_spark.pipelines import (
     RecallGateError,
     continuous_update,
@@ -20,6 +24,26 @@ def monthly_source(spark, tables):
         tables["documents"]
         .withColumn("year", F.lit(2024))
         .withColumn("month", (F.col("doc_id") % 3 + 1).cast("int"))
+    )
+
+
+@pytest.fixture(scope="module")
+def self_queries(monthly_source):
+    # queries built FROM month-1 documents retrieve their own doc
+    docs = monthly_source.filter((F.col("month") == 1) & (F.col("doc_id") < 40))
+    return docs.select(
+        F.col("doc_id").cast("string").alias("query_id"),
+        F.substring("text", 1, 250).alias("query_text"),
+        F.col("doc_id").alias("expected_doc_id"),
+    )
+
+
+@pytest.fixture(scope="module")
+def bad_queries(spark):
+    # impossible golden labels -> recall 0 -> the gate must raise
+    return spark.createDataFrame(
+        [(str(i), "no such words exist qzx", -999) for i in range(5)],
+        ["query_id", "query_text", "expected_doc_id"],
     )
 
 
@@ -46,42 +70,109 @@ def test_continuous_update_is_idempotent_per_partition(spark, monthly_source, tm
     sink = str(tmp_path / "clean2")
     continuous_update(spark, monthly_source, sink)
     first = spark.read.parquet(sink).count()
-    # re-processing the same month (sink wiped of its marker via direct
-    # call) dynamically overwrites instead of duplicating
-    from knowledge_model_spark.pipelines import process_month
-
-    (
-        process_month(monthly_source, 2024, 1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "month")
-        .parquet(sink)
-    )
+    # re-ingesting a committed month (a direct tick call) replaces its
+    # partition instead of duplicating it
+    pipelines.ingest_tick(monthly_source, 2024, 1, sink)
     assert spark.read.parquet(sink).count() == first
 
 
-def test_recall_gate_fires(spark, monthly_source, tmp_path):
+def test_recall_gate_fires(spark, monthly_source, bad_queries, tmp_path):
     sink = str(tmp_path / "clean3")
-    # impossible golden labels -> recall 0 -> the gate must raise
-    bad_eval = spark.createDataFrame(
-        [(str(i), "no such words exist qzx", -999) for i in range(5)],
-        ["query_id", "query_text", "expected_doc_id"],
-    )
     with pytest.raises(RecallGateError):
-        continuous_update(spark, monthly_source, sink, eval_queries=bad_eval)
+        continuous_update(spark, monthly_source, sink, eval_queries=bad_queries)
 
 
-def test_recall_gate_passes_on_self_queries(spark, monthly_source, tmp_path):
+def test_recall_gate_passes_on_self_queries(spark, monthly_source, self_queries, tmp_path):
     sink = str(tmp_path / "clean4")
-    # queries built FROM month-1 documents retrieve their own doc
-    docs = monthly_source.filter((F.col("month") == 1) & (F.col("doc_id") < 40))
-    good_eval = docs.select(
-        F.col("doc_id").cast("string").alias("query_id"),
-        F.substring("text", 1, 250).alias("query_text"),
-        F.col("doc_id").alias("expected_doc_id"),
-    )
-    rep = continuous_update(spark, monthly_source, sink, eval_queries=good_eval)
+    rep = continuous_update(spark, monthly_source, sink, eval_queries=self_queries)
     assert rep is not None and rep.recall >= 0.8
+
+
+def test_failed_gate_commits_nothing_and_the_month_is_redone(
+    spark, monthly_source, self_queries, bad_queries, tmp_path
+):
+    sink = str(tmp_path / "gated")
+    with pytest.raises(RecallGateError):
+        continuous_update(spark, monthly_source, sink, eval_queries=bad_queries)
+    assert not os.path.exists(os.path.join(sink, "year=2024", "month=1"))
+    assert sorted(os.listdir(sink)) == ["_sketches"]  # staging deleted
+    rep = continuous_update(spark, monthly_source, sink, eval_queries=self_queries)
+    assert (rep.year, rep.month) == (2024, 1) and rep.recall >= 0.8
+
+
+def test_first_missing_month_on_sink_without_partitions(spark, monthly_source, tmp_path):
+    # what a tick that failed its first gate leaves: only the sketch store
+    sink = str(tmp_path / "bare")
+    spark.range(3).write.parquet(os.path.join(sink, "_sketches"))
+    assert first_missing_month(spark, monthly_source, sink) == (2024, 1)
+
+
+def test_month_with_no_survivors_commits_empty_and_is_done(spark, tables, tmp_path):
+    # month 2 re-lands month 1's texts under new ids: the dedup dooms all
+    month1 = (
+        tables["documents"].filter(F.col("doc_id") < 30)
+        .withColumn("year", F.lit(2024)).withColumn("month", F.lit(1))
+    )
+    month2 = month1.withColumn("doc_id", F.col("doc_id") + 1000).withColumn("month", F.lit(2))
+    source, sink = month1.unionByName(month2), str(tmp_path / "relanded")
+    assert continuous_update(spark, source, sink).month == 1
+    rep = continuous_update(spark, source, sink)
+    assert (rep.month, rep.n_docs, rep.n_passages) == (2, 0, 0)
+    assert continuous_update(spark, source, sink) is None
+    assert spark.read.parquet(sink).select("month").distinct().collect() == [(1,)]
+
+
+def _ingest_all(spark, source, sink, queries):
+    reports = []
+    while (rep := continuous_update(spark, source, sink, eval_queries=queries)) is not None:
+        reports.append(rep)
+    return reports
+
+
+def _fail_once(monkeypatch, name):
+    real, calls = getattr(pipelines, name), []
+
+    def fail_first(*args, **kwargs):
+        if not calls:
+            calls.append(name)
+            raise RuntimeError(f"injected fault in {name}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipelines, name, fail_first)
+
+
+def test_tick_replayed_after_faults_equals_clean_run(
+    spark, monthly_source, self_queries, tmp_path, monkeypatch
+):
+    """A fault after the dedup has appended to the sketch store, then one
+    inside the gate: the retried ticks doom the same docs and leave the
+    same sink, vectors included, as a clean run on a fresh sink."""
+    from knowledge_model_spark.operators import dedup
+
+    real_pairs, doomed = dedup.minhash_incremental_pairs, []
+
+    def recording(*args, **kwargs):
+        pairs = real_pairs(*args, **kwargs)
+        doomed.append({r.id_b for r in pairs.select("id_b").collect()})
+        return pairs
+
+    monkeypatch.setattr(dedup, "minhash_incremental_pairs", recording)
+    clean = str(tmp_path / "clean")
+    clean_reports = _ingest_all(spark, monthly_source, clean, self_queries)
+    clean_doomed, doomed[:] = list(doomed), []
+
+    replayed = str(tmp_path / "replayed")
+    for name in ("process_month", "recall_at_k"):
+        _fail_once(monkeypatch, name)
+        with pytest.raises(RuntimeError, match="injected"):
+            continuous_update(spark, monthly_source, replayed, eval_queries=self_queries)
+        assert first_missing_month(spark, monthly_source, replayed) == (2024, 1)
+    assert _ingest_all(spark, monthly_source, replayed, self_queries) == clean_reports
+
+    assert len(clean_doomed) == 3 and clean_doomed[0]
+    assert doomed == clean_doomed[:1] * 2 + clean_doomed
+    rows = [sorted(spark.read.parquet(p).collect()) for p in (clean, replayed)]
+    assert rows[0] == rows[1] and len(rows[0]) > 0
 
 
 def test_audited_metrics_single_scan(spark, tables):
