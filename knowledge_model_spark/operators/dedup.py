@@ -697,53 +697,51 @@ def minhash_incremental_pairs(
     (pipeline.py:215-226, O(corpus) per ingest); the incremental shape a
     100 TB pipeline needs instead is: sketch ONLY the new batch (one UDF
     pass over new rows), join its banded buckets against a durable
-    Parquet ``sketch_store`` of all previously-sketched documents, emit
-    new-vs-old and new-vs-new pairs, and append the new sketches to the
-    store for the next batch.  Cost per batch is ∝ corpus size: every
-    stored band row is re-read and re-shuffled into the ``(band, bucket)``
-    groupBy of :func:`_lsh_candidates` (pruning the store to the batch's
-    buckets is ROADMAP direction 4).
+    Parquet ``sketch_store`` of all previously-sketched documents, and
+    emit new-vs-old and new-vs-new pairs.  Cost per batch is ∝ corpus
+    size: every stored band row is re-read and re-shuffled into the
+    ``(band, bucket)`` groupBy of :func:`_lsh_candidates` (pruning the
+    store to the batch's buckets is ROADMAP direction 4).
 
-    Old-vs-old pairs are deliberately NOT re-emitted (they were reported
-    when those batches arrived): stored sketches enter the kernel with
-    ``is_new`` false, so only pairs with at least one new side come out.
-    Pairs are (id_a < id_b) with the same ``est_jaccard`` verification as
-    the batch operator, which is this operator over an empty store.
-
-    A replayed batch appends its sketches again.  Its distinct pairs, so
-    its doomed ids, stay the same (an id never pairs with its stored copy)
-    unless doubled members push a bucket over ``max_bucket_size``; but a
-    pair comes out once per copy of each side (each copy joins its sig).
+    The store holds one ``batch=<key>`` partition of (id, sig, bkt) per
+    distinct set of batch ids, keyed by their count and the xor of their
+    hashes.  The batch's sketches are written there first, so a replay
+    replaces them; then the whole store is read back (lazily), and the
+    rows of this partition are the new ones.  Old-vs-old pairs are
+    deliberately NOT re-emitted (they were reported when those batches
+    arrived).  Pairs are (id_a < id_b) with the same ``est_jaccard``
+    verification as the batch operator, which is this operator over an
+    empty store.
     """
     spark = new_df.sparkSession
-    raw_new = _minhash_raw(new_df, id_col, text_col, k, n_hashes, bands, persist=True)
-    new_sk = _sketch_columns(raw_new).withColumn("is_new", F.lit(True))
-    try:
-        old_sk = spark.read.parquet(sketch_store).withColumn("is_new", F.lit(False))
-        all_sk = new_sk.unionByName(old_sk)
-    except Exception:  # first batch: empty store
-        all_sk = new_sk
-    pairs = _verify_estimate(_lsh_candidates(all_sk, max_bucket_size), n_hashes, threshold)
-    # materialize pairs BEFORE the append so the plan can't observe its
-    # own write; then extend the store with this batch's sketches and
-    # free the batch's cached sketches, which nothing reads any more
-    pairs = pairs.localCheckpoint(eager=True)
-    new_sk.select("id", "sig", "bkt").write.mode("append").parquet(sketch_store)
-    raw_new.unpersist()
-    return pairs
+    h = new_df.select(F.xxhash64(id_col).alias("h")).distinct()
+    xor, n = h.agg(F.bit_xor("h"), F.count("*")).first()
+    key = f"{n}-{(xor or 0) & (2**64 - 1):016x}"
+    raw = _minhash_raw(new_df, id_col, text_col, k, n_hashes, bands, persist=False)
+    sk = raw.select("id", F.col("mh.sig").alias("sig"), F.col("mh.bkt").alias("bkt"))
+    sk.write.mode("overwrite").parquet(f"{sketch_store}/batch={key}")
+    store = (
+        spark.read.schema(sk.withColumn("batch", F.lit(key)).schema).parquet(sketch_store)
+        .filter(F.col("sig").isNotNull())
+        .withColumn("is_new", F.col("batch") == key)
+    )
+    return _verify_estimate(_lsh_candidates(store, max_bucket_size), n_hashes, threshold)
 
 
 def minhash_incremental_survivors(
     new_df: DataFrame, id_col: str, text_col: str, sketch_store: str, threshold: float = 0.8
 ) -> DataFrame:
     """Rows of ``new_df`` left by :func:`minhash_incremental_pairs` against
-    ``sketch_store`` (which it extends), first-seen-wins: a broadcast
-    left-anti join drops each distinct ``id_b``.  The rule assumes ids grow
-    across batches: a new doc whose stored twin has the larger id is kept."""
+    ``sketch_store`` (which it extends), first-seen-wins: each pair dooms
+    its new side, the larger id when both are new, and a broadcast
+    left-anti join drops the doomed ids."""
     pairs = minhash_incremental_pairs(
         new_df, id_col, text_col, sketch_store, threshold=threshold
     )
-    doomed = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    new_ids = new_df.select(F.col(id_col).alias("id_b"), F.lit(True).alias("b_new"))
+    doomed = pairs.join(F.broadcast(new_ids.distinct()), "id_b", "left").select(
+        F.when(F.col("b_new"), F.col("id_b")).otherwise(F.col("id_a")).alias(id_col)
+    ).distinct()
     return new_df.join(F.broadcast(doomed), id_col, "left_anti")
 
 

@@ -102,8 +102,7 @@ def ingest_tick(
     over the other committed months plus the staged one must reach
     ``RECALL_FLOOR``, else :class:`RecallGateError` with the sink
     untouched.  The commit is :func:`swap_dir` of the month's partition.
-    A retry after any fault dooms the same docs (replays: see
-    ``minhash_incremental_pairs``).
+    A retry after any fault dooms the same docs.
     """
     spark = source.sparkSession
     docs = source.filter((F.col("year") == year) & (F.col("month") == month))

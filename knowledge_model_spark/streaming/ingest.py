@@ -105,10 +105,9 @@ def stream_dedup_ingest(
 
     The composed form of the reference's monthly ingest + skip-if-exists
     idempotency (pipeline.py:78-81) — except dedup here is NEAR-dup over
-    the whole accumulated corpus.  The sketch store grows by one append
-    per batch, and candidate work is ∝ corpus size: every batch
-    re-shuffles the whole store into the bucket groupBy (pruning it to
-    the batch's buckets is ROADMAP direction 4).
+    the whole accumulated corpus.  Candidate work is ∝ corpus size: every
+    batch re-shuffles the whole store into the bucket groupBy (pruning it
+    to the batch's buckets is ROADMAP direction 4).
     """
     from knowledge_model_spark.operators.dedup import minhash_incremental_survivors
 

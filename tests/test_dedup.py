@@ -314,6 +314,70 @@ def test_minhash_incremental_pairs_frees_its_sketch_cache(spark, tmp_path):
     assert persistent() - before == set()
 
 
+def test_minhash_incremental_replay_replaces_its_sketches(spark, tmp_path):
+    """A replayed batch returns the rows of its first run, each pair once,
+    and overwrites its own store partition instead of appending to it."""
+    from knowledge_model_spark.operators.dedup import minhash_incremental_pairs
+
+    store = str(tmp_path / "sketches")
+    batch1 = spark.createDataFrame(
+        [(0, BASE), (4, "an unrelated first document")], ["doc_id", "text"]
+    )
+    batch2 = spark.createDataFrame(
+        [(7, BASE.replace("quick", "rapid")), (8, BASE.replace("quick", "rapid"))],
+        ["doc_id", "text"],
+    )
+    minhash_incremental_pairs(batch1, "doc_id", "text", store).collect()
+    first = sorted(minhash_incremental_pairs(batch2, "doc_id", "text", store).collect())
+    n_store = spark.read.parquet(store).count()
+    replay = sorted(minhash_incremental_pairs(batch2, "doc_id", "text", store).collect())
+    assert {(r["id_a"], r["id_b"]) for r in first} == {(0, 7), (0, 8), (7, 8)}
+    assert replay == first and len(set(replay)) == len(replay)
+    assert spark.read.parquet(store).count() == n_store == 4
+
+
+@pytest.mark.parametrize(
+    "edge", [[], [(20, ""), (21, "!!! ...")]], ids=["zero_rows", "empty_texts"]
+)
+def test_minhash_incremental_edge_batches(spark, tmp_path, edge):
+    """A batch with no rows, or whose texts normalize to empty, finds no
+    pairs and leaves the store readable; the next batch finds its pairs
+    against the batch before it."""
+    from knowledge_model_spark.operators.dedup import minhash_incremental_pairs
+
+    store = str(tmp_path / "sketches")
+    ticks = [[(0, BASE)], edge, [(30, BASE.replace("quick", "rapid"))]]
+    got = []
+    for rows in ticks:
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
+        pairs = minhash_incremental_pairs(batch, "doc_id", "text", store)
+        got.append({(r["id_a"], r["id_b"]) for r in pairs.collect()})
+        assert spark.read.parquet(store).filter(F.col("sig").isNotNull()).count() >= 1
+    assert got == [set(), set(), {(0, 30)}]
+
+
+def test_minhash_incremental_survivors_doom_the_later_arrival(spark, tmp_path):
+    """First-seen-wins by arrival, not by id: batch 2's near-dup of a
+    stored doc is dropped even when its id is smaller; within one batch
+    the larger id of a pair goes."""
+    from knowledge_model_spark.operators.dedup import minhash_incremental_survivors
+
+    store = str(tmp_path / "sketches")
+    batch1 = spark.createDataFrame(
+        [(10, BASE), (11, "an unrelated first document")], ["doc_id", "text"]
+    )
+    batch2 = spark.createDataFrame(
+        [(3, BASE.replace("quick", "rapid")), (12, "another unrelated one here"),
+         (14, "a fresh text of batch two"), (13, "a fresh text of batch two")],
+        ["doc_id", "text"],
+    )
+    kept = []
+    for batch in (batch1, batch2):
+        survivors = minhash_incremental_survivors(batch, "doc_id", "text", store)
+        kept.append(sorted(r["doc_id"] for r in survivors.collect()))
+    assert kept == [[10, 11], [12, 13]]
+
+
 # ------------------------------------------------------ semantic dedup
 
 

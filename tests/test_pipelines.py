@@ -144,9 +144,10 @@ def _fail_once(monkeypatch, name):
 def test_tick_replayed_after_faults_equals_clean_run(
     spark, monthly_source, self_queries, tmp_path, monkeypatch
 ):
-    """A fault after the dedup has appended to the sketch store, then one
+    """A fault after the dedup has written to the sketch store, then one
     inside the gate: the retried ticks doom the same docs and leave the
-    same sink, vectors included, as a clean run on a fresh sink."""
+    same sink, vectors included, and the same sketch store as a clean run
+    on a fresh sink."""
     from knowledge_model_spark.operators import dedup
 
     real_pairs, doomed = dedup.minhash_incremental_pairs, []
@@ -173,6 +174,13 @@ def test_tick_replayed_after_faults_equals_clean_run(
     assert doomed == clean_doomed[:1] * 2 + clean_doomed
     rows = [sorted(spark.read.parquet(p).collect()) for p in (clean, replayed)]
     assert rows[0] == rows[1] and len(rows[0]) > 0
+    stores = [
+        sorted(
+            spark.read.parquet(os.path.join(p, "_sketches")).select("id", "sig", "bkt").collect()
+        )
+        for p in (clean, replayed)
+    ]
+    assert stores[0] == stores[1] and len(stores[0]) > 0
 
 
 def test_audited_metrics_single_scan(spark, tables):
