@@ -17,6 +17,8 @@ deterministic so results are reproducible across runs and cluster sizes.
 
 from __future__ import annotations
 
+import glob
+import os
 from functools import lru_cache
 
 import numpy as np
@@ -694,36 +696,39 @@ def minhash_incremental_pairs(
     corpus — the continuous-ingest form of :func:`minhash_lsh_pairs`.
 
     The reference rebuilds its entire FAISS index every month
-    (pipeline.py:215-226, O(corpus) per ingest); the incremental shape a
-    100 TB pipeline needs instead is: sketch ONLY the new batch (one UDF
-    pass over new rows), join its banded buckets against a durable
-    Parquet ``sketch_store`` of all previously-sketched documents, and
-    emit new-vs-old and new-vs-new pairs.  Cost per batch is ∝ corpus
-    size: every stored band row is re-read and re-shuffled into the
-    ``(band, bucket)`` groupBy of :func:`_lsh_candidates` (pruning the
-    store to the batch's buckets is ROADMAP direction 4).
+    (pipeline.py:215-226); here only the new batch is sketched, and its
+    buckets are joined against a Parquet ``sketch_store`` of every earlier
+    batch.  Cost per batch is ∝ corpus size: the stored band rows are
+    re-shuffled into the ``(band, bucket)`` groupBy of
+    :func:`_lsh_candidates` (pruning them is ROADMAP direction 4).
 
-    The store holds one ``batch=<key>`` partition of (id, sig, bkt) per
-    distinct set of batch ids, keyed by their count and the xor of their
-    hashes.  The batch's sketches are written there first, so a replay
-    replaces them; then the whole store is read back (lazily), and the
-    rows of this partition are the new ones.  Old-vs-old pairs are
-    deliberately NOT re-emitted (they were reported when those batches
-    arrived).  Pairs are (id_a < id_b) with the same ``est_jaccard``
-    verification as the batch operator, which is this operator over an
-    empty store.
+    The store, a local directory, holds one ``batch=<rank>-<key>``
+    partition of (id, sig, bkt) per distinct id set: ``key`` is the ids'
+    count and hash xor, ``rank`` the arrival order, which a replay keeps
+    while it overwrites the partition.  The store up to that rank is read
+    back lazily: a replay returns its first run's pairs, every old side
+    arrived earlier, and old-vs-old pairs are not re-emitted.  Pairs are
+    (id_a < id_b), verified as in the batch operator (this operator over
+    an empty store).  A flat store is refused.
     """
-    spark = new_df.sparkSession
+    root = glob.escape(sketch_store)
+    if glob.glob(os.path.join(root, "*.parquet")):  # the former append-only layout
+        raise ValueError(f"{sketch_store}: Parquet files at the root, not in batch=* partitions")
     h = new_df.select(F.xxhash64(id_col).alias("h")).distinct()
     xor, n = h.agg(F.bit_xor("h"), F.count("*")).first()
     key = f"{n}-{(xor or 0) & (2**64 - 1):016x}"
+    parts = [os.path.basename(d)[len("batch="):] for d in glob.glob(os.path.join(root, "batch=*"))]
+    ranks = {p.split("-", 1)[1]: int(p.split("-", 1)[0]) for p in parts}  # key -> arrival rank
+    rank = ranks.get(key, max(ranks.values(), default=-1) + 1)
+    part = f"{rank}-{key}"
     raw = _minhash_raw(new_df, id_col, text_col, k, n_hashes, bands, persist=False)
     sk = raw.select("id", F.col("mh.sig").alias("sig"), F.col("mh.bkt").alias("bkt"))
-    sk.write.mode("overwrite").parquet(f"{sketch_store}/batch={key}")
+    sk.write.mode("overwrite").parquet(os.path.join(sketch_store, f"batch={part}"))
+    schema = sk.withColumn("batch", F.lit(part)).schema
     store = (
-        spark.read.schema(sk.withColumn("batch", F.lit(key)).schema).parquet(sketch_store)
-        .filter(F.col("sig").isNotNull())
-        .withColumn("is_new", F.col("batch") == key)
+        new_df.sparkSession.read.schema(schema).parquet(sketch_store)
+        .filter(F.col("sig").isNotNull() & (F.split("batch", "-")[0].cast("long") <= rank))
+        .withColumn("is_new", F.col("batch") == part)
     )
     return _verify_estimate(_lsh_candidates(store, max_bucket_size), n_hashes, threshold)
 
@@ -733,15 +738,14 @@ def minhash_incremental_survivors(
 ) -> DataFrame:
     """Rows of ``new_df`` left by :func:`minhash_incremental_pairs` against
     ``sketch_store`` (which it extends), first-seen-wins: each pair dooms
-    its new side, the larger id when both are new, and a broadcast
-    left-anti join drops the doomed ids."""
+    its new side (its other side arrived earlier), the larger id when both
+    are new, and a broadcast left-anti join drops the doomed ids."""
     pairs = minhash_incremental_pairs(
         new_df, id_col, text_col, sketch_store, threshold=threshold
     )
-    new_ids = new_df.select(F.col(id_col).alias("id_b"), F.lit(True).alias("b_new"))
-    doomed = pairs.join(F.broadcast(new_ids.distinct()), "id_b", "left").select(
-        F.when(F.col("b_new"), F.col("id_b")).otherwise(F.col("id_a")).alias(id_col)
-    ).distinct()
+    new_b = new_df.select(F.col(id_col).alias("b")).distinct()
+    doomed = pairs.join(F.broadcast(new_b), F.col("id_b") == F.col("b"), "left")
+    doomed = doomed.select(F.coalesce("b", "id_a").alias(id_col)).distinct()
     return new_df.join(F.broadcast(doomed), id_col, "left_anti")
 
 

@@ -334,6 +334,23 @@ def test_minhash_incremental_replay_replaces_its_sketches(spark, tmp_path):
     assert {(r["id_a"], r["id_b"]) for r in first} == {(0, 7), (0, 8), (7, 8)}
     assert replay == first and len(set(replay)) == len(replay)
     assert spark.read.parquet(store).count() == n_store == 4
+    # an earlier batch replayed after a later one keeps its arrival rank:
+    # it pairs with nothing that arrived after it
+    assert minhash_incremental_pairs(batch1, "doc_id", "text", store).collect() == []
+    assert spark.read.parquet(store).count() == n_store
+
+
+def test_minhash_incremental_refuses_a_flat_store(spark, tmp_path):
+    """Sketches written flat at the store root (the former append-only
+    layout) are refused, not silently dropped from the dedup history."""
+    from knowledge_model_spark.operators.dedup import minhash_incremental_pairs
+
+    store = str(tmp_path / "sketches")
+    flat = spark.createDataFrame([(0, [1], [1])], "id long, sig array<long>, bkt array<long>")
+    flat.write.parquet(store)
+    batch = spark.createDataFrame([(1, BASE)], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="batch="):
+        minhash_incremental_pairs(batch, "doc_id", "text", store)
 
 
 @pytest.mark.parametrize(

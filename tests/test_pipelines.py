@@ -76,6 +76,18 @@ def test_continuous_update_is_idempotent_per_partition(spark, monthly_source, tm
     assert spark.read.parquet(sink).count() == first
 
 
+def test_reingested_month_keeps_its_place_in_arrival_order(spark, monthly_source, tmp_path):
+    """Re-ingesting month 1 after month 3 keeps one of each near-dup pair
+    across them: month 3 doomed doc 8, twin of month 1's doc 12, so the
+    re-ingested month 1 must keep 12."""
+    sink = str(tmp_path / "reingested")
+    while continuous_update(spark, monthly_source, sink) is not None:
+        pass
+    pipelines.ingest_tick(monthly_source, 2024, 1, sink)
+    kept = {r.doc_id for r in spark.read.parquet(sink).select("doc_id").distinct().collect()}
+    assert 8 not in kept and 12 in kept
+
+
 def test_recall_gate_fires(spark, monthly_source, bad_queries, tmp_path):
     sink = str(tmp_path / "clean3")
     with pytest.raises(RecallGateError):
