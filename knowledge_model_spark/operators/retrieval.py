@@ -425,30 +425,29 @@ def recall_at_k(
 ) -> DataFrame:
     """recall@K over a golden label set (reference: eval_snapshot.py:91-100).
 
-    One row: (n_queries, n_hit, recall).  Join golden labels to top-K hits
-    (semi-join semantics), average the hit indicator.
+    One row: (n_queries, n_hit, recall).  ``golden`` is read once: a left
+    join to the distinct top-K (query, doc) pairs flags each label, and a
+    query is a hit when any of its labels is.  A null query id is one
+    query that never hits.
     """
-    topk = hits.filter(F.col("rank") <= k).select(query_id, hit_doc)
-    hit_flags = (
+    topk = (
+        hits.filter(F.col("rank") <= k)
+        .select(F.col(query_id).alias("__q"), F.col(hit_doc).alias("__d"))
+        .distinct()
+    )
+    per_query = (
         golden.join(
             topk,
-            (golden[query_id] == topk[query_id])
-            & (golden[expected_doc] == topk[hit_doc]),
-            "left_semi",
+            (golden[query_id] == topk["__q"]) & (golden[expected_doc] == topk["__d"]),
+            "left",
         )
-        .select(query_id)
-        .distinct()
-        .withColumn("hit", F.lit(1))
+        .groupBy(query_id)
+        .agg(F.max(F.col("__q").isNotNull().cast("int")).alias("hit"))
     )
-    return (
-        golden.select(query_id)
-        .distinct()
-        .join(hit_flags, query_id, "left")
-        .agg(
-            F.count("*").alias("n_queries"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
-            F.round(F.avg(F.coalesce(F.col("hit"), F.lit(0))), 6).alias("recall"),
-        )
+    return per_query.agg(
+        F.count("*").alias("n_queries"),
+        F.sum("hit").alias("n_hit"),
+        F.round(F.avg("hit"), 6).alias("recall"),
     )
 
 

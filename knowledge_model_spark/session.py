@@ -9,6 +9,12 @@ chosen to also be the right default on a large cluster:
 - shuffle.partitions=32 locally (matches cores); on a real cluster this is
   superseded by AQE's coalescing from an initial larger number.
 - Arrow enabled for the pandas-UDF paths (embedding, sentence chunking).
+- Python workers start from the engine's daemon entry,
+  ``knowledge_model_spark.pyworker``: up to CPython 3.12 the stock worker
+  re-parses every zip archive on its path (pyspark.zip, py4j, the
+  spark-core jar) before each task, over half the wall time of a one-row
+  Python job.  The package root goes on the workers' PYTHONPATH so the
+  daemon can be imported whatever the driver's cwd.
 """
 
 from __future__ import annotations
@@ -33,6 +39,8 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "knowledge_model_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession."""
@@ -51,6 +59,8 @@ def get_spark(app_name: str = "knowledge_model_spark", cpus: int | None = None) 
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "knowledge_model_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()
 
@@ -143,6 +153,27 @@ def spread_vectors(df: DataFrame, per_partition_bytes: int = 256 * 1024) -> Data
     return ensure_min_partitions(df, target)
 
 
+class _Tables(dict):
+    """Loaded tables.  The ``*_spread`` variants are built on first read
+    (neither ``ask`` nor the ingest tick reads one) and kept from then on."""
+
+    def __missing__(self, key: str) -> DataFrame:
+        if key == "documents_spread" and "documents" in self:
+            # for per-row-heavy plans (regex batteries, sketch UDFs): a
+            # single local parquet split would otherwise run them on one core
+            df = ensure_min_partitions(self["documents"])
+        elif key == "embeddings_spread" and "embeddings" in self:
+            # for vector-HOF-heavy plans (dot products, LSH projections): the
+            # sf0.1 parquet is one split.  Width is bytes-derived (r12):
+            # per-row vector work is microseconds, so a ~1 MB table spread 32
+            # ways paid more in task scheduling than it bought.
+            df = spread_vectors(self["embeddings"])
+        else:
+            raise KeyError(key)
+        self[key] = df
+        return df
+
+
 # (session id, sf_dir) → loaded tables.  Every registered query calls
 # load_tables; memoizing skips the repeated parquet-footer reads when a
 # harness runs the whole registry against one session.  DataFrames are
@@ -189,7 +220,7 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     # also take effect on externally-built sessions (the driver's).
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    tables: dict[str, DataFrame] = {}
+    tables = _Tables()
     for name in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
@@ -202,17 +233,5 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
                 df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
             df.createOrReplaceTempView(name)
             tables[name] = df
-    if "documents" in tables:
-        # pre-spread variant for per-row-heavy plans (regex batteries,
-        # sketch UDFs): a single local parquet split would otherwise run
-        # them on one core.  Computed once per (session, sf_dir).
-        tables["documents_spread"] = ensure_min_partitions(tables["documents"])
-    if "embeddings" in tables:
-        # same for vector-HOF-heavy plans (dot products, LSH projections):
-        # the sf0.1 parquet is one row group = one split, which serializes
-        # the whole scoring stage on a single core.  Width is bytes-derived
-        # (r12): per-row vector work is microseconds, so a ~1 MB table
-        # spread 32 ways paid more in task scheduling than it bought.
-        tables["embeddings_spread"] = spread_vectors(tables["embeddings"])
     _TABLE_CACHE[key] = tables
     return tables

@@ -6,6 +6,7 @@ backbone every other operator reuses (SURVEY.md §7 Phase 0).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from knowledge_model_spark.functions.chunking import split_passages
@@ -143,6 +144,42 @@ def test_load_tables_repoints_views_per_call(spark):
     assert spark.table("orders").count() == small
     load_tables(spark, ORACLE_SF_DIR)
     assert spark.table("orders").count() == big
+
+
+def test_load_tables_builds_spread_variants_on_first_read(spark, monkeypatch):
+    """load_tables spreads neither documents nor embeddings until a
+    ``*_spread`` key is read, then keeps the variant; a registry query
+    over documents_spread returns the rows of the unspread table."""
+    from tests.conftest import SF_DIR
+    from knowledge_model_spark import session
+    from knowledge_model_spark.functions.text_analysis import lang_id
+    from knowledge_model_spark.plans import load_registry
+
+    calls = []
+
+    def recording(fn):
+        def wrapped(df, *args, **kwargs):
+            calls.append(fn.__name__)
+            return fn(df, *args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(session, "_TABLE_CACHE", {})
+    monkeypatch.setattr(session, "ensure_min_partitions", recording(session.ensure_min_partitions))
+    monkeypatch.setattr(session, "spread_vectors", recording(session.spread_vectors))
+    t = session.load_tables(spark, SF_DIR)
+    t["documents"], t["embeddings"]
+    assert calls == []
+
+    rows = load_registry()["text_lang_id"].fn(spark, SF_DIR).collect()
+    assert calls == ["ensure_min_partitions"]
+    want = t["documents"].select("doc_id", "lang", lang_id(F.col("text")).alias("pred_lang"))
+    assert sorted(rows) == sorted(want.collect())
+    assert t["documents_spread"] is t["documents_spread"]
+    t["embeddings_spread"]
+    assert calls[:2] == ["ensure_min_partitions", "spread_vectors"]
+    with pytest.raises(KeyError):
+        t["nation_spread"]
 
 
 def test_every_registered_query_survives_empty_tables(spark, tmp_path):

@@ -480,3 +480,62 @@ def test_resident_snapshots_under_concurrent_callers(spark):
     assert not errors and not any(t.is_alive() for t in threads)
     assert len(got) == 24 and all(rows == want[ix] for ix, rows in got)
     assert len(retrieval._SNAPSHOTS) <= 2
+
+
+def _recall_at_k_two_scans(hits, golden, k):
+    """recall_at_k as first written: a semi-join for the hit queries and a
+    second scan of ``golden`` for the distinct query ids (the reference)."""
+    topk = hits.filter(F.col("rank") <= k).select("query_id", "doc_id")
+    hit_flags = (
+        golden.join(
+            topk,
+            (golden["query_id"] == topk["query_id"])
+            & (golden["expected_doc_id"] == topk["doc_id"]),
+            "left_semi",
+        )
+        .select("query_id")
+        .distinct()
+        .withColumn("hit", F.lit(1))
+    )
+    return (
+        golden.select("query_id")
+        .distinct()
+        .join(hit_flags, "query_id", "left")
+        .agg(
+            F.count("*").alias("n_queries"),
+            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
+            F.round(F.avg(F.coalesce(F.col("hit"), F.lit(0))), 6).alias("recall"),
+        )
+    )
+
+
+_QIDS = st.sampled_from(["a", "b", "c", None])
+_DOCS = st.sampled_from(["d1", "d2", "d3", None])
+
+
+@given(
+    golden=st.lists(st.tuples(_QIDS, _DOCS), max_size=8),
+    hits=st.lists(st.tuples(_QIDS, _DOCS, st.integers(1, 6)), max_size=10),
+    k=st.integers(1, 5),
+)
+@example(golden=[], hits=[("a", "d1", 1)], k=3)
+@example(
+    golden=[("a", "d1"), ("a", "d1"), ("a", "d2"), (None, "d1"), (None, None), ("b", None)],
+    hits=[("a", "d1", 1), ("a", "d1", 2), (None, "d1", 1), ("b", None, 1), ("c", "d3", 1)],
+    k=2,
+)
+@example(golden=[("a", "d1"), ("b", "d2")], hits=[("a", "d1", 4), ("b", "d2", 3)], k=3)
+@settings(**_RESIDENT_SETTINGS)
+def test_recall_at_k_equals_two_scan_reference(spark, golden, hits, k):
+    """recall_at_k reads ``golden`` once and returns the reference's row and
+    schema: null query ids (one query, never a hit), null expected and hit
+    docs, duplicate golden rows, hits ranked past k, and an empty golden
+    set, which gives (0, None, None)."""
+    g = spark.createDataFrame(golden, "query_id string, expected_doc_id string")
+    h = spark.createDataFrame(hits, "query_id string, doc_id string, rank int")
+    got = retrieval.recall_at_k(h, g, k=k)
+    want = _recall_at_k_two_scans(h, g, k)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    if not golden:
+        assert tuple(got.first()) == (0, None, None)
