@@ -459,10 +459,11 @@ def main() -> None:
                 # no int64 overflow — and order-independent.
                 df.agg(F.bit_xor(F.xxhash64(F.struct(*df.columns)))).collect()
             dt = time.perf_counter() - t0
-            # queries that persist() intermediates (minhash/cosine-LSH
-            # sketches) would otherwise hand rep 2 a warm cache via the
-            # CacheManager's canonicalized-plan matching — every rep must
-            # pay the full plan, or min-of-reps overstates
+            # queries that persist() intermediates (bow_cosine_pairs,
+            # ivfpq_top_k, bitmap_distinct_rollup) would otherwise hand
+            # rep 2 a warm cache via the CacheManager's canonicalized-plan
+            # matching — every rep must pay the full plan, or min-of-reps
+            # overstates
             spark.catalog.clearCache()
             return dt
 

@@ -30,6 +30,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _NORM_SQL = "regexp_replace(lower({col}), '[^a-z0-9 ]', ' ')"
+# learn_bpe_merges and learn_unigram_lm train on the driver when the
+# materialized distinct-word table holds at most this many rows.
+DRIVER_VOCAB_GATE = 200_000
 
 
 def _spaced_words(col: str) -> str:
@@ -116,7 +119,6 @@ def learn_bpe_merges(
     df: DataFrame,
     text_col: str,
     n_merges: int = 20,
-    driver_vocab_gate: int = 200_000,
 ) -> list[tuple[str, str]]:
     """Greedy BPE merge learning: ONE corpus scan, then vocab-sized work.
 
@@ -152,7 +154,7 @@ def learn_bpe_merges(
     # is unchanged: one vocab-table aggregate per round, driver sees
     # one (pair, count) row per round.
     n_vocab = words.count()
-    if n_vocab <= driver_vocab_gate:
+    if n_vocab <= DRIVER_VOCAB_GATE:
         rows = [(r["w"], r["n"]) for r in words.collect()]
         return _learn_bpe_merges_local(rows, n_merges)
     merges: list[tuple[str, str]] = []
@@ -271,7 +273,6 @@ def learn_unigram_lm(
     seed_multi: int = 192,
     max_piece_len: int = 6,
     n_rounds: int = 4,
-    driver_vocab_gate: int = 200_000,
 ) -> list[tuple[str, int, float]]:
     """Unigram-LM subword vocabulary training (Kudo, ACL'18 — the
     SentencePiece unigram model), Spark-shaped and fully deterministic.
@@ -351,7 +352,7 @@ def learn_unigram_lm(
         # tests/test_tokenize.py).  Above the gate — vocab grows with
         # any real corpus — the distributed path is byte-for-byte
         # unchanged.
-        if words.count() <= int(driver_vocab_gate):
+        if words.count() <= DRIVER_VOCAB_GATE:
             rows = [(r["w"], r["n"]) for r in words.collect()]
             return _learn_unigram_lm_from_rows(
                 rows, vocab_size, max_piece_len, seed_multi, n_rounds

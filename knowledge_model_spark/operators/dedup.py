@@ -225,30 +225,39 @@ def _ngram_jaccard_prefix(sets: DataFrame, threshold: float) -> DataFrame:
 
 # --------------------------------------------------------- MinHash + LSH
 
+# The one MinHash geometry: every sketch, including each batch in a
+# minhash_incremental_pairs store, is N_HASHES hashes of word
+# SHINGLE_LEN-shingles in N_BANDS bands, so stored and new sketches agree.
+SHINGLE_LEN = 5
 N_HASHES = 128
+N_BANDS = 32
+# Buckets larger than this are skipped by the MinHash candidate kernel.
+MAX_BUCKET_SIZE = 1000
 # 31-bit Mersenne prime: a,b,x < 2^31 keeps a*x + b < 2^62 — no 64-bit
 # overflow, safe under ANSI mode.
 _P31 = (1 << 31) - 1
 
 
-@lru_cache(maxsize=8)
-def _minhash_udf(n_hashes: int, bands: int, k: int):
+@lru_cache(maxsize=1)
+def _minhash_udf():
     """Arrow-batched minhash: normalized text → struct(sig, bkt).
 
-    The whole sketch — word k-shingling, shingle hashing
-    (pandas siphash, fixed key → deterministic across processes), and
-    the n_hashes-way (a·x + b) mod p min-reduction — runs vectorized in
-    one pandas UDF.  ~30 µs/row vs ~1.5 ms/row for the expression
-    formulation, whose lambda bodies re-evaluated the regex word-split
-    per shingle and whose 32 band expressions re-inlined the whole
-    signature.  The UDF is also a projection barrier: the sketch is
-    computed exactly once per pipeline branch.  All constants come from
-    a fixed-seed PRNG: stable across runs, partitionings, cluster sizes.
+    The whole sketch — word ``SHINGLE_LEN``-shingling, shingle hashing
+    (pandas siphash, fixed key → deterministic across processes), the
+    ``N_HASHES``-way (a·x + b) mod p min-reduction and the ``N_BANDS``
+    band keys — runs vectorized in one pandas UDF.  ~30 µs/row vs
+    ~1.5 ms/row for the expression formulation, whose lambda bodies
+    re-evaluated the regex word-split per shingle and whose 32 band
+    expressions re-inlined the whole signature.  The UDF is also a
+    projection barrier: the sketch is computed exactly once per pipeline
+    branch.  All constants come from a fixed-seed PRNG: stable across
+    runs, partitionings, cluster sizes.
     """
+    k = SHINGLE_LEN
     rng = np.random.default_rng(20260813)
-    a = rng.integers(1, _P31, size=n_hashes, dtype=np.int64)
-    b = rng.integers(0, _P31, size=n_hashes, dtype=np.int64)
-    rows_per_band = n_hashes // bands
+    a = rng.integers(1, _P31, size=N_HASHES, dtype=np.int64)
+    b = rng.integers(0, _P31, size=N_HASHES, dtype=np.int64)
+    rows_per_band = N_HASHES // N_BANDS
     band_mix = rng.integers(1, _P31, size=rows_per_band, dtype=np.int64)
 
     @F.pandas_udf("struct<sig: array<long>, bkt: array<long>>")
@@ -273,8 +282,8 @@ def _minhash_udf(n_hashes: int, bands: int, k: int):
             # < 2^62 but summing rows_per_band of them could pass 2^63,
             # so accumulate (acc + sig*mix) % p stepwise — acc stays
             # < 2^31 and every intermediate < 2^62 + 2^31.
-            band_sig = sig.reshape(bands, rows_per_band)
-            bkt = np.zeros(bands, dtype=np.int64)
+            band_sig = sig.reshape(N_BANDS, rows_per_band)
+            bkt = np.zeros(N_BANDS, dtype=np.int64)
             for r in range(rows_per_band):
                 bkt = (bkt + band_sig[:, r] * band_mix[r]) % _P31
             sigs.append(sig)
@@ -284,40 +293,18 @@ def _minhash_udf(n_hashes: int, bands: int, k: int):
     return udf
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5, n_hashes: int = N_HASHES
-) -> DataFrame:
-    """(id, sig: array<bigint>) MinHash signatures over word k-shingles."""
-    raw = _minhash_raw(df, id_col, text_col, k, n_hashes, n_hashes // 4, persist=False)
-    return _sketch_columns(raw).select("id", "sig")
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, sig: array<bigint>) ``N_HASHES``-hash MinHash signatures over
+    word ``SHINGLE_LEN``-shingles; empty texts have no row."""
+    return _sketch_columns(_minhash_raw(df, id_col, text_col)).select("id", "sig")
 
 
-def _minhash_raw(
-    df: DataFrame, id_col: str, text_col: str, k: int, n_hashes: int, bands: int,
-    persist: bool,
-) -> DataFrame:
-    """(id, mh) sketch-UDF output, cached when ``persist`` (caller unpersists)."""
-    from knowledge_model_spark.session import ensure_min_partitions
-
-    mh = _minhash_udf(n_hashes, bands, k)
-    # The sketch kernel is the pipeline's Python-bound stage — spread it
-    # across all cores even when the source is a single local split.
-    raw = ensure_min_partitions(df).select(
+def _minhash_raw(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, mh) sketch-UDF output over ``df``'s own partitions."""
+    return df.select(
         F.col(id_col).alias("id"),
-        mh(normalize_for_dedup(F.col(text_col))).alias("mh"),
+        _minhash_udf()(normalize_for_dedup(F.col(text_col))).alias("mh"),
     )
-    if persist:
-        # Persist the RAW udf output and materialize it eagerly: the
-        # null-filter gets predicate-pushed below the projection and the
-        # two struct-field reads re-inline the call, so without a hard
-        # barrier the sketch UDF evaluates up to 4x (measured ~4x the
-        # sketch cost at sf0.1); downstream branches then read the cache.
-        # At true 100 TB scale, write this table to Parquet once instead.
-        from pyspark import StorageLevel
-
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-        raw.count()
-    return raw
 
 
 def _sketch_columns(raw: DataFrame) -> DataFrame:
@@ -391,11 +378,11 @@ def _n_match():
     return F.size(F.filter(eq, lambda v: v == 1))
 
 
-def _verify_estimate(cands: DataFrame, n_hashes: int, threshold: float) -> DataFrame:
+def _verify_estimate(cands: DataFrame, threshold: float) -> DataFrame:
     """(id_a, id_b, est_jaccard) of the candidates whose signature estimate,
     rounded to 6 places, is ≥ ``threshold``."""
     return (
-        cands.withColumn("est_jaccard", F.round(_n_match() / F.lit(float(n_hashes)), 6))
+        cands.withColumn("est_jaccard", F.round(_n_match() / F.lit(float(N_HASHES)), 6))
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -405,37 +392,40 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    n_hashes: int = N_HASHES,
-    bands: int = 32,
     threshold: float = 0.8,
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int | None = MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Near-dup candidate pairs via MinHash LSH banding, verified by
     signature-estimated Jaccard ≥ threshold.
 
-    bands=32 × rows=4 over 128 hashes → s-curve threshold ≈ (1/32)^(1/4)
-    ≈ 0.42, catching 0.8-similar pairs with high probability.  This is
+    ``N_BANDS`` = 32 bands × 4 rows over ``N_HASHES`` = 128 hashes of word
+    5-shingles → s-curve threshold ≈ (1/32)^(1/4) ≈ 0.42, catching
+    0.8-similar pairs with high probability.  This is
     :func:`minhash_incremental_pairs` over an empty store: every sketch
     is new, and :func:`_lsh_candidates` groups the slim banded rows by
     (band, bucket) and explodes in-bucket pairs — linear-ish in corpus
     size, the 100 TB path.
 
-    ``max_bucket_size`` (default 1000) skips degenerate hot buckets the
-    way web-scale dedup pipelines drop stop-buckets: even with the
+    ``max_bucket_size`` (default ``MAX_BUCKET_SIZE``, 1000) skips
+    degenerate hot buckets the way web-scale dedup pipelines drop
+    stop-buckets: even with the
     incremental O(B)-per-row expansion (:func:`_bucket_pairs`), an
     uncapped boilerplate bucket of 100k ids still costs B²/2 ≈ 5e9
     candidate comparisons in one task — a straggler, if no longer an
     OOM.  A capped bucket only loses pairs that every OTHER band also
     skips; recall vs exact Jaccard with the cap on is gated in
     tests/test_dedup.py.
+
+    The sketch UDF runs once, over ``df``'s own partitions, in an eager
+    ``localCheckpoint`` job; the returned pairs are lazy.
     """
-    # The sketch table feeds three plan branches (bucket groupBy, two
-    # signature join-backs); persisting the raw UDF output computes it
-    # exactly once.
-    raw = _minhash_raw(df, id_col, text_col, k, n_hashes, bands, persist=True)
+    # The sketches feed three plan branches (bucket groupBy, two signature
+    # join-backs), and without a barrier the pushed-down null filter and
+    # the two struct-field reads re-inline the UDF call (measured ~4x the
+    # sketch cost at sf0.1), so the raw UDF output is checkpointed.
+    raw = _minhash_raw(df, id_col, text_col).localCheckpoint(eager=True)
     sk = _sketch_columns(raw).withColumn("is_new", F.lit(True))
-    return _verify_estimate(_lsh_candidates(sk, max_bucket_size), n_hashes, threshold)
+    return _verify_estimate(_lsh_candidates(sk, max_bucket_size), threshold)
 
 
 # --------------------------------------------------------------- SimHash
@@ -519,7 +509,7 @@ def simhash_pairs(
     # The signature is ONE long, so (unlike minhash's 128-long array) it
     # rides through the block groupBy at negligible shuffle cost: a single
     # aggregation replaces the former self-join + two-sided sketch scan,
-    # and no persist/eager-count job is needed — the 63-bit-sum agg runs
+    # and no materializing job is needed — the 63-bit-sum agg runs
     # exactly once.
     sigs = simhash(df, id_col, text_col)
     return hash64_hamming_pairs(sigs, max_distance, max_bucket_size)
@@ -585,14 +575,11 @@ def embedding_near_dup_pairs_lsh(
     vec_col: str,
     threshold: float = 0.95,
     dim: int = 64,
-    n_tables: int = 8,
-    n_planes: int = 10,
-    probe_hamming: int = 1,
 ) -> DataFrame:
     """Near-dup pairs by cosine ≥ threshold — LSH-bucketed, the 100 TB path.
 
-    Candidate generation: each vector maps to ``n_tables`` hyperplane-sign
-    buckets (one vectorized matmul per Arrow batch, see
+    Candidate generation: each vector maps to 8 tables of 10-plane
+    hyperplane-sign buckets (one vectorized matmul per Arrow batch, see
     similarity._hyperplane_buckets_udf); one join side additionally probes
     every bucket with single sign bits flipped (Hamming-1 multiprobe).
     Pairs meet only inside a (table, bucket) cell, so candidate count is
@@ -606,29 +593,27 @@ def embedding_near_dup_pairs_lsh(
     with the true cosine).  The cosine filter runs BEFORE the pair
     dropDuplicates: verifying a duplicate candidate is a map-side 64-mult
     dot, while deduplicating first would shuffle every candidate pair —
-    survivors (actual near-dups) are the only rows worth a shuffle.
+    survivors (actual near-dups) are the only rows worth a shuffle.  The
+    bucket sketches are computed once, in an eager ``localCheckpoint``
+    job; the returned pairs are lazy.
     """
     from knowledge_model_spark.operators.similarity import _hyperplane_buckets_udf
     from knowledge_model_spark.session import spread_vectors
 
+    n_planes = 10
     base = spread_vectors(df).select(
         F.col(id_col).alias("id"), l2_normalize(F.col(vec_col)).alias("v")
     )
-    bk = _hyperplane_buckets_udf(n_tables, n_planes, dim)
-    sk = base.withColumn("bks", bk(F.col("v")))
-    from pyspark import StorageLevel
-
-    # The sketch feeds both self-join sides — compute the UDF once;
-    # eager count so concurrent stages can't race the cache population.
-    sk = sk.persist(StorageLevel.MEMORY_AND_DISK)
-    sk.count()
+    bk = _hyperplane_buckets_udf(8, n_planes, dim)
+    # The sketch feeds both self-join sides — compute the UDF once.
+    sk = base.withColumn("bks", bk(F.col("v"))).localCheckpoint(eager=True)
 
     plain = sk.select(
         F.col("id").alias("id_a"),
         F.col("v").alias("va"),
         F.posexplode("bks").alias("tbl", "bkt"),
     )
-    masks = [0] + ([1 << j for j in range(n_planes)] if probe_hamming >= 1 else [])
+    masks = [0] + [1 << j for j in range(n_planes)]
     mask_arr = F.array(*[F.lit(m).cast("long") for m in masks])
     probes = F.flatten(
         F.transform(
@@ -686,11 +671,7 @@ def minhash_incremental_pairs(
     id_col: str,
     text_col: str,
     sketch_store: str,
-    k: int = 5,
-    n_hashes: int = N_HASHES,
-    bands: int = 32,
     threshold: float = 0.8,
-    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Near-dup pairs of a NEW document batch against the accumulated
     corpus — the continuous-ingest form of :func:`minhash_lsh_pairs`.
@@ -709,7 +690,10 @@ def minhash_incremental_pairs(
     back lazily: a replay returns its first run's pairs, every old side
     arrived earlier, and old-vs-old pairs are not re-emitted.  Pairs are
     (id_a < id_b), verified as in the batch operator (this operator over
-    an empty store).  A flat store is refused.
+    an empty store), with buckets capped at ``MAX_BUCKET_SIZE``.  Every
+    batch is sketched with the one module geometry (``SHINGLE_LEN``,
+    ``N_HASHES``, ``N_BANDS``), so stored and new band keys always
+    compare.  A flat store is refused.
     """
     root = glob.escape(sketch_store)
     if glob.glob(os.path.join(root, "*.parquet")):  # the former append-only layout
@@ -721,7 +705,7 @@ def minhash_incremental_pairs(
     ranks = {p.split("-", 1)[1]: int(p.split("-", 1)[0]) for p in parts}  # key -> arrival rank
     rank = ranks.get(key, max(ranks.values(), default=-1) + 1)
     part = f"{rank}-{key}"
-    raw = _minhash_raw(new_df, id_col, text_col, k, n_hashes, bands, persist=False)
+    raw = _minhash_raw(new_df, id_col, text_col)
     sk = raw.select("id", F.col("mh.sig").alias("sig"), F.col("mh.bkt").alias("bkt"))
     sk.write.mode("overwrite").parquet(os.path.join(sketch_store, f"batch={part}"))
     schema = sk.withColumn("batch", F.lit(part)).schema
@@ -730,7 +714,7 @@ def minhash_incremental_pairs(
         .filter(F.col("sig").isNotNull() & (F.split("batch", "-")[0].cast("long") <= rank))
         .withColumn("is_new", F.col("batch") == part)
     )
-    return _verify_estimate(_lsh_candidates(store, max_bucket_size), n_hashes, threshold)
+    return _verify_estimate(_lsh_candidates(store, MAX_BUCKET_SIZE), threshold)
 
 
 def minhash_incremental_survivors(
@@ -756,11 +740,8 @@ def winnow_containment_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 7,
-    w: int = 4,
     threshold: float = 0.5,
     max_df: int | None = 20,
-    max_bucket_size: int | None = None,
     min_fps: int = 5,
 ) -> DataFrame:
     """Doc-inside-doc detection via winnowing-fingerprint containment.
@@ -773,16 +754,16 @@ def winnow_containment_pairs(
     substring inclusion regardless of the length ratio (Broder's
     resemblance-vs-containment distinction, 1997).
 
-    FP(x) is the winnowing fingerprint set (rolling char ``k``-gram
-    hashes → per-``w``-window minima → distinct;
+    FP(x) is the winnowing fingerprint set (rolling char 7-gram
+    hashes → per-4-window minima → distinct;
     functions/text_analysis.py), which guarantees any shared substring of
-    length ≥ k + w - 1 contributes a shared fingerprint.
+    length ≥ 7 + 4 - 1 = 10 contributes a shared fingerprint.
 
     Scale design mirrors the inverted-index dedup ladder: explode
     fingerprints ONCE, cut stop-fingerprints appearing in > ``max_df``
     docs (boilerplate hashes would otherwise pair everything with
     everything; the cut also bounds every bucket at ``max_df`` ids,
-    which is why ``max_bucket_size`` defaults off here) as a
+    which is why no bucket-size cap is applied here) as a
     ``count(*) over (partition by fp)`` window — the df of a
     fingerprint is a fact about the fp partition the bucket groupBy
     needs anyway, so the cut costs no extra pass (the former
@@ -812,7 +793,7 @@ def winnow_containment_pairs(
     # -> 3.0 s when fully fused; 3 jobs -> 1 job this way).
     fps = df.select(
         F.col(id_col).alias("id"),
-        winnow_fingerprints(F.col(text_col), k, w).alias("f"),
+        winnow_fingerprints(F.col(text_col), 7, 4).alias("f"),
     ).localCheckpoint(eager=True)
     ex = fps.select("id", F.explode("f").alias("fp"))
     if max_df is not None:
@@ -837,8 +818,6 @@ def winnow_containment_pairs(
         )
         .filter(F.size("ids") > 1)
     )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket_size)
     common = (
         _bucket_pairs(buckets, "ids")
         .select(
@@ -864,15 +843,14 @@ def winnow_containment_pairs(
 # --------------------------------------------------- semantic (SemDeDup)
 
 
-def _assign_centroids_udf(centroids, n_assign: int = 1):
-    """Arrow-batched top-``n_assign`` cosine centroid assignment: one
-    numpy matmul per batch against the broadcast (k × d) centroid
-    matrix, then a stable argsort — ties break to the lowest cluster
-    index, deterministically.  Returns an array<int> of cluster ids,
-    best first."""
+def _assign_centroids_udf(centroids):
+    """Arrow-batched top-2 cosine centroid assignment: one numpy matmul
+    per batch against the broadcast (k × d) centroid matrix, then a
+    stable argsort — ties break to the lowest cluster index,
+    deterministically.  Returns an array<int> of cluster ids, best first."""
     C = np.asarray(centroids, dtype=np.float64)  # (k, d), L2-normalized
     Ct = C.T.copy()
-    m = max(1, min(n_assign, C.shape[0]))
+    m = min(2, C.shape[0])
 
     @F.pandas_udf("array<int>")
     def assign(vecs: pd.Series) -> pd.Series:
@@ -950,7 +928,6 @@ def semantic_dedup_pairs(
     n_clusters: int = 16,
     threshold: float = 0.95,
     n_iter: int = 2,
-    n_assign: int = 2,
 ) -> DataFrame:
     """Semantic near-dup pairs via cluster-then-verify (SemDeDup,
     Abbas et al. 2023): k-means-style clustering restricts the exact
@@ -965,29 +942,29 @@ def semantic_dedup_pairs(
     scanned once (broadcast k×d matmul in an Arrow batch) and the
     update shuffles k partial sums — the SemDeDup paper's shape, where
     ``n_clusters`` grows ∝ corpus size to hold per-cluster pair cost
-    constant.  Candidate generation assigns each vector to its top
-    ``n_assign`` centroids (IVF multi-assignment): a pair split across a
-    cluster boundary — the classic single-assignment miss — still meets
-    in the runner-up cell, at ``n_assign``× candidate cost.  Lloyd
-    updates use the top-1 cell only (classic k-means).  Not
+    constant.  Candidate generation assigns each vector to its top 2
+    centroids (IVF multi-assignment): a pair split across a cluster
+    boundary — the classic single-assignment miss — still meets in the
+    runner-up cell, at 2× candidate cost.  Lloyd updates use the top-1
+    cell only (classic k-means).  Not
     oracle-expressible (argmax over float dot products can differ in the
     last ulp between engines), so correctness is gated against the
     planted ground truth in tests/test_dedup.py — the minhash/simhash
     precedent.
 
     Returns (id_a, id_b, cosine) for pairs sharing ≥1 assigned cell with
-    cosine ≥ threshold.
+    cosine ≥ threshold.  The normalized vectors and their cell
+    assignment are each materialized once, in an eager
+    ``localCheckpoint`` job; the returned pairs are lazy.
     """
-    from pyspark import StorageLevel
-
-    # persist the normalized vectors: seeds, every Lloyd round, and the
-    # final assignment all scan this — without the barrier each pass
+    # checkpoint the normalized vectors: seeds, every Lloyd round, and
+    # the final assignment all scan this — without the barrier each pass
     # re-reads parquet and re-normalizes (SemDeDup runs on the
     # embeddings table, orders of magnitude smaller than the text
-    # corpus, so caching it is the intended shape at scale too)
+    # corpus, so materializing it is the intended shape at scale too)
     base = df.select(
         F.col(id_col).alias("id"), l2_normalize(F.col(vec_col)).alias("v")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True)
     seeds = (
         base.withColumn("__h", F.md5(F.col("id").cast("string")))
         .orderBy("__h", "id")
@@ -996,7 +973,6 @@ def semantic_dedup_pairs(
     centroids = [r["v"] for r in seeds.collect()]  # k rows: bounded dim fetch
     if not centroids:
         # empty corpus: schema-correct empty pair set
-        base.unpersist()
         a = base.select(F.col("id").alias("id_a"))
         return (
             a.limit(0)
@@ -1024,13 +1000,13 @@ def semantic_dedup_pairs(
         norms = np.linalg.norm(M, axis=1)
         norms[norms == 0] = 1.0
         centroids = (M / norms[:, None]).tolist()
-    asg = _assign_centroids_udf(centroids, n_assign)
-    # persist the assignment too: the in-cell pair self-join reads it
-    # from BOTH sides — unpersisted, the Arrow assignment UDF would run
-    # twice over the corpus
+    asg = _assign_centroids_udf(centroids)
+    # checkpoint the assignment too: the in-cell pair self-join reads it
+    # from BOTH sides — without the barrier the Arrow assignment UDF
+    # would run twice over the corpus
     assigned = base.select(
         "id", "v", F.explode(asg(F.col("v"))).alias("cluster")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True)
     # In-cell pairs via one Arrow kernel per cluster: the cell's vectors
     # become a matrix and the cosine of every pair is a blocked numpy
     # V·Vᵀ — the SemDeDup paper's per-cluster dense similarity, and
@@ -1055,7 +1031,6 @@ def semantic_dedup_survivors(
     vec_col: str,
     n_clusters: int = 16,
     threshold: float = 0.95,
-    n_iter: int = 2,
 ) -> DataFrame:
     """Rows of ``df`` surviving semantic dedup: near-dup groups found by
     :func:`semantic_dedup_pairs` are collapsed to their smallest id via
@@ -1063,9 +1038,9 @@ def semantic_dedup_survivors(
     first-seen-wins like every other dedup operator here."""
     from knowledge_model_spark.operators.graph import dedup_cluster_survivors
 
-    pairs = semantic_dedup_pairs(
-        df, id_col, vec_col, n_clusters, threshold, n_iter
-    ).select(F.col("id_a"), F.col("id_b"))
+    pairs = semantic_dedup_pairs(df, id_col, vec_col, n_clusters, threshold).select(
+        "id_a", "id_b"
+    )
     return dedup_cluster_survivors(df, pairs, id_col)
 
 
@@ -1100,12 +1075,8 @@ def minhash_lsh_pairs_md5(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    n_hashes: int = N_HASHES,
-    bands: int = 32,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs with md5-derived shingle hashes — the
     DuckDB-oracle-checkable twin of :func:`minhash_lsh_pairs` (r6
@@ -1120,10 +1091,10 @@ def minhash_lsh_pairs_md5(
     buckets key on md5 of the comma-joined 4-row slice (a string key
     both engines render identically, replacing the fast path's
     mod-p band mix); candidates from same-(band, bucket) groups capped
-    at ``max_bucket_size``; survivors verified by signature agreement
+    at ``MAX_BUCKET_SIZE``; survivors verified by signature agreement
     ≥ threshold_num/threshold_den (compared in INTEGERS —
-    n_match·den ≥ n_hashes·num — and emitted as the exact double
-    n_match/n_hashes, unrounded: k/128 is a terminating binary
+    n_match·den ≥ N_HASHES·num — and emitted as the exact double
+    n_match/N_HASHES, unrounded: k/128 is a terminating binary
     fraction, bit-identical cross-engine, while round() at a decimal
     tie is not).
 
@@ -1136,10 +1107,10 @@ def minhash_lsh_pairs_md5(
     price of driver certifiability; both variants stay registered, the
     xxhash64 path remains the 100 TB default.
     """
-    rows_per_band = n_hashes // bands
+    rows_per_band = N_HASHES // N_BANDS
     sets = df.select(
         F.col(id_col).alias("id"),
-        F.explode(shingles(F.col(text_col), k)).alias("s"),
+        F.explode(shingles(F.col(text_col), SHINGLE_LEN)).alias("s"),
     ).withColumn("h", md5_hash31(F.col("s")))
     # the 128 permuted-min aggregates and the 32 band keys are built as
     # SQL text parsed JVM-side in ONE expr each: the previous
@@ -1150,7 +1121,7 @@ def minhash_lsh_pairs_md5(
     sig_sql = "array({}) AS sig".format(
         ", ".join(
             f"min(({MD5_MINHASH_A[i]}L * h + {MD5_MINHASH_B[i]}L) % {_P31}L)"
-            for i in range(n_hashes)
+            for i in range(N_HASHES)
         )
     )
     band_sql = ", ".join(
@@ -1160,7 +1131,7 @@ def minhash_lsh_pairs_md5(
                 for i in range(b * rows_per_band, (b + 1) * rows_per_band)
             )
         )
-        for b in range(bands)
+        for b in range(N_BANDS)
     )
     # the sketches feed banding + both verify sides; the band keys are
     # materialized with them, or the explode's inferred size(bkt) > 0
@@ -1173,15 +1144,15 @@ def minhash_lsh_pairs_md5(
         .withColumn("is_new", F.lit(True))
     )
     return (
-        _lsh_candidates(sk, max_bucket_size)
+        _lsh_candidates(sk, MAX_BUCKET_SIZE)
         .withColumn("n_match", _n_match())
         .filter(
-            F.col("n_match") * threshold_den >= F.lit(n_hashes * threshold_num)
+            F.col("n_match") * threshold_den >= F.lit(N_HASHES * threshold_num)
         )
         .select(
             "id_a",
             "id_b",
-            (F.col("n_match") / F.lit(float(n_hashes))).alias("est_jaccard"),
+            (F.col("n_match") / F.lit(float(N_HASHES))).alias("est_jaccard"),
         )
     )
 
@@ -1213,11 +1184,9 @@ def simhash_pairs_md5(
     id_col: str,
     text_col: str,
     max_distance: int = 3,
-    max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """SimHash near-dup pairs at Hamming ≤ max_distance over the
     md5-derived 60-bit signature — rides the same block-banding
-    machinery as the fast path (:func:`hash64_hamming_pairs`)."""
-    return hash64_hamming_pairs(
-        simhash_md5(df, id_col, text_col), max_distance, max_bucket_size
-    )
+    machinery as the fast path (:func:`hash64_hamming_pairs`), with its
+    default 1000-member bucket cap."""
+    return hash64_hamming_pairs(simhash_md5(df, id_col, text_col), max_distance)

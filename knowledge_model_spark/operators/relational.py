@@ -1,46 +1,19 @@
 """Relational operator extensions Spark lacks as single calls.
 
 Each is a composition of DataFrame primitives chosen for scale:
-- top-k per group → window ``row_number`` (partial TakeOrdered per
-  partition, no global sort)
 - as-of join → union + last-value window (one shuffle on the key, no
   per-row range probe)
-- range join → non-equi join condition (Catalyst picks broadcast-NL when
-  one side is small; at scale, pre-bucket on coarse range bins)
 
-These generalize the reference's hand-coded versions: FAISS top-k +
-threshold (reference: knowledge_model/embeddings/vector_store.py:129-162),
-argsort re-rank (re_rank.py:44-51).
+These generalize the reference's hand-coded versions: first-seen-wins
+dedup (reference: main.py:283-291), token-budget packing (main.py:355-363).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def top_k_per_group(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    k: int,
-    ascending: bool = False,
-    rank_name: str = "rank",
-) -> DataFrame:
-    """Keep the top-k rows per group ordered by ``order_col``.
-
-    Physical plan: hash-partition by group, in-partition sort, row_number —
-    Catalyst + AQE handle skewed groups; no global sort, no collect.
-    (reference analog: re_rank.py:48-49 argsort[:top_k])
-    """
-    order = F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    w = Window.partitionBy(*group_cols).orderBy(order)
-    return (
-        df.withColumn(rank_name, F.row_number().over(w))
-        .filter(F.col(rank_name) <= k)
-    )
 
 
 def dedup_first_seen(
@@ -135,15 +108,6 @@ def asof_join(
         )
         return out
     return out.select(*lcols, *right_cols)
-
-
-def range_join(
-    left: DataFrame, right: DataFrame, condition: Column, how: str = "inner"
-) -> DataFrame:
-    """Explicit non-equi (theta/range) join. Catalyst chooses
-    BroadcastNestedLoop when a side is broadcastable; callers joining two
-    large sides should add a coarse equi-bucket key to the condition."""
-    return left.join(right, condition, how)
 
 
 def greedy_budget_pack(

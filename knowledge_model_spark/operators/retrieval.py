@@ -54,35 +54,30 @@ def passage_doc_id(pid: Column) -> Column:
     return F.split(pid, "#").getItem(0).cast("long")
 
 
-def threshold_cascade(hits: DataFrame, min_score: float, query_id: str = "query_id") -> DataFrame:
-    """Two-phase threshold cascade over hits already cut at the fallback
-    threshold (reference: main.py:374-381): keep score >= min_score, except
-    that a query whose best hit is below min_score keeps all its hits."""
+def threshold_cascade(hits: DataFrame, min_score: float) -> DataFrame:
+    """Two-phase threshold cascade over (query_id, …, score) hits already
+    cut at the fallback threshold (reference: main.py:374-381): keep
+    score >= min_score, except that a query whose best hit is below
+    min_score keeps all its hits."""
     return (
-        hits.withColumn("__best", F.max("score").over(Window.partitionBy(query_id)))
+        hits.withColumn("__best", F.max("score").over(Window.partitionBy("query_id")))
         .filter((F.col("score") >= min_score) | (F.col("__best") < min_score))
         .drop("__best")
     )
 
 
-def build_passage_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    size: int = 300,
-    overlap: int = 50,
-    dim: int = 64,
-) -> DataFrame:
-    """documents → cleaned, chunked, hash-embedded passage table.
+def build_passage_index(docs: DataFrame, dim: int = 64) -> DataFrame:
+    """documents (doc_id, text) → cleaned, chunked, hash-embedded passage
+    table (doc_id, chunk_index, chunk_text, char_start, char_end, vector):
+    ``PASSAGE_SIZE``-char passages overlapping by ``PASSAGE_OVERLAP``
+    (functions/chunking.py).
 
     The batch analog of the reference ingest (pipeline.py:96-259 →
     build_faiss.py:88-141), with the FAISS index replaced by a first-class
     embeddings column.
     """
-    cleaned = docs.select(
-        F.col(id_col), clean_text(F.col(text_col)).alias("clean_text")
-    )
-    passages = explode_passages(cleaned, "clean_text", [id_col], size, overlap)
+    cleaned = docs.select("doc_id", clean_text(F.col("text")).alias("clean_text"))
+    passages = explode_passages(cleaned, "clean_text", ["doc_id"])
     return passages.withColumn("vector", hash_embed(F.col("chunk_text"), dim))
 
 
@@ -164,20 +159,13 @@ def _stats_embed(texts: pd.Series, vowel_re, ws_re) -> pd.Series:
 
 
 def retrieve(
-    index: DataFrame,
-    queries: DataFrame,
-    query_id: str = "query_id",
-    query_text: str = "query_text",
-    k: int = DEFAULT_TOP_K,
-    min_score: float = MIN_SCORE,
-    fallback_min_score: float = FALLBACK_MIN_SCORE,
-    dim: int = 64,
+    index: DataFrame, queries: DataFrame, k: int = DEFAULT_TOP_K, dim: int = 64
 ) -> DataFrame:
-    """Top-k passages per query with the two-phase threshold cascade:
-    (query_id, __pid, score, rank).
+    """Top-k passages per (query_id, query_text) query with the two-phase
+    threshold cascade: (query_id, __pid, score, rank).
 
-    Phase 1 keeps hits with score >= min_score; queries with no phase-1
-    hit fall back to score >= fallback_min_score (reference:
+    Phase 1 keeps hits with score >= ``MIN_SCORE``; queries with no
+    phase-1 hit fall back to score >= ``FALLBACK_MIN_SCORE`` (reference:
     main.py:374-381).  Expressed as one scored join + per-query max-score
     bookkeeping — no second retrieval pass needed because the exact scored
     join already materializes all candidates above the weaker threshold.
@@ -192,24 +180,22 @@ def retrieve(
     That path is EAGER: the query-embedding job runs at call time and a
     local relation comes back.  Any other index runs the lazy Spark plan.
     """
-    qv = queries.select(
-        F.col(query_id), hash_embed(F.col(query_text), dim).alias("qvec")
-    )
+    qv = queries.select("query_id", hash_embed(F.col("query_text"), dim).alias("qvec"))
     snapshot = _resident_snapshot(index)
     if snapshot is not None and snapshot[1].shape[0] == dim:
-        return _resident_retrieve(qv, snapshot, k, min_score, fallback_min_score)
+        return _resident_retrieve(qv, snapshot, k)
     hits = brute_force_top_k(
         index.withColumn("__pid", passage_id(F.col("doc_id"), F.col("chunk_index"))),
         qv,
         corpus_id="__pid",
         corpus_vec="vector",
-        query_id=query_id,
+        query_id="query_id",
         query_vec="qvec",
         k=k,
-        min_score=fallback_min_score,
+        min_score=FALLBACK_MIN_SCORE,
         normalized=True,
     )
-    return threshold_cascade(hits, min_score, query_id)
+    return threshold_cascade(hits, MIN_SCORE)
 
 
 # LRU (oldest first) of (semantic hash, input files, analyzed plan,
@@ -245,9 +231,7 @@ def _resident_snapshot(index: DataFrame):
         return snap
 
 
-def _resident_retrieve(
-    qv: DataFrame, snapshot, k: int, min_score: float, fallback_min_score: float
-) -> DataFrame:
+def _resident_retrieve(qv: DataFrame, snapshot, k: int) -> DataFrame:
     """:func:`retrieve`'s Spark-path rows for ``qv`` (query_id, qvec) from
     a snapshot: the left fold over dims of ``vectors.dot``, Spark's
     rounding, one ranking per query_id by (score desc, __pid), and the
@@ -263,16 +247,16 @@ def _resident_retrieve(
         acc = np.zeros((len(qs), m.shape[1]))
         for d in range(m.shape[0]):
             acc += q[:, d:d + 1] * m[d]
-        for qi, ci in zip(*np.nonzero(acc >= fallback_min_score - 1e-6)):
+        for qi, ci in zip(*np.nonzero(acc >= FALLBACK_MIN_SCORE - 1e-6)):
             score = spark_round6(float(acc[qi, ci]), jvm)
-            if score >= fallback_min_score:
+            if score >= FALLBACK_MIN_SCORE:
                 groups.setdefault(qs[qi][0], []).append((score, pids[ci]))
     out = []
     for qid, cands in groups.items():
         top = sorted(cands, key=lambda c: (-c[0], c[1]))[:max(k, 0)]
-        floor = min_score if top and top[0][0] >= min_score else -math.inf
+        floor = MIN_SCORE if top and top[0][0] >= MIN_SCORE else -math.inf
         out += [
-            {qv.columns[0]: qid, "__pid": pid, "score": score, "rank": rank}
+            {"query_id": qid, "__pid": pid, "score": score, "rank": rank}
             for rank, (score, pid) in enumerate(top, 1)
             if score >= floor
         ]
@@ -304,19 +288,15 @@ def spark_round6(x: float, jvm) -> float:
 
 
 def pack_context(
-    hits: DataFrame,
-    query_id: str = "query_id",
-    text_col: str = "chunk_text",
-    budget: int = CONTEXT_TOKEN_BUDGET,
-    order_col: str = "score",
+    hits: DataFrame, budget: int = CONTEXT_TOKEN_BUDGET, order_col: str = "score"
 ) -> DataFrame:
-    """Greedy token-budget packing of ranked hits (reference:
-    main.py:355-363): keep hits while the running whitespace-token total
-    stays within budget.  ``order_col`` is the walk order — pass the
-    rerank score when packing reranked hits."""
-    with_cost = hits.withColumn("n_tok", token_count(F.col(text_col)))
+    """Greedy token-budget packing of ranked (query_id, chunk_text, …)
+    hits (reference: main.py:355-363): keep hits while the running
+    whitespace-token total ``n_tok`` stays within budget.  ``order_col``
+    is the walk order — pass the rerank score when packing reranked hits."""
+    with_cost = hits.withColumn("n_tok", token_count(F.col("chunk_text")))
     return greedy_budget_pack(
-        with_cost, [query_id], order_col=order_col, cost_col="n_tok", budget=budget
+        with_cost, ["query_id"], order_col=order_col, cost_col="n_tok", budget=budget
     )
 
 
@@ -353,13 +333,11 @@ def rerank_top_k(
     query_text: str = "query_text",
     doc_text: str = "chunk_text",
     tiebreak: str | None = None,
-    score_name: str = "re_score",
-    rank_name: str = "re_rank",
 ) -> DataFrame:
     """Cross-encoder rerank hook: score each (query, passage) pair with a
-    pluggable ``scorer``, keep the top-k per query by the new score
-    (reference: embeddings/re_rank.py:28-51 — CE.predict +
-    argsort[:top_k]).
+    pluggable ``scorer`` into ``re_score``, keep the top-k per query by it
+    as ``re_rank`` 1..k (reference: embeddings/re_rank.py:28-51 —
+    CE.predict + argsort[:top_k]).
 
     ``scorer`` maps (query, doc) Columns to a score Column: an expression
     (:func:`lexical_overlap_scorer`) or a pandas UDF
@@ -368,14 +346,14 @@ def rerank_top_k(
     optimization; queries with ≤ k candidates keep all rows here too,
     just re-ordered by the new score).  The top-k is a per-query window.
     """
-    order = [F.col(score_name).desc()]
+    order = [F.col("re_score").desc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())
     w = Window.partitionBy(query_id).orderBy(*order)
     return (
-        hits.withColumn(score_name, scorer(F.col(query_text), F.col(doc_text)))
-        .withColumn(rank_name, F.row_number().over(w))
-        .filter(F.col(rank_name) <= k)
+        hits.withColumn("re_score", scorer(F.col(query_text), F.col(doc_text)))
+        .withColumn("re_rank", F.row_number().over(w))
+        .filter(F.col("re_rank") <= k)
     )
 
 
@@ -416,14 +394,11 @@ def ask(
 
 
 def recall_at_k(
-    hits: DataFrame,
-    golden: DataFrame,
-    query_id: str = "query_id",
-    hit_doc: str = "doc_id",
-    expected_doc: str = "expected_doc_id",
-    k: int = 10,
+    hits: DataFrame, golden: DataFrame, hit_doc: str = "doc_id", k: int = 10
 ) -> DataFrame:
-    """recall@K over a golden label set (reference: eval_snapshot.py:91-100).
+    """recall@K of ranked (query_id, ``hit_doc``, rank) hits over a golden
+    (query_id, expected_doc_id) label set (reference:
+    eval_snapshot.py:91-100).
 
     One row: (n_queries, n_hit, recall).  ``golden`` is read once: a left
     join to the distinct top-K (query, doc) pairs flags each label, and a
@@ -432,16 +407,16 @@ def recall_at_k(
     """
     topk = (
         hits.filter(F.col("rank") <= k)
-        .select(F.col(query_id).alias("__q"), F.col(hit_doc).alias("__d"))
+        .select(F.col("query_id").alias("__q"), F.col(hit_doc).alias("__d"))
         .distinct()
     )
     per_query = (
         golden.join(
             topk,
-            (golden[query_id] == topk["__q"]) & (golden[expected_doc] == topk["__d"]),
+            (golden["query_id"] == topk["__q"]) & (golden["expected_doc_id"] == topk["__d"]),
             "left",
         )
-        .groupBy(query_id)
+        .groupBy("query_id")
         .agg(F.max(F.col("__q").isNotNull().cast("int")).alias("hit"))
     )
     return per_query.agg(

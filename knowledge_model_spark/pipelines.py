@@ -61,23 +61,19 @@ def first_missing_month(
 ) -> tuple[int, int] | None:
     """Earliest (year, month) present in the source but absent from the
     sink's partitions — the watermark-by-directory pattern
-    (reference: fetch_clean.py:35-53) as a calendar anti-join.
+    (reference: fetch_clean.py:35-53) as a set difference on the driver:
+    the source's distinct months, collected, minus the sink's.
 
     Lists the sink's ``year=*/month=*`` directories, never its data; a
     month that kept no passages is one too, empty (Spark's reads skip it).
+    ``spark`` is not used.
     """
-    done = [
+    done = {
         tuple(int(d.split("=", 1)[1]) for d in path.split(os.sep)[-2:])
         for path in glob.glob(os.path.join(glob.escape(sink_path), "year=*", "month=*"))
-    ]
-    nxt = (
-        source.select("year", "month").distinct()
-        .join(spark.createDataFrame(done, "year int, month int"), ["year", "month"], "left_anti")
-        .orderBy("year", "month").limit(1).collect()
-    )
-    if not nxt:
-        return None
-    return int(nxt[0]["year"]), int(nxt[0]["month"])
+    }
+    months = {tuple(r) for r in source.select("year", "month").distinct().collect()}
+    return min(months - done, default=None)
 
 
 def process_month(source: DataFrame, year: int, month: int) -> DataFrame:

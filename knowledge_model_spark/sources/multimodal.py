@@ -2212,61 +2212,3 @@ def resize_image(
     bot = p[y1[:, None], x0[None, :]] * (1 - fx) + p[y1[:, None], x1[None, :]] * fx
     out = top * (1 - fy) + bot * fy
     return np.floor(out + 0.5).astype(np.uint8)
-
-
-def resize_images(
-    media: DataFrame,
-    out_h: int,
-    out_w: int,
-    method: str = "bilinear",
-) -> DataFrame:
-    """media(media_id, payload) → (media_id, width, height, out_payload
-    P6, mean_luma_in, mean_luma_out): REAL decode (decode_image_any —
-    every in-container codec) + numpy resize per Arrow batch.  Payloads
-    never leave the executors; rows with undecodable payloads are
-    dropped (the dead-letter pattern; count via an upstream observe).
-
-    Scale shape: one mapInPandas over the media scan, no shuffle; at
-    100 TB the same kernel body runs with a library decoder swapped in
-    behind decode_image_any's dispatcher.
-    """
-    out_schema = (
-        "media_id long, width int, height int, out_payload binary, "
-        "mean_luma_in double, mean_luma_out double"
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "media_id": [], "width": [], "height": [],
-                "out_payload": [], "mean_luma_in": [], "mean_luma_out": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                px = decode_image_any(bytes(payload) if payload is not None else b"")
-                if px is None:
-                    continue
-                out = resize_image(px, out_h, out_w, method)
-                rows["media_id"].append(int(mid))
-                rows["width"].append(px.shape[1])
-                rows["height"].append(px.shape[0])
-                rows["out_payload"].append(
-                    b"P6\n%d %d\n255\n" % (out_w, out_h) + out.tobytes()
-                )
-                rows["mean_luma_in"].append(
-                    round(float(px.astype(np.float64).mean()), 4)
-                )
-                rows["mean_luma_out"].append(
-                    round(float(out.astype(np.float64).mean()), 4)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "out_payload": rows["out_payload"],
-                    "mean_luma_in": pd.Series(rows["mean_luma_in"], dtype="float64"),
-                    "mean_luma_out": pd.Series(rows["mean_luma_out"], dtype="float64"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(kernel, out_schema)

@@ -314,6 +314,36 @@ def test_minhash_incremental_pairs_frees_its_sketch_cache(spark, tmp_path):
     assert persistent() - before == set()
 
 
+def test_reused_sketches_leave_no_cache_entry(spark, docs):
+    """The operators that reuse a sketch materialize it with an eager
+    local checkpoint, not a cache that no caller releases: after each
+    collect, the session's cache manager is still empty."""
+    import numpy as np
+
+    from knowledge_model_spark.operators.dedup import semantic_dedup_pairs
+
+    rng = np.random.default_rng(3)
+    vecs = rng.standard_normal((8, 64))
+    vecs[1] = vecs[0] + 0.01  # one planted near-dup
+    emb = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
+    )
+    runs = {
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, "doc_id", "text"),
+        "embedding_near_dup_pairs_lsh": lambda: embedding_near_dup_pairs_lsh(
+            emb, "vec_id", "embedding"
+        ),
+        "semantic_dedup_pairs": lambda: semantic_dedup_pairs(
+            emb, "vec_id", "embedding", n_clusters=2
+        ),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for name, run in runs.items():
+        assert run().collect(), name
+        assert cache.isEmpty(), name
+
+
 def test_minhash_incremental_replay_replaces_its_sketches(spark, tmp_path):
     """A replayed batch returns the rows of its first run, each pair once,
     and overwrites its own store partition instead of appending to it."""

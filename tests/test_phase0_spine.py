@@ -10,7 +10,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from knowledge_model_spark.functions.chunking import split_passages
-from knowledge_model_spark.functions.text_cleaning import clean_text
+from knowledge_model_spark.functions.text_cleaning import (
+    clean_text,
+    nfkc_ascii_fold,
+    normalize_pmcid,
+)
 from knowledge_model_spark.operators.retrieval import (
     build_passage_index,
     pack_context,
@@ -48,6 +52,30 @@ def test_clean_text_cuts_methods_section(spark):
     out = df.select(clean_text(F.col("text")).alias("c")).first()["c"]
     assert "findings" in out
     assert "centrifuged" not in out
+
+
+def test_normalize_pmcid(spark):
+    """``pmc-id:`` prefix and ``;`` suffix stripped, ``PMC`` ensured; an
+    empty id is null."""
+    cases = [
+        ("pmc-id: PMC123;", "PMC123"),
+        ("123", "PMC123"),
+        (" pmc456 ", "PMC456"),
+        ("", None),
+        ("pmc-id:", None),
+        (None, None),
+    ]
+    df = spark.createDataFrame([(i, x) for i, (x, _) in enumerate(cases)], "i int, x string")
+    got = df.select("i", normalize_pmcid(F.col("x")).alias("y")).orderBy("i").collect()
+    assert [r["y"] for r in got] == [want for _, want in cases]
+
+
+def test_nfkc_ascii_fold(spark):
+    """Compatibility decomposition, marks dropped, non-ASCII dropped."""
+    cases = [("\ufb01", "fi"), ("caf\u00e9", "cafe"), ("\u65e5\u672c", ""), (None, None)]
+    df = spark.createDataFrame([(i, x) for i, (x, _) in enumerate(cases)], "i int, x string")
+    got = df.select("i", nfkc_ascii_fold(F.col("x")).alias("y")).orderBy("i").collect()
+    assert [r["y"] for r in got] == [want for _, want in cases]
 
 
 def test_split_passages_geometry(spark):

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from knowledge_model_spark.functions import tokenize
 from knowledge_model_spark.functions.tokenize import (
     bpe_tokens_expr,
     learn_bpe_merges,
@@ -39,7 +40,7 @@ def test_frozen_table_tokenizes_learned_words_whole(spark):
     assert toks == ["batch", "join", "hash"]
 
 
-def test_driver_fast_path_matches_distributed_loop(spark):
+def test_driver_fast_path_matches_distributed_loop(spark, monkeypatch):
     """The size-gated driver merge loop must be bit-identical to the
     distributed per-round loop it short-circuits (same pair counts,
     tie-breaks and boundary-safe double replace) — forced onto each
@@ -49,7 +50,8 @@ def test_driver_fast_path_matches_distributed_loop(spark):
         ["text"],
     )
     local = learn_bpe_merges(docs, "text", n_merges=6)  # vocab ≪ gate
-    dist = learn_bpe_merges(docs, "text", n_merges=6, driver_vocab_gate=0)
+    monkeypatch.setattr(tokenize, "DRIVER_VOCAB_GATE", 0)
+    dist = learn_bpe_merges(docs, "text", n_merges=6)
     assert local == dist and len(local) == 6
 
 
@@ -84,7 +86,7 @@ def test_apply_is_deterministic_and_scan_shaped(spark, tables):
     assert "Exchange" not in plan  # scan-speed projection
 
 
-def test_unigram_driver_fast_path_matches_distributed_loop(spark):
+def test_unigram_driver_fast_path_matches_distributed_loop(spark, monkeypatch):
     """The size-gated driver EM path must be bit-identical to the
     distributed one it short-circuits (same seed counts and tie-breaks,
     same viterbi_pieces DP, exact integer E-step sums) — forced onto
@@ -97,7 +99,8 @@ def test_unigram_driver_fast_path_matches_distributed_loop(spark):
     )
     kw = dict(vocab_size=16, seed_multi=24, n_rounds=3)
     local = learn_unigram_lm(docs, "text", **kw)  # vocab ≪ gate
-    dist = learn_unigram_lm(docs, "text", driver_vocab_gate=0, **kw)
+    monkeypatch.setattr(tokenize, "DRIVER_VOCAB_GATE", 0)
+    dist = learn_unigram_lm(docs, "text", **kw)
     assert local == dist and len(local) == 16
 
 
