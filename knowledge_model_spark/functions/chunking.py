@@ -53,21 +53,6 @@ def split_words(col: Column) -> Column:
     return F.filter(F.split(F.trim(col), r"\s+"), lambda w: F.length(w) > 0)
 
 
-def chunk_by_words(col: Column, chunk_size: int = WORD_CHUNK_SIZE) -> Column:
-    """``array<string>`` of fixed word-budget chunks.
-
-    The reference's fallback fixed-window path (text_cleaner.py:161-168):
-    join every ``chunk_size`` consecutive words back into one chunk string.
-    """
-    words = split_words(col)
-    n_chunks = F.ceil(F.size(words) / F.lit(chunk_size)).cast("int")
-    idx = F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))
-    chunks = F.transform(
-        idx, lambda i: F.array_join(F.slice(words, i * chunk_size + 1, chunk_size), " ")
-    )
-    return F.when(F.size(words) == 0, F.array().cast("array<string>")).otherwise(chunks)
-
-
 SENTENCE_RE = r"[^.!?]+[.!?]*"  # runs of text ending at sentence terminators
 
 
@@ -84,8 +69,7 @@ def sentence_chunks_udf(chunk_size: int = WORD_CHUNK_SIZE):
 
     Sentence boundaries come from a regex (terminator-run split) — the
     punkt-tokenizer seam: swap ``_sentences`` for nltk.sent_tokenize when
-    the library is available; the fallback fixed-window path is the
-    SQL-native :func:`chunk_by_words`.  This is the one chunker that
+    the library is available.  This is the one chunker that
     genuinely needs Python (sequential greedy state), hence a pandas UDF
     rather than a column expression; the greedy walk is O(words) per doc
     and embarrassingly parallel across docs.

@@ -25,10 +25,9 @@ MAX_INPUT_WORDS = 1024  # reference: MAX_INPUT_TOKENS (token-level there)
 def build_prompt(
     user_msg: Column,
     context: Column | None = None,
-    conversation: Column | None = None,
     system_msg: str = DEFAULT_SYSTEM_MSG,
 ) -> Column:
-    """Assemble ### System / <context> / history / ### User / ### Assistant
+    """Assemble ### System / <context> / ### User / ### Assistant
     sections joined by blank lines (reference: prompt_utils.py:79-111,
     including the pre-seeded '• ' assistant bullet)."""
     parts = [F.concat(F.lit("### System:\n"), F.lit(system_msg.strip()))]
@@ -36,8 +35,6 @@ def build_prompt(
         parts.append(
             F.concat(F.lit("<context>\n"), F.trim(context), F.lit("\n</context>"))
         )
-    if conversation is not None:
-        parts.append(F.trim(conversation))
     parts.append(F.concat(F.lit("### User:\n"), F.trim(user_msg)))
     parts.append(F.lit("### Assistant:\n• "))
     return F.concat_ws("\n\n", *parts)
@@ -60,7 +57,6 @@ def render_chat_with_spans(
     order_col: str,
     user_col: str,
     asst_col: str,
-    system_msg: str = "You are a helpful assistant.",
 ):
     """Render multi-turn conversations to a chat-template string and
     compute the char-offset spans of every assistant turn — the
@@ -80,7 +76,7 @@ def render_chat_with_spans(
     """
     from pyspark.sql import DataFrame, Window  # noqa: F401
 
-    sys_seg = f"<|system|>\n{system_msg}\n"
+    sys_seg = "<|system|>\nYou are a helpful assistant.\n"
     turn_txt = F.concat(
         F.lit("<|user|>\n"),
         F.col(user_col),

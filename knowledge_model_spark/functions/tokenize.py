@@ -236,9 +236,7 @@ def viterbi_pieces(
     return pieces
 
 
-def wordpiece_pieces(
-    w: str, vocab: set[str], maxlen: int, unk_token: str = "[UNK]"
-) -> list[str]:
+def wordpiece_pieces(w: str, vocab: set[str], maxlen: int) -> list[str]:
     """Greedy longest-match-first WordPiece segmentation of ``w``.
 
     The production WordPiece apply algorithm (Wu et al. 2016; the
@@ -260,7 +258,7 @@ def wordpiece_pieces(
                 break
             j -= 1
         if piece is None:
-            return [unk_token]
+            return ["[UNK]"]
         out.append(piece)
         i = j
     return out
@@ -339,32 +337,28 @@ def learn_unigram_lm(
         .agg(F.count("*").alias("n"))
         .localCheckpoint(eager=True)
     )
-    try:
-        # Size-gated driver fast path (the learn_bpe_merges recipe,
-        # guide §1.2 step 1): the EM loop runs 2 seed jobs + n_rounds
-        # mapInPandas/shuffle/collect round trips whose cost at this
-        # scale is pure scheduler overhead.  When the MATERIALIZED
-        # distinct-word table is provably small it is collected once —
-        # bounded, the pq_train codebook-fetch contract — and the
-        # identical arithmetic runs in-process (exact integer counts,
-        # the same viterbi_pieces DP, ASCII-only words so Python and
-        # Spark orderings agree; equality pinned in
-        # tests/test_tokenize.py).  Above the gate — vocab grows with
-        # any real corpus — the distributed path is byte-for-byte
-        # unchanged.
-        if words.count() <= DRIVER_VOCAB_GATE:
-            rows = [(r["w"], r["n"]) for r in words.collect()]
-            return _learn_unigram_lm_from_rows(
-                rows, vocab_size, max_piece_len, seed_multi, n_rounds
-            )
-        return _learn_unigram_lm_from_words(
-            words, vocab_size, max_piece_len, seed_multi, n_rounds
+    # Size-gated driver fast path (the learn_bpe_merges recipe,
+    # guide §1.2 step 1): the EM loop runs 2 seed jobs + n_rounds
+    # mapInPandas/shuffle/collect round trips whose cost at this
+    # scale is pure scheduler overhead.  When the MATERIALIZED
+    # distinct-word table is provably small it is collected once —
+    # bounded, the pq_train codebook-fetch contract — and the
+    # identical arithmetic runs in-process (exact integer counts,
+    # the same viterbi_pieces DP, ASCII-only words so Python and
+    # Spark orderings agree; equality pinned in
+    # tests/test_tokenize.py).  Above the gate — vocab grows with
+    # any real corpus — the distributed path is byte-for-byte
+    # unchanged.  The checkpoint's blocks are freed by Spark's
+    # ContextCleaner once ``words`` is garbage-collected
+    # (``DataFrame.unpersist`` does not reach a local checkpoint).
+    if words.count() <= DRIVER_VOCAB_GATE:
+        rows = [(r["w"], r["n"]) for r in words.collect()]
+        return _learn_unigram_lm_from_rows(
+            rows, vocab_size, max_piece_len, seed_multi, n_rounds
         )
-    finally:
-        # the eager localCheckpoint caches the word table's RDD blocks;
-        # without this, repeated invocations in one application
-        # accumulate checkpointed RDDs until GC (r10 ADVICE)
-        words.unpersist()
+    return _learn_unigram_lm_from_words(
+        words, vocab_size, max_piece_len, seed_multi, n_rounds
+    )
 
 
 def _unigram_em_loop(

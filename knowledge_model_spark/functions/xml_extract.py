@@ -15,7 +15,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _extract_series(xml_strings, xpath: str, sep: str):
+def _extract_series(xml_strings, xpath: str):
     import xml.etree.ElementTree as ET
 
     import pandas as pd
@@ -32,17 +32,17 @@ def _extract_series(xml_strings, xpath: str, sep: str):
             for node in root.findall(xpath)
         ]
         parts = [p for p in parts if p]
-        return sep.join(parts) if parts else None
+        return "\n\n".join(parts) if parts else None
 
     return pd.Series([one(x) for x in xml_strings])
 
 
-def xml_text_join(col: Column, xpath: str, sep: str = "\n\n") -> Column:
-    """Join the text of every node matching ``xpath``, in document order.
+def xml_text_join(col: Column, xpath: str) -> Column:
+    """Join the text of every node matching ``xpath``, in document order,
+    with blank lines.
 
     ``xml_text_join(c, ".//body//p")`` reproduces the reference's PMC
-    full-text extraction; ``xml_text_join(c, ".//AbstractText", " ")``
-    its abstract extraction.  Malformed XML → NULL (dead-letter
+    full-text extraction.  Malformed XML → NULL (dead-letter
     filterable), matching the reference's quarantine-on-failure.
     """
-    return F.pandas_udf(lambda s: _extract_series(s, xpath, sep), "string")(col)
+    return F.pandas_udf(lambda s: _extract_series(s, xpath), "string")(col)

@@ -24,9 +24,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+NUM_HASHES = 3  # xxhash64 seeds 0..2 set/probe one bit each
 
-def build_bloom(df: DataFrame, col: str, num_bits: int = 1 << 20,
-                num_hashes: int = 3) -> list[int]:
+
+def build_bloom(df: DataFrame, col: str, num_bits: int = 1 << 20) -> list[int]:
     """Bitmap of ``df[col]``'s values as a list of num_bits/64 int64
     words (driver-side, bounded: 1M bits = 16K longs = 128 KB)."""
     if num_bits % 64 != 0:
@@ -34,7 +35,7 @@ def build_bloom(df: DataFrame, col: str, num_bits: int = 1 << 20,
     pos = F.array(
         *[
             F.pmod(F.xxhash64(F.col(col), F.lit(i)), F.lit(num_bits))
-            for i in range(num_hashes)
+            for i in range(NUM_HASHES)
         ]
     )
     rows = (
@@ -66,14 +67,14 @@ def _long_array_lit(xs: list[int]) -> Column:
     return F.expr("array(" + ",".join(f"{x}L" for x in xs) + ")")
 
 
-def bloom_member(col: Column, words: list[int], num_hashes: int = 3) -> Column:
+def bloom_member(col: Column, words: list[int]) -> Column:
     """Membership test against a driver-built bitmap — a pure Column
     expression (two array literals + bit arithmetic), codegen-friendly."""
     num_bits = len(words) * 64
     arr = _long_array_lit(words)
     pow2 = _long_array_lit(_POW2)
     cond = F.lit(True)
-    for i in range(num_hashes):
+    for i in range(NUM_HASHES):
         p = F.pmod(F.xxhash64(col, F.lit(i)), F.lit(num_bits))
         word = F.element_at(arr, (F.floor(p / F.lit(64)) + 1).cast("int"))
         mask = F.element_at(pow2, (F.pmod(p, F.lit(64)) + 1).cast("int"))
@@ -86,14 +87,12 @@ def bloom_pruned_join(
     build: DataFrame,
     on: str,
     num_bits: int = 1 << 20,
-    num_hashes: int = 3,
-    how: str = "inner",
 ) -> DataFrame:
-    """``probe.join(build, on, how)`` with the probe side pre-filtered
+    """``probe.join(build, on)`` (inner) with the probe side pre-filtered
     by a Bloom bitmap of the build keys.  Identical result to the plain
     join (no false negatives); the probe rows that reach the join
     shuffle are only those whose key plausibly exists on the build
     side."""
-    words = build_bloom(build.select(on), on, num_bits, num_hashes)
-    pruned = probe.filter(bloom_member(F.col(on), words, num_hashes))
-    return pruned.join(build, on, how)
+    words = build_bloom(build.select(on), on, num_bits)
+    pruned = probe.filter(bloom_member(F.col(on), words))
+    return pruned.join(build, on)

@@ -66,10 +66,9 @@ def scrub_frequent_units(
     text_col: str,
     sep: str = " ",
     min_df_frac: float = 0.5,
-    out_col: str = "scrubbed",
 ) -> DataFrame:
     """Remove every unit in ≥ ``min_df_frac`` of documents from every
-    document; adds ``out_col`` (rejoined survivors, original order) and
+    document; adds ``scrubbed`` (rejoined survivors, original order) and
     ``n_dropped``.
 
     The hot set is bounded by ``mean_units_per_doc / min_df_frac``
@@ -91,7 +90,7 @@ def scrub_frequent_units(
     with_toks = df.withColumn("__toks", _units(df, text_col, sep))
     kept = F.filter(F.col("__toks"), lambda u: ~F.array_contains(hot_arr, u))
     return (
-        with_toks.withColumn(out_col, F.array_join(kept, sep))
+        with_toks.withColumn("scrubbed", F.array_join(kept, sep))
         .withColumn(
             "n_dropped", (F.size("__toks") - F.size(kept)).cast("long")
         )

@@ -31,24 +31,23 @@ def cdc_apply_latest(
     changes: DataFrame,
     key_cols: Sequence[str],
     seq_col: str,
-    op_col: str = "op",
-    delete_op: str = "D",
 ) -> DataFrame:
     """Final state after applying the change log: for every key keep
-    the highest-``seq_col`` row (ties break to the delete, then by op
+    the highest-``seq_col`` row (ties break to the delete, then by ``op``
     descending — a deterministic total order), drop it if that row is a
-    delete tombstone.  Output drops the op/seq bookkeeping columns."""
+    delete tombstone (``op = 'D'``).  Output drops the op/seq bookkeeping
+    columns."""
     w = Window.partitionBy(*key_cols).orderBy(
         F.col(seq_col).desc(),
-        (F.col(op_col) == delete_op).desc(),
-        F.col(op_col).desc(),
+        (F.col("op") == "D").desc(),
+        F.col("op").desc(),
     )
     latest = (
         changes.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .filter(F.col(op_col) != delete_op)
+        .filter(F.col("op") != "D")
     )
-    return latest.drop("__rn", op_col, seq_col)
+    return latest.drop("__rn", "op", seq_col)
 
 
 def cdc_snapshot_diff(

@@ -73,13 +73,12 @@ def heavy_hitters(
     df: DataFrame,
     col: str,
     threshold_frac: float,
-    safety: float = 2.0,
 ) -> DataFrame:
     """Items of ``df[col]`` occurring in ≥ ``threshold_frac`` of rows,
     with their EXACT counts — (item, cnt).
 
-    Per-partition Misra–Gries with capacity k = ceil(safety/
-    threshold_frac): merging the per-partition summaries by key union
+    Per-partition Misra–Gries with capacity k = ⌊2/threshold_frac⌋
+    (a 2× safety margin over the 1/threshold_frac items that can pass): merging the per-partition summaries by key union
     can only widen the candidate set, so every item above n·threshold
     survives into candidates (no false negatives).  Exact counts are
     then computed over candidate rows only (`isin` on a bounded literal
@@ -89,7 +88,7 @@ def heavy_hitters(
     """
     if not (0 < threshold_frac <= 1):
         raise ValueError("threshold_frac must be in (0, 1]")
-    k = max(1, int(safety / threshold_frac))
+    k = max(1, int(2.0 / threshold_frac))
     partials = df.select(F.col(col).alias(col)).mapInPandas(
         _mg_partials_kernel(col, k),
         f"item {dict(df.dtypes)[col]}, mg_count long",

@@ -109,12 +109,11 @@ def attribute_last_touch(
     id_col: str,
     conv_type: str,
     touch_type: str,
-    value_col: str = "value",
-    max_lag_us: int = 86400 * 1_000_000,
 ) -> DataFrame:
     """Last-touch conversion attribution: each ``conv_type`` event is
     credited to the most recent preceding ``touch_type`` event by the
-    same user within ``max_lag_us`` microseconds (or to no touch).
+    same user within one day (or to no touch); ``conv_value`` is the
+    conversion's ``value``.
 
     Union + last-value window formulation — ONE shuffle on the user key,
     linear in events — rather than the naive conversions×touches range
@@ -132,7 +131,7 @@ def attribute_last_touch(
         F.col(user_col).alias("user_id"),
         F.col(ts_col).alias("__ts"),
         F.col(id_col).alias("__id"),
-        F.col(value_col).alias("__value"),
+        F.col("value").alias("__value"),
         is_conv.cast("int").alias("__conv"),
         F.when(~is_conv, F.unix_micros(F.col(ts_col))).alias("__touch_us"),
         F.when(~is_conv, F.col(id_col)).alias("__touch_id"),
@@ -148,7 +147,7 @@ def attribute_last_touch(
         .filter(F.col("__conv") == 1)
     )
     lag_us = F.unix_micros(F.col("__ts")) - F.col("t_us")
-    in_window = F.col("t_us").isNotNull() & (lag_us <= max_lag_us)
+    in_window = F.col("t_us").isNotNull() & (lag_us <= 86400 * 1_000_000)
     return filled.select(
         "user_id",
         F.col("__id").alias("conv_id"),

@@ -30,6 +30,13 @@ from pyspark.sql import functions as F
 # its symmetrized edge list holds at most this many rows.
 DRIVER_GATE = 200_000
 
+# pagerank / personalized_pagerank truncate the rank lineage every this
+# many rounds.
+CHECKPOINT_EVERY = 4
+
+# kcore and bfs_hops raise after this many peel rounds / BFS depths.
+MAX_PEEL_ROUNDS = 50
+
 
 def connected_components(
     edges: DataFrame,
@@ -178,15 +185,12 @@ def _dedup_with_outdeg(e: DataFrame) -> DataFrame:
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
     symmetric: bool = False,
 ) -> DataFrame:
-    """Synchronous PageRank over the directed edge set, ``iterations``
-    rounds — (node, rank).
+    """Synchronous PageRank over the directed edge set (``src`` → ``dst``),
+    ``iterations`` rounds — (node, rank).
 
     The reference's corpus is citation-shaped (PubMed articles citing
     articles); link-analysis importance is the canonical iterative graph
@@ -218,7 +222,7 @@ def pagerank(
 
     The static sides (edges with pre-joined out-degree, the node set)
     are materialized ONCE with localCheckpoint and reused every round;
-    rank lineage is truncated every ``checkpoint_every`` rounds (a
+    rank lineage is truncated every ``CHECKPOINT_EVERY`` rounds (a
     3-round run needs none).  Swap localCheckpoint for ``checkpoint()``
     on a cluster, as in :func:`connected_components`.  The single
     driver scalar is the node count (one number).
@@ -229,7 +233,7 @@ def pagerank(
     SCALE = 10**12
     p = int(round(damping * 100))
     q = 100
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     # distinct + out-degree share one exchange (see _dedup_with_outdeg)
     ed = _dedup_with_outdeg(e).localCheckpoint(eager=True)
     # node set from the checkpointed edges — reads the materialized
@@ -281,7 +285,7 @@ def pagerank(
                 + F.expr(f"(coalesce(recv, 0L) * {p}) div {q}")
             ).cast("long").alias("rank_fp"),
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         "node",
@@ -293,11 +297,8 @@ def pagerank(
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    checkpoint_every: int = 4,
     symmetric: bool = False,
 ) -> DataFrame:
     """Personalized (topic-sensitive) PageRank: teleport mass returns to
@@ -321,7 +322,7 @@ def personalized_pagerank(
     SCALE = 10**12
     p = int(round(damping * 100))
     q = 100
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     # distinct + out-degree share one exchange (see _dedup_with_outdeg)
     ed = _dedup_with_outdeg(e).localCheckpoint(eager=True)
     from pyspark.sql import Observation
@@ -383,7 +384,7 @@ def personalized_pagerank(
                 + F.expr(f"(coalesce(recv, 0L) * {p}) div {q}")
             ).cast("long").alias("rank_fp"),
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select(
         "node",
@@ -392,12 +393,9 @@ def personalized_pagerank(
     )
 
 
-def triangle_count(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Per-node triangle participation counts — (node, triangles).
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Per-node triangle participation counts over the undirected
+    ``(id_a, id_b)`` edges — (node, triangles).
 
     The classical graph-locality statistic (clustering coefficient's
     numerator; community-structure diagnostics over citation / co-click
@@ -420,8 +418,8 @@ def triangle_count(
     """
     e = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("a"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -489,11 +487,9 @@ def dedup_cluster_survivors(
 def connected_components_incremental(
     old_labels: DataFrame,
     new_edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 30,
 ) -> DataFrame:
-    """Fold a NEW batch of dup-pair edges into an existing clustering.
+    """Fold a NEW batch of ``(id_a, id_b)`` dup-pair edges into an
+    existing clustering.
 
     The monthly reality of a dedup pipeline: the pair graph grows with
     every ingest, and recomputing components over ALL historical edges
@@ -512,24 +508,17 @@ def connected_components_incremental(
     root (the same stability contract as the batch operator).
     """
     label_edges = old_labels.select(
-        F.col("node").alias(src), F.col("component").alias(dst)
+        F.col("node").alias("id_a"), F.col("component").alias("id_b")
     )
-    e = new_edges.select(src, dst)
-    return connected_components(
-        label_edges.unionByName(e), src=src, dst=dst, max_iter=max_iter
-    )
+    e = new_edges.select("id_a", "id_b")
+    return connected_components(label_edges.unionByName(e))
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """k-core decomposition: the maximal subgraph where every node has
-    degree >= k (within the subgraph).  Returns (node, core_degree) for
-    surviving nodes.
+def kcore(edges: DataFrame, k: int) -> DataFrame:
+    """k-core decomposition of the undirected ``(id_a, id_b)`` edges: the
+    maximal subgraph where every node has degree >= k (within the
+    subgraph).  Returns (node, core_degree) for surviving nodes; raises
+    after ``MAX_PEEL_ROUNDS`` rounds without a fixpoint.
 
     The classic iterative peel: drop nodes with degree < k, recompute
     degrees, repeat to fixpoint — the dup-graph hygiene pass that
@@ -552,7 +541,7 @@ def kcore(
     """
     from pyspark.sql import Observation
 
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     sym_obs = Observation()
     sym = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -592,7 +581,7 @@ def kcore(
         data = [(v, len(adj[v])) for v in sorted(alive)]
         return sym.sparkSession.createDataFrame(data, schema)
     prev_e = None
-    for _ in range(max_iter):
+    for _ in range(MAX_PEEL_ROUNDS):
         deg = sym.groupBy("a").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select(F.col("a").alias("node"))
         obs = Observation()
@@ -614,22 +603,17 @@ def kcore(
             )
         prev_e = cur_e
         sym = new_sym
-    raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
+    raise RuntimeError(f"kcore did not converge in {MAX_PEEL_ROUNDS} rounds")
 
 
-def bfs_hops(
-    edges: DataFrame,
-    sources: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    node_col: str = "node",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Minimum hop count from any source node, by synchronous frontier
-    expansion (the BSP BFS every distributed graph engine runs).
+def bfs_hops(edges: DataFrame, sources: DataFrame) -> DataFrame:
+    """Minimum hop count from any source node over the undirected
+    ``(id_a, id_b)`` edges, by synchronous frontier expansion (the BSP
+    BFS every distributed graph engine runs).
 
-    Returns (node, hops) for every node REACHABLE from ``sources``
-    (sources themselves at 0); unreachable nodes are absent.
+    Returns (node, hops) for every node REACHABLE from ``sources``' ``node``
+    column (sources themselves at 0); unreachable nodes are absent.
+    Raises after ``MAX_PEEL_ROUNDS`` depths without an empty frontier.
 
     Scale shape per round: frontier ⋈ edges (frontier is the small
     side — broadcasts while it fits) + one anti join against the
@@ -642,7 +626,7 @@ def bfs_hops(
     """
     from pyspark.sql import Observation
 
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    e = edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     sym_obs = Observation()
     sym = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -657,7 +641,7 @@ def bfs_hops(
         adj = defaultdict(list)
         for a, b in sym.collect():
             adj[a].append(b)
-        srcs = sources.select(F.col(node_col).alias("node")).distinct()
+        srcs = sources.select("node").distinct()
         hops = {r[0]: 0 for r in srcs.collect()}
         frontier = list(hops)
         depth = 0
@@ -681,13 +665,13 @@ def bfs_hops(
             sorted(hops.items()), schema
         )
     visited = (
-        sources.select(F.col(node_col).alias("node"))
+        sources.select("node")
         .distinct()
         .withColumn("hops", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
     frontier = visited
-    for depth in range(1, max_iter + 1):
+    for depth in range(1, MAX_PEEL_ROUNDS + 1):
         # materialize the frontier BEFORE the emptiness probe so the
         # joins run once per round, not once for the probe and again
         # for the next round's lineage
@@ -705,7 +689,7 @@ def bfs_hops(
             return visited
         frontier = nxt
         visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    raise RuntimeError(f"bfs_hops did not converge in {max_iter} rounds")
+    raise RuntimeError(f"bfs_hops did not converge in {MAX_PEEL_ROUNDS} rounds")
 
 
 def link_prediction_jaccard(

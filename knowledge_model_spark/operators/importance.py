@@ -33,12 +33,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MIN_TOKEN_LEN = 2  # lowercase alnum tokens shorter than this are dropped
+
+# hashed_linear_score's feature space: md5-hex term index mod this
+HASHED_DIM = 4096
+
 def dsir_importance(
     df: DataFrame,
     id_col: str,
     text_col: str,
     target_col: str,
-    min_len: int = 2,
 ) -> DataFrame:
     """Per-document importance weight ln p_tgt/p_raw, averaged per token.
 
@@ -53,7 +57,7 @@ def dsir_importance(
         F.explode(
             F.filter(
                 F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda w: F.length(w) >= min_len,
+                lambda w: F.length(w) >= MIN_TOKEN_LEN,
             )
         ).alias("term"),
     )
@@ -125,12 +129,7 @@ def dsir_importance(
     )
 
 
-def unigram_log_ppl(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_len: int = 2,
-) -> DataFrame:
+def unigram_log_ppl(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document unigram log-perplexity against an in-corpus LM —
     the CCNet-style quality signal (Wenzek et al., LREC'20 score docs
     with a KenLM perplexity and keep the low-perplexity head; an
@@ -151,7 +150,7 @@ def unigram_log_ppl(
         F.explode(
             F.filter(
                 F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda w: F.length(w) >= min_len,
+                lambda w: F.length(w) >= MIN_TOKEN_LEN,
             )
         ).alias("term"),
     )
@@ -209,22 +208,19 @@ def hashed_linear_score(
     id_col: str,
     text_col: str,
     weights: list[float] | None = None,
-    bias: float = 0.0,
-    dim: int = 4096,
-    min_len: int = 2,
 ) -> DataFrame:
     """fastText-style linear quality classifier over hashing-trick
     unigram features — the shape of the DataComp/RedPajama quality
     filters (Joulin et al. 2016: bag of hashed n-grams → linear layer
     → sigmoid), as a pure Column pipeline.
 
-        idx(t) = int(md5(t)[:4 hex], 16) mod dim
-        score(d) = sigmoid( mean_t w[idx(t)] + bias )
+        idx(t) = int(md5(t)[:4 hex], 16) mod HASHED_DIM
+        score(d) = sigmoid( mean_t w[idx(t)] )
 
     ``weights`` is the trained-model seam: a real fastText/logistic
     weight vector rides as ONE array literal (element_at is O(1) per
     token, whole-stage codegen — no Python at scan time).  When absent,
-    deterministic pseudo-weights w = idx/dim − 0.5 exercise the
+    deterministic pseudo-weights w = idx/HASHED_DIM − 0.5 exercise the
     identical plumbing.  md5-hex indexing (not xxhash64) keeps the
     featurizer DuckDB-expressible, and the per-doc mean folds in sorted
     term order — the engine-parity recipe shared with DSIR/log-ppl.
@@ -236,19 +232,19 @@ def hashed_linear_score(
         F.explode(
             F.filter(
                 F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda w: F.length(w) >= min_len,
+                lambda w: F.length(w) >= MIN_TOKEN_LEN,
             )
         ).alias("term"),
     )
     idx = F.pmod(
         F.conv(F.substring(F.md5(F.col("term")), 1, 4), 16, 10).cast("long"),
-        F.lit(dim),
+        F.lit(HASHED_DIM),
     )
     if weights is None:
-        w = idx / F.lit(float(dim)) - F.lit(0.5)
+        w = idx / F.lit(float(HASHED_DIM)) - F.lit(0.5)
     else:
-        if len(weights) != dim:
-            raise ValueError(f"weights must have length dim={dim}")
+        if len(weights) != HASHED_DIM:
+            raise ValueError(f"weights must have length {HASHED_DIM}")
         from knowledge_model_spark.functions.vectors import double_array_lit
 
         w = F.element_at(double_array_lit(weights), (idx + 1).cast("int"))
@@ -272,7 +268,6 @@ def hashed_linear_score(
                                 "cs", F.lit(0.0), lambda acc, x: acc + x["w"]
                             )
                             / F.col("dl")
-                            + F.lit(bias)
                         )
                     )
                 ),

@@ -62,16 +62,15 @@ def zorder_key(
     cols: Sequence[str],
     bounds: Sequence[tuple[int, int]],
     bits: int = 16,
-    out_col: str = "zkey",
 ) -> DataFrame:
-    """Append the Morton key column interleaving ``cols`` (integer
+    """Append the Morton key column ``zkey`` interleaving ``cols`` (integer
     columns with driver-known [lo, hi] ``bounds`` — two scalars per
     dimension, from a prior aggregate or catalog stats)."""
     nb = 2**bits
     bucketed = [
         f"({bucket_expr(c, lo, hi, nb)})" for c, (lo, hi) in zip(cols, bounds)
     ]
-    return df.withColumn(out_col, F.expr(morton_expr(bucketed, bits)))
+    return df.withColumn("zkey", F.expr(morton_expr(bucketed, bits)))
 
 
 def write_zordered(

@@ -40,17 +40,22 @@ Scale shape:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _tokens(df: DataFrame, id_col: str, text_col: str, min_len: int = 2):
-    """(id, toks array<string>) — lowercase alnum tokens, len >= min_len."""
+MIN_TOKEN_LEN = 2  # lowercase alnum tokens shorter than this are dropped
+
+
+def _tokens(df: DataFrame, id_col: str, text_col: str):
+    """(id, toks array<string>) — lowercase alnum tokens, len >= MIN_TOKEN_LEN."""
     return df.select(
         F.col(id_col).alias("id"),
         F.filter(
             F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-            lambda w: F.length(w) >= min_len,
+            lambda w: F.length(w) >= MIN_TOKEN_LEN,
         ).alias("toks"),
     )
 
@@ -60,7 +65,6 @@ def build_vocab(
     id_col: str,
     text_col: str,
     min_count: int = 2,
-    min_len: int = 2,
 ) -> DataFrame:
     """Frequency-cutoff vocabulary with dense ids.
 
@@ -72,7 +76,7 @@ def build_vocab(
     not the corpus: |V| rows through one sort — fine on a cluster where
     the corpus itself could never be globally sorted.
     """
-    terms = _tokens(df, id_col, text_col, min_len).select(
+    terms = _tokens(df, id_col, text_col).select(
         "id", F.explode("toks").alias("term")
     )
     stats = terms.groupBy("term").agg(
@@ -94,8 +98,6 @@ def stupid_backoff_scores(
     id_col: str,
     text_col: str,
     lm_df: DataFrame | None = None,
-    alpha: float = 0.4,
-    min_len: int = 2,
 ) -> DataFrame:
     """Per-document mean bigram log-score under stupid backoff.
 
@@ -112,7 +114,7 @@ def stupid_backoff_scores(
     excluded from scoring (inner join on both unigram probes) — the
     count-table analog of an OOV cutoff.
     """
-    toks = _tokens(df, id_col, text_col, min_len)
+    toks = _tokens(df, id_col, text_col)
     # the LM slice feeds BOTH count tables (uni and bi) — materialize
     # its tokenization once instead of running the regexp split per
     # consumer; token arrays spill to executor disk when they outgrow
@@ -120,7 +122,7 @@ def stupid_backoff_scores(
     lm_toks = (
         toks
         if lm_df is None
-        else _tokens(lm_df, id_col, text_col, min_len).localCheckpoint(
+        else _tokens(lm_df, id_col, text_col).localCheckpoint(
             eager=True
         )
     )
@@ -165,7 +167,7 @@ def stupid_backoff_scores(
     bi = lm_bigrams.groupBy("w1", "w2").agg(F.count("*").alias("c_bi"))
 
     # ln S per position: bigram path ln(c_bi/c_prev); NULL c_bi (bigram
-    # unseen by the LM corpus) takes the backoff path ln(alpha·c_cur/N).
+    # unseen by the LM corpus) takes the backoff path ln(0.4·c_cur/N).
     scored = (
         bigrams.join(bi, ["w1", "w2"], "left")
         .join(uni.select(F.col("term").alias("w1"), F.col("c_uni").alias("c_prev")), "w1")
@@ -178,7 +180,7 @@ def stupid_backoff_scores(
                 F.log(F.col("c_bi") / F.col("c_prev")),
             )
             .otherwise(
-                F.lit(float(__import__("math").log(alpha)))
+                F.lit(math.log(0.4))
                 + F.log(F.col("c_cur") / F.lit(float(n_total)))
             )
             .alias("contrib"),
@@ -208,7 +210,6 @@ def merge_vocab_counts(
     id_col: str,
     text_col: str,
     min_count: int = 2,
-    min_len: int = 2,
 ) -> DataFrame:
     """Fold a NEW document batch into an existing vocabulary count table
     — the monthly-growth form of :func:`build_vocab` (same shape as
@@ -225,7 +226,7 @@ def merge_vocab_counts(
     is asserted in tests.
     """
     batch = (
-        _tokens(new_docs, id_col, text_col, min_len)
+        _tokens(new_docs, id_col, text_col)
         .select("id", F.explode("toks").alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("c"), F.countDistinct("id").alias("df_docs"))

@@ -81,10 +81,9 @@ def jl_project(
     vec_col: str = "embedding",
     in_dim: int = 64,
     out_dim: int = 16,
-    prefix: str = "proj_",
     max_codegen_terms: int = MAX_CODEGEN_TERMS,
 ) -> DataFrame:
-    """Append out_dim JL-projected double columns to df.
+    """Append out_dim JL-projected double columns ``proj_0``… to df.
 
     Flat columns (not an array) keep the result canon-safe for
     value-hash comparison and let downstream plans prune to the
@@ -102,11 +101,11 @@ def jl_project(
     tests/test_projection.py.
     """
     if in_dim * out_dim > max_codegen_terms:
-        return _jl_project_pandas(df, vec_col, in_dim, out_dim, prefix)
+        return _jl_project_pandas(df, vec_col, in_dim, out_dim)
     signs = jl_sign_matrix(in_dim, out_dim)
     scale = 1.0 / math.sqrt(out_dim)
     cols = [
-        _proj_expr(vec_col, signs[j], scale).alias(f"{prefix}{j}")
+        _proj_expr(vec_col, signs[j], scale).alias(f"proj_{j}")
         for j in range(out_dim)
     ]
     return df.select("*", *cols)
@@ -117,7 +116,6 @@ def _jl_project_pandas(
     vec_col: str,
     in_dim: int,
     out_dim: int,
-    prefix: str,
 ) -> DataFrame:
     """Arrow-batched twin of the codegen path for large dim products.
 
@@ -148,7 +146,7 @@ def _jl_project_pandas(
 
     tmp = "__jl_proj"
     projected = df.withColumn(tmp, proj(F.col(vec_col)))
-    cols = [F.col(tmp)[j].alias(f"{prefix}{j}") for j in range(out_dim)]
+    cols = [F.col(tmp)[j].alias(f"proj_{j}") for j in range(out_dim)]
     return projected.select(*df.columns, *cols)
 
 
@@ -156,7 +154,6 @@ def jl_project_sql(
     vec_expr: str = "embedding",
     in_dim: int = 64,
     out_dim: int = 16,
-    prefix: str = "proj_",
 ) -> str:
     """The DuckDB twin: same literals, same textual fold order.
 
@@ -172,17 +169,17 @@ def jl_project_sql(
             t = f"CAST({vec_expr}[{d + 1}] AS DOUBLE)"
             terms.append(t if s > 0 else f"-{t}")
         chain = " + ".join(terms)
-        outs.append(f"({chain}) * {scale} AS {prefix}{j}")
+        outs.append(f"({chain}) * {scale} AS proj_{j}")
     return ",\n           ".join(outs)
 
 
 def zca_whitening_audit(
-    emb: DataFrame, id_col: str, vec_col: str, dim: int, eps: float = 1e-9
+    emb: DataFrame, id_col: str, vec_col: str, dim: int
 ) -> DataFrame:
     """ZCA whitening of an embedding column with an in-plan audit — the
     standard preprocessing before cosine-sensitive ANN/dedup when the
     embedding model leaves correlated dimensions (W = U diag(1/√(λ+ε)) Uᵀ
-    over the corpus covariance; ZCA = the whitening closest to identity,
+    with ε = 1e-9, over the corpus covariance; ZCA = the whitening closest to identity,
     Bell & Sejnowski '97).
 
     Two distributed passes + one bounded driver step:
@@ -255,8 +252,8 @@ def zca_whitening_audit(
     n, mean, cov = fold(part_rows)
     lam, u = np.linalg.eigh(cov)
     # the E[vvT] − mean·meanT form can cancel to eigenvalues slightly
-    # BELOW zero (−1e-8 beats −eps) — clamp before the sqrt or W goes NaN
-    w = (u * (1.0 / np.sqrt(np.maximum(lam, 0.0) + eps))) @ u.T
+    # BELOW zero (−1e-8 beats −ε) — clamp before the sqrt or W goes NaN
+    w = (u * (1.0 / np.sqrt(np.maximum(lam, 0.0) + 1e-9))) @ u.T
 
     def pass2(frames):
         # center THEN rotate executor-side: whitened = W(v − mean), so

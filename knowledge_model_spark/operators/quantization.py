@@ -392,11 +392,10 @@ def ivfpq_top_k(
         f"id {dict(corpus.dtypes)[corpus_id]}, cell int, "
         "v array<double>, r array<double>",
     )
-    from pyspark import StorageLevel
-
     # the residual frame feeds PQ training (n_iter passes) AND encoding:
-    # persist or every pass re-runs the assignment kernel over the corpus
-    resid = resid.persist(StorageLevel.MEMORY_AND_DISK)
+    # materialize it once (an eager localCheckpoint, which leaves no cache
+    # entry) or every pass re-runs the assignment kernel over the corpus
+    resid = resid.localCheckpoint(eager=True)
 
     # 2) residual codebooks (NO normalization — residual magnitude is
     # the signal)

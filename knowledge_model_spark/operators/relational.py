@@ -145,9 +145,8 @@ def salted_join(
     right: DataFrame,
     key: str,
     n_salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: salt the (large, skewed) left side,
+    """Skew-resistant inner equi-join: salt the (large, skewed) left side,
     replicate the right side ``n_salt`` ways.
 
     For a hot key holding x% of left rows, the shuffle partition that
@@ -165,7 +164,7 @@ def salted_join(
     r_salted = right.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     )
-    return l_salted.join(r_salted, [key, "__salt"], how).drop("__salt")
+    return l_salted.join(r_salted, [key, "__salt"]).drop("__salt")
 
 
 def stratified_sample(
@@ -173,9 +172,9 @@ def stratified_sample(
     strata_col: str,
     rates: dict[str, float],
     key_col: str,
-    default_rate: float = 1.0,
 ) -> DataFrame:
-    """Deterministic per-stratum downsampling by hash fraction.
+    """Deterministic per-stratum downsampling by hash fraction; strata
+    missing from ``rates`` are kept whole.
 
     A training pipeline rebalances its domain/language mix by sampling
     each stratum at a target rate (e.g. downsample web text, keep all
@@ -188,7 +187,7 @@ def stratified_sample(
     string comparison so the DuckDB oracle states the identical predicate.
     """
     h = F.substring(F.md5(F.col(key_col).cast("string")), 1, 4)
-    bound = F.lit(hex_rate_bound(default_rate))
+    bound = F.lit(hex_rate_bound(1.0))
     for stratum, r in sorted(rates.items()):
         bound = F.when(F.col(strata_col) == stratum, F.lit(hex_rate_bound(r))).otherwise(bound)
     return df.filter(h < bound)
@@ -385,7 +384,6 @@ def asof_join_cogrouped(
     right_time: str,
     direction: str = "backward",
     right_cols: Sequence[str] | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Co-grouped pandas twin of :func:`asof_join` —
     ``groupBy().cogroup().applyInPandas`` with a per-key
@@ -405,8 +403,8 @@ def asof_join_cogrouped(
     memory needs the window path; Arrow batches bound nothing across a
     single cogroup key.
 
-    ``num_partitions`` pins the cogroup shuffle's partition count
-    (default: the session's defaultParallelism).  AQE's partition
+    The cogroup shuffle's partition count is pinned to the session's
+    defaultParallelism.  AQE's partition
     coalescing sizes post-shuffle partitions by BYTES, but a pandas
     cogroup stage's cost is rows-per-core in Python — on a slim
     (key, ts, value) input AQE coalesces the exchange to a handful of
@@ -463,8 +461,7 @@ def asof_join_cogrouped(
         )
         return merged[lcols + list(right_cols)]
 
-    if num_partitions is None:
-        num_partitions = left.sparkSession.sparkContext.defaultParallelism
+    num_partitions = left.sparkSession.sparkContext.defaultParallelism
     return (
         left.repartition(num_partitions, on)
         .groupBy(on)
@@ -478,12 +475,11 @@ def merge_partial_aggs(
     batch: DataFrame,
     keys: Sequence[str],
     sum_cols: Sequence[str],
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Incremental maintenance of algebraic aggregates.
 
     ``state`` is a partial-aggregate table (keys + per-column sums +
-    row count + min/max per sum column); ``batch`` is NEW raw rows.
+    row count ``n_rows`` + min/max per sum column); ``batch`` is NEW raw rows.
     Returns the updated state: the batch is aggregated alone (cost ∝
     batch) and merged with the prior state by re-aggregating two
     partial rows per key — the raw corpus is never touched again.
@@ -495,7 +491,7 @@ def merge_partial_aggs(
     At 100 TB the state table is keyed-group-sized (not corpus-sized);
     the merge is one shuffle of two small tables.
     """
-    aggs = [F.count("*").cast("long").alias(count_col)]
+    aggs = [F.count("*").cast("long").alias("n_rows")]
     for c in sum_cols:
         aggs += [
             F.sum(c).alias(f"sum_{c}"),
@@ -505,7 +501,7 @@ def merge_partial_aggs(
     partial = batch.groupBy(*keys).agg(*aggs)
     if state is None:
         return partial
-    merged_aggs = [F.sum(count_col).cast("long").alias(count_col)]
+    merged_aggs = [F.sum("n_rows").cast("long").alias("n_rows")]
     for c in sum_cols:
         merged_aggs += [
             F.sum(f"sum_{c}").alias(f"sum_{c}"),
@@ -870,7 +866,7 @@ def ewma_trailing(
     return df.withColumn("ewma", F.round(num / den, 6))
 
 
-def partition_balance(df, id_expr=None):
+def partition_balance(df):
     """Per-partition row-count report — the pre-flight a pipeline runs
     before a heavy stage to confirm its partitioning is balanced
     (complement of diag_key_skew, which audits KEY distribution; this

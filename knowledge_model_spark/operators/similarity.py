@@ -28,6 +28,14 @@ from pyspark.sql.functions import broadcast
 
 from knowledge_model_spark.functions.vectors import dot, l2_normalize
 
+# lsh_bucket_top_k's index geometry: LSH_TABLES hash tables of LSH_PLANES
+# random hyperplanes over LSH_DIM-float vectors; each query also probes
+# the LSH_PROBE_BITS lowest-margin sign flips per table.
+LSH_TABLES = 8
+LSH_PLANES = 6
+LSH_DIM = 64
+LSH_PROBE_BITS = 4
+
 
 def brute_force_top_k(
     corpus: DataFrame,
@@ -152,26 +160,22 @@ def lsh_bucket_top_k(
     query_id: str,
     query_vec: str,
     k: int = 12,
-    n_planes: int = 6,
-    dim: int = 64,
-    n_tables: int = 8,
-    n_probe_bits: int = 4,
 ) -> DataFrame:
     """Approximate cosine top-k: score only same-LSH-bucket pairs.
 
-    ``n_tables`` independent hash tables (plane sets offset by table id)
+    ``LSH_TABLES`` independent hash tables (plane sets offset by table id)
     are unioned for recall; queries additionally probe, per table, the
-    ``n_probe_bits`` buckets reached by flipping their LOWEST-MARGIN sign
+    ``LSH_PROBE_BITS`` buckets reached by flipping their LOWEST-MARGIN sign
     bits (margin-guided multiprobe) — the bits a true neighbor most
-    plausibly disagrees on.  r02 probed ALL n_planes bits (7× query
-    bucket rows at n_planes=6, the 1.8× bench regression); margin-guided
-    probing at the default 4 bits is the measured knee: recall@10 vs
+    plausibly disagrees on.  r02 probed ALL ``LSH_PLANES`` bits (7× query
+    bucket rows at 6 planes, the 1.8× bench regression); margin-guided
+    probing at 4 bits is the measured knee: recall@10 vs
     exact = 0.81/0.80/0.84 at sf0.001/0.01/0.1 (vs 0.83/0.82/0.88 at all
     6 bits) for 5/7 of the candidate volume — full curve in PLANS.md.  Equi-join
     on (table, bucket) → candidate count ∝ bucket occupancy, not corpus
     size — the 100 TB path.  Candidates are scored BEFORE the per-pair
     dedup so the shuffle carries (query, id, score), not two 64-float
-    vectors.  Tune ``n_planes`` ≈ log2(corpus/desired_bucket_size).
+    vectors.  ``LSH_PLANES`` ≈ log2(corpus/desired_bucket_size).
     Recall is gated against brute_force_top_k by the eval harness
     (mirroring the reference's eval_snapshot.py:74-108, gate
     continuous.py:34-36) — registered as ``eval_ann_recall_vs_exact``.
@@ -183,12 +187,11 @@ def lsh_bucket_top_k(
     )
     q = queries.select(F.col(query_id), l2_normalize(F.col(query_vec)).alias("__qv"))
 
-    bk = _hyperplane_buckets_udf(n_tables, n_planes, dim)
+    bk = _hyperplane_buckets_udf(LSH_TABLES, LSH_PLANES, LSH_DIM)
     cb = c.select("*", F.posexplode(bk(F.col("__cv"))).alias("tbl", "bkt"))
 
-    n_probe_bits = max(0, min(n_probe_bits, n_planes))
-    pk = _hyperplane_probes_udf(n_tables, n_planes, dim, n_probe_bits)
-    per_table = 1 + n_probe_bits
+    pk = _hyperplane_probes_udf(LSH_TABLES, LSH_PLANES, LSH_DIM, LSH_PROBE_BITS)
+    per_table = 1 + LSH_PROBE_BITS
     qb = q.select("*", F.posexplode(pk(F.col("__qv"))).alias("pos", "bkt")).select(
         "*", (F.col("pos") / per_table).cast("int").alias("tbl")
     ).drop("pos")
@@ -528,18 +531,17 @@ def hard_negatives(
 def ivf_index_build(
     corpus: DataFrame,
     path: str,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
     n_centroids: int = 16,
     n_assign: int = 3,
 ) -> None:
-    """Create the durable IVF index: ``{path}/centroids`` (the
+    """Create the durable IVF index of ``corpus``' ``(vec_id, embedding)``
+    rows: ``{path}/centroids`` (the
     deterministic hash-sampled centroid vectors — the trained, frozen
     part) and ``{path}/postings`` (multi-assigned normalized corpus
     vectors, hive-partitioned by ``cent_id`` so a probe prunes to its
     lists at the file level)."""
     c = corpus.select(
-        F.col(corpus_id).alias("id"), l2_normalize(F.col(corpus_vec)).alias("vec")
+        F.col("vec_id").alias("id"), l2_normalize(F.col("embedding")).alias("vec")
     )
     cents = (
         c.withColumn("__h", F.xxhash64(F.col("id").cast("string")))
@@ -568,18 +570,17 @@ def _ivf_assign(c: DataFrame, cents: DataFrame, n_assign: int) -> DataFrame:
 def ivf_index_append(
     new_batch: DataFrame,
     path: str,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
     n_assign: int = 3,
 ) -> None:
-    """Assign ONLY the new rows against the stored centroids and append
+    """Assign ONLY the new ``(vec_id, embedding)`` rows against the stored
+    centroids and append
     their postings — the incremental-maintenance half.  The centroid
     table stays frozen (FAISS semantics: training is separate from
     adds); periodic re-training is a fresh ``ivf_index_build``."""
     spark = new_batch.sparkSession
     cents = spark.read.parquet(f"{path}/centroids")
     c = new_batch.select(
-        F.col(corpus_id).alias("id"), l2_normalize(F.col(corpus_vec)).alias("vec")
+        F.col("vec_id").alias("id"), l2_normalize(F.col("embedding")).alias("vec")
     )
     _ivf_assign(c, cents, n_assign).write.mode("append").partitionBy(
         "cent_id"
@@ -630,8 +631,6 @@ def nsw_graph_top_k(
     query_id: str,
     query_vec: str,
     k: int = 12,
-    n_shards: int = 8,
-    m_edges: int = 8,
     ef: int = 24,
     n_hops: int = 8,
 ) -> DataFrame:
@@ -641,9 +640,9 @@ def nsw_graph_top_k(
     PQ don't cover (graph walks adapt to local density; hash/cell
     methods can't).
 
-    Index: corpus rows hash to ``n_shards`` md5 shards (content-
+    Index: corpus rows hash to 8 md5 shards (content-
     addressed — shard membership survives repartitioning and corpus
-    growth); within a shard every node keeps edges to its ``m_edges``
+    growth); within a shard every node keeps edges to its 8
     exact nearest neighbors (the build cost, one vectorized matmul per
     shard here; at 100 TB this is the standard one-time index-build
     job, incremental inserts append to the shard's edge list).
@@ -680,7 +679,7 @@ def nsw_graph_top_k(
         l2_normalize(F.col(corpus_vec)).alias("__cv"),
         (
             F.conv(F.substring(F.md5(F.col(corpus_id).cast("string")), 1, 8), 16, 10)
-            .cast("long") % n_shards
+            .cast("long") % 8
         ).alias("__shard"),
     )
 
@@ -693,7 +692,7 @@ def nsw_graph_top_k(
         # exact m-NN graph within the shard (one matmul build)
         sims = mat @ mat.T
         np.fill_diagonal(sims, -np.inf)
-        m = min(m_edges, max(n - 1, 1))
+        m = min(8, max(n - 1, 1))
         nbrs = np.argsort(-sims, axis=1, kind="stable")[:, :m]
         # md5-min entry node (content-addressed, like every seed here)
         entry = min(

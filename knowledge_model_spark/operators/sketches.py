@@ -26,26 +26,28 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+HLL_LG_K = 12  # log2 of the HLL register count
+KLL_K = 2048  # KLL sketch size: ~1.65/sqrt(k) rank error, exact below k items
+
 
 def hll_rollup(
     df: DataFrame,
     fine_keys: list[str],
     coarse_keys: list[str],
     value_col: str,
-    lg_k: int = 12,
 ) -> DataFrame:
     """Distinct-count rollup through HLL sketches.
 
     Builds one HLL sketch per ``fine_keys`` group, then unions the
     sketches up to ``coarse_keys`` (a subset of ``fine_keys``) and
-    estimates.  The union is lossless for same-``lg_k`` sketches
+    estimates.  The union is lossless for same-``HLL_LG_K`` sketches
     (register-wise max), so the merged estimate equals the estimate of a
     sketch built directly on the coarse group.
 
     Returns ``coarse_keys + [n_fine_groups, est_distinct]``.
     """
     fine = df.groupBy(*fine_keys).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("__sk")
+        F.hll_sketch_agg(F.col(value_col), F.lit(HLL_LG_K)).alias("__sk")
     )
     return fine.groupBy(*coarse_keys).agg(
         F.count("*").alias("n_fine_groups"),
@@ -77,11 +79,10 @@ def kll_quantile_rollup(
     coarse_keys: list[str],
     value_col: str,
     quantiles: list[float],
-    k: int = 2048,
 ) -> DataFrame:
     """Quantile rollup through KLL sketches.
 
-    One KLL(k) sketch per fine group (map-side partials), merged per
+    One KLL(``KLL_K``) sketch per fine group (map-side partials), merged per
     coarse group, then queried at ``quantiles``.  KLL answers with an
     actual stream item (an order statistic), matching DuckDB's
     ``quantile_disc`` exactly while n < k; beyond that the rank error is
@@ -92,7 +93,7 @@ def kll_quantile_rollup(
     """
     fine = df.groupBy(*fine_keys).agg(
         F.expr(
-            f"kll_sketch_agg_double(cast({value_col} as double), {k})"
+            f"kll_sketch_agg_double(cast({value_col} as double), {KLL_K})"
         ).alias("__kll")
     )
     merged = fine.groupBy(*coarse_keys).agg(
@@ -112,11 +113,10 @@ def kll_group_quantiles(
     keys: list[str],
     value_col: str,
     quantiles: list[float],
-    k: int = 2048,
     count_as: str = "n",
 ) -> DataFrame:
-    """Per-group quantiles + count from ONE map-side-combinable KLL(k)
-    aggregate — the single-level sibling of :func:`kll_quantile_rollup`
+    """Per-group quantiles + count from ONE map-side-combinable
+    KLL(``KLL_K``) aggregate — the single-level sibling of :func:`kll_quantile_rollup`
     and the 100 TB replacement for exact ``percentile()`` aggregates,
     whose ObjectHashAggregate buffers hold EVERY group value in executor
     memory (exact interpolated percentiles are unbounded-state; KLL is
@@ -131,7 +131,7 @@ def kll_group_quantiles(
         F.count("*").cast("long").alias(count_as),
         F.expr(
             f"kll_sketch_get_quantile_double("
-            f"kll_sketch_agg_double(cast({value_col} as double), {k}), "
+            f"kll_sketch_agg_double(cast({value_col} as double), {KLL_K}), "
             f"array({qarr}))"
         ).alias("__qs"),
     )
@@ -146,42 +146,40 @@ def kll_group_multi_quantiles(
     df: DataFrame,
     keys: list[str],
     specs: list[tuple[str, float, str]],
-    k: int = 2048,
-    count_as: str = "n",
     extra_aggs: list | None = None,
 ) -> DataFrame:
     """Multi-column sibling of :func:`kll_group_quantiles`: per-group
     quantiles over SEVERAL value columns from ONE grouped aggregate —
-    one KLL(k) sketch per distinct value column, all map-side
+    one KLL(``KLL_K``) sketch per distinct value column, all map-side
     combinable, one scan, one shuffle.  ``specs`` is a list of
     ``(value_col, quantile, out_name)``; quantiles naming the same
     column share its sketch.  ``extra_aggs`` lets bounded-state exact
     aggregates (avg, count, sum) ride the same groupBy so the sketch
     twin of a mixed exact/percentile query stays single-pass.
 
-    Returns ``keys + [count_as, *out_names, *extra_agg_names]``.
+    Returns ``keys + [n, *out_names, *extra_agg_names]``.
     """
     by_col: dict[str, list[tuple[float, str]]] = {}
     for col, q, name in specs:
         by_col.setdefault(col, []).append((q, name))
-    aggs = [F.count("*").cast("long").alias(count_as)]
+    aggs = [F.count("*").cast("long").alias("n")]
     for i, (col, qs) in enumerate(by_col.items()):
         qarr = ", ".join(f"{q}D" for q, _ in qs)
         aggs.append(
             F.expr(
                 f"kll_sketch_get_quantile_double("
-                f"kll_sketch_agg_double(cast({col} as double), {k}), "
+                f"kll_sketch_agg_double(cast({col} as double), {KLL_K}), "
                 f"array({qarr}))"
             ).alias(f"__qs_{i}")
         )
     agg = df.groupBy(*keys).agg(*aggs, *(extra_aggs or []))
     cols = []
-    extra_names = [c for c in agg.columns if c not in set(keys) | {count_as}
+    extra_names = [c for c in agg.columns if c not in set(keys) | {"n"}
                    and not c.startswith("__qs_")]
     for i, (col, qs) in enumerate(by_col.items()):
         for j, (q, name) in enumerate(qs):
             cols.append(F.col(f"__qs_{i}")[j].alias(name))
-    return agg.select(*keys, count_as, *cols, *extra_names)
+    return agg.select(*keys, "n", *cols, *extra_names)
 
 
 def bitmap_distinct_rollup(
@@ -209,15 +207,14 @@ def bitmap_distinct_rollup(
     """
     chunk = F.expr(f"{id_col} div 64").alias("__chunk")
     bit = F.expr(f"shiftleft(1L, CAST(pmod({id_col}, 64) AS INT))")
-    from pyspark import StorageLevel
-
     bitmaps = (
         df.select(*fine_cols, chunk, bit.alias("__bit"))
         .groupBy(*fine_cols, "__chunk")
         .agg(F.expr("bit_or(__bit)").alias("__bits"))
-        # both output levels fold this one chunk table; persisting it
-        # keeps the raw-event scan + OR shuffle single-pass
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # both output levels fold this one chunk table; one eager
+        # localCheckpoint keeps the raw-event scan + OR shuffle
+        # single-pass and leaves no cache entry behind
+        .localCheckpoint(eager=True)
     )
     fine = bitmaps.groupBy(*fine_cols).agg(
         F.sum(F.bit_count("__bits")).cast("long").alias("n_distinct")

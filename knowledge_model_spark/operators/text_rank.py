@@ -13,18 +13,26 @@ at corpus scale.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+MIN_TOKEN_LEN = 2  # lowercase alnum tokens shorter than this are dropped
 
-def doc_terms(df: DataFrame, id_col: str, text_col: str, min_len: int = 2) -> DataFrame:
-    """(id, term) rows: lowercased alnum tokens of length >= min_len."""
+# Okapi BM25 term-frequency saturation and length normalization
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def doc_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, term) rows: lowercased alnum tokens of length >= MIN_TOKEN_LEN."""
     return df.select(
         F.col(id_col).alias("id"),
         F.explode(
             F.filter(
                 F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda w: F.length(w) >= min_len,
+                lambda w: F.length(w) >= MIN_TOKEN_LEN,
             )
         ).alias("term"),
     )
@@ -35,22 +43,17 @@ def top_terms_tfidf(
     id_col: str,
     text_col: str,
     k: int = 3,
-    smooth: bool = True,
 ) -> DataFrame:
-    """Top-k terms per document by TF-IDF with log IDF.
+    """Top-k terms per document by TF-IDF with smoothed log IDF.
 
-    idf = ln((N + 1) / (df + 1)) + 1 when ``smooth`` (sklearn-style —
-    never zero, division-safe), else ln(N / df).  Deterministic tiebreak
-    on the term string.
+    idf = ln((N + 1) / (df + 1)) + 1 (sklearn-style — never zero,
+    division-safe).  Deterministic tiebreak on the term string.
     """
     terms = doc_terms(df, id_col, text_col)
     n_docs = terms.select("id").distinct().count()
     tf = terms.groupBy("id", "term").agg(F.count("*").alias("tf"))
     dfreq = terms.groupBy("term").agg(F.countDistinct("id").alias("df"))
-    if smooth:
-        idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1)) + 1.0
-    else:
-        idf = F.log(F.lit(float(n_docs)) / F.col("df"))
+    idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1)) + 1.0
     scored = tf.join(dfreq, "term").withColumn("tfidf", F.col("tf") * idf)
     w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
     return (
@@ -65,15 +68,13 @@ def bm25_rank(
     id_col: str,
     text_col: str,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     k: int = 10,
-    min_len: int = 2,
 ) -> DataFrame:
     """Okapi BM25 top-k documents for a literal query.
 
     score(d) = Σ_t ln(1 + (N - df_t + 0.5)/(df_t + 0.5))
-                 · tf · (k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
+                 · tf · (k1+1) / (tf + k1·(1 - b + b·dl/avgdl)),
+    k1 = ``BM25_K1``, b = ``BM25_B``
 
     Engine-parity design (the oracle recomputes the same formula):
 
@@ -92,7 +93,7 @@ def bm25_rank(
     Scale: the tokenizer explode + combiner-friendly groupBy is the only
     corpus-sized movement; everything after operates on one row per doc.
     """
-    terms = doc_terms(df, id_col, text_col, min_len)
+    terms = doc_terms(df, id_col, text_col)
     tf_cols = [
         F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf_{i}")
         for i, t in enumerate(query_terms)
@@ -133,7 +134,8 @@ def bm25_rank(
         idf = F.log(F.lit(1.0) + (n_docs - dfreq + 0.5) / (dfreq + 0.5))
         tf = F.col(f"tf_{i}")
         score = score + idf * (
-            tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * norm))
+            tf * (BM25_K1 + 1.0)
+            / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * norm))
         )
         matched = matched | (tf > 0)
 
@@ -281,15 +283,12 @@ def bow_cosine_pairs(
     # key.  Grouping by (id_a, id_b, na, nb) gives identical groups
     # (na/nb are constant per id) and removes both joins — the cosine
     # threshold then filters in the same stage as the pair aggregate.
-    # Three consumers of toks (df cut, both join sides) would re-run
-    # the regex shingling + tf shuffle each; persist keeps it one
-    # materialization (at true corpus scale, write this table to
-    # Parquet once instead).
-    from pyspark import StorageLevel
-
+    # Both join sides read toks; one eager localCheckpoint runs the
+    # regex shingling + tf shuffle once and leaves no cache entry (at
+    # true corpus scale, write this table to Parquet once instead).
     toks = toks.withColumn(
         "nsq", F.sum(F.col("tf") * F.col("tf")).over(Window.partitionBy("id"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=True)
     a = toks.select(
         F.col("id").alias("id_a"),
         F.col("tf").alias("tf_a"),
@@ -318,12 +317,22 @@ def bow_cosine_pairs(
     )
 
 
+def _phrase_words(phrase: str) -> list[str]:
+    """``phrase`` tokenized as :func:`doc_terms` tokenizes documents."""
+    words = [
+        w for w in re.split(r"[^a-z0-9]+", phrase.lower())
+        if len(w) >= MIN_TOKEN_LEN
+    ]
+    if not words:
+        raise ValueError("phrase has no tokens after normalization")
+    return words
+
+
 def phrase_search(
     df: DataFrame,
     id_col: str,
     text_col: str,
     phrase: str,
-    min_len: int = 2,
 ) -> DataFrame:
     """Exact phrase matching over a positional inverted index.
 
@@ -342,19 +351,13 @@ def phrase_search(
     an equi-join on (id, pos±i): co-partitioned after the first
     shuffle, so AQE collapses the chain into one exchange per side.
     """
-    words = [
-        w
-        for w in __import__("re").split(r"[^a-z0-9]+", phrase.lower())
-        if len(w) >= min_len
-    ]
-    if not words:
-        raise ValueError("phrase has no tokens after normalization")
+    words = _phrase_words(phrase)
     pos = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(
             F.filter(
                 F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda w: F.length(w) >= min_len,
+                lambda w: F.length(w) >= MIN_TOKEN_LEN,
             )
         ).alias("pos", "term"),
     ).filter(F.col("term").isin(words))
@@ -376,9 +379,7 @@ def phrase_search(
     )
 
 
-def build_positional_index(
-    df: DataFrame, id_col: str, text_col: str, min_len: int = 2
-) -> DataFrame:
+def build_positional_index(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, pos, term) positional postings — the materialized inverted
     index :func:`phrase_search` probes.
 
@@ -393,23 +394,17 @@ def build_positional_index(
         F.posexplode(
             F.filter(
                 F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-                lambda w: F.length(w) >= min_len,
+                lambda w: F.length(w) >= MIN_TOKEN_LEN,
             )
         ).alias("pos", "term"),
     )
 
 
-def phrase_search_indexed(index: DataFrame, phrase: str, min_len: int = 2) -> DataFrame:
+def phrase_search_indexed(index: DataFrame, phrase: str) -> DataFrame:
     """Phrase query against a prebuilt :func:`build_positional_index`
     table — same adjacency-join semantics as :func:`phrase_search`,
     zero corpus scans."""
-    words = [
-        w
-        for w in __import__("re").split(r"[^a-z0-9]+", phrase.lower())
-        if len(w) >= min_len
-    ]
-    if not words:
-        raise ValueError("phrase has no tokens after normalization")
+    words = _phrase_words(phrase)
     pos = index.filter(F.col("term").isin(words))
     anchor = pos.filter(F.col("term") == words[0]).select(
         "id", F.col("pos").alias("p0")

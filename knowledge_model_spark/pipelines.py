@@ -29,7 +29,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from knowledge_model_spark.operators.dedup import minhash_incremental_survivors
@@ -56,9 +56,7 @@ class MonthReport:
     recall: float
 
 
-def first_missing_month(
-    spark: SparkSession, source: DataFrame, sink_path: str
-) -> tuple[int, int] | None:
+def first_missing_month(source: DataFrame, sink_path: str) -> tuple[int, int] | None:
     """Earliest (year, month) present in the source but absent from the
     sink's partitions — the watermark-by-directory pattern
     (reference: fetch_clean.py:35-53) as a set difference on the driver:
@@ -66,7 +64,6 @@ def first_missing_month(
 
     Lists the sink's ``year=*/month=*`` directories, never its data; a
     month that kept no passages is one too, empty (Spark's reads skip it).
-    ``spark`` is not used.
     """
     done = {
         tuple(int(d.split("=", 1)[1]) for d in path.split(os.sep)[-2:])
@@ -147,7 +144,6 @@ def swap_dir(new: str, dest: str, retired: str) -> None:
 
 
 def continuous_update(
-    spark: SparkSession,
     source: DataFrame,
     sink_path: str,
     eval_queries: DataFrame | None = None,
@@ -160,7 +156,7 @@ def continuous_update(
     the reference (continuous.py:34-36) — and commits nothing, so the
     next call redoes the same month.
     """
-    nxt = first_missing_month(spark, source, sink_path)
+    nxt = first_missing_month(source, sink_path)
     if nxt is None:
         return None
     return ingest_tick(source, *nxt, sink_path, eval_queries)

@@ -2152,17 +2152,12 @@ def _stream_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     partition serializes the CPU-heavy session-window aggregation onto
     one core (sessionize 2.99 s at 1 partition vs 2.23 s at 4;
     tumbling 1.77→1.49, watermarked dedup 2.75→2.16, stream-stream
-    join flat — all sf0.1 min-of-3).  Env override
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` pins it for A/B runs.
-    The state-partition count never affects WHAT a streaming
+    join flat — all sf0.1 min-of-3).  The state-partition count never affects WHAT a streaming
     aggregation/join/dedup computes — only how many stores hold the
     rows.
     """
     import os
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     try:
         nbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     except OSError:

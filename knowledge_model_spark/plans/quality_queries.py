@@ -1242,9 +1242,10 @@ def quality_luhn_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bh_adjust(p_df: DataFrame, id_col: str, p_col: str, alpha: float = 0.25) -> DataFrame:
+def bh_adjust(p_df: DataFrame, id_col: str, p_col: str) -> DataFrame:
     """Benjamini-Hochberg step-up q-values over a (id, p_value) table:
-    q_i = min_{j>=i} p_j * n / j, capped at 1.  Runs on the per-group
+    q_i = min_{j>=i} p_j * n / j, capped at 1; ``significant`` at FDR
+    0.25.  Runs on the per-group
     TEST table (segments, not rows), so the two global windows are over
     a handful of rows at any corpus scale."""
     from pyspark.sql import Window
@@ -1267,7 +1268,7 @@ def bh_adjust(p_df: DataFrame, id_col: str, p_col: str, alpha: float = 0.25) -> 
         F.round(p_col, 9).alias(p_col),
         "rnk",
         F.round(q, 9).alias("q_value"),
-        (q <= alpha).alias("significant"),
+        (q <= 0.25).alias("significant"),
     )
 
 

@@ -115,7 +115,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_lsh_topk",
     None,  # xxhash64 hyperplane projections — recall tested vs exact baseline
-    doc="LSH-bucketed approximate top-10 (4 tables × 8 hyperplanes); the "
+    doc="LSH-bucketed approximate top-10 (8 tables × 6 hyperplanes); the "
     "100 TB path — candidates ∝ bucket occupancy, not corpus size",
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

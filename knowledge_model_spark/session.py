@@ -81,15 +81,11 @@ def scale_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     rule saturates the cap and behaviour is unchanged, while a ~17 MB
     local SF gets ~5.  A/B at sf0.1/local[32] over a 36-query subset:
     geomean 1.06x, no query regressed >15% (OPTIMIZATION_r12.md).
-    Env override ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` pins it for A/B
-    runs.  Partition count never affects WHAT a query computes: every
+    Partition count never affects WHAT a query computes: every
     query's aggregation order-sensitivity is handled by its own
     sorted-fold / integer / decimal machinery (verified by the full
     oracle-parity suite at this setting).
     """
-    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, int(env))
     nbytes = 0
     for name in TABLE_NAMES:
         try:
@@ -128,7 +124,7 @@ def plan_size_bytes(df: DataFrame) -> int:
         return 0
 
 
-def spread_vectors(df: DataFrame, per_partition_bytes: int = 256 * 1024) -> DataFrame:
+def spread_vectors(df: DataFrame) -> DataFrame:
     """:func:`ensure_min_partitions` with a bytes-derived target for
     vector tables feeding cheap per-row kernels (µs/row JVM HOF dots,
     vectorized Arrow batches) — the zca bytes-aware recipe (r11)
@@ -149,7 +145,7 @@ def spread_vectors(df: DataFrame, per_partition_bytes: int = 256 * 1024) -> Data
     nbytes = plan_size_bytes(df)
     if nbytes <= 0:
         return ensure_min_partitions(df)
-    target = max(min(4, cores), min(cores, -(-nbytes // per_partition_bytes)))
+    target = max(min(4, cores), min(cores, -(-nbytes // (256 * 1024))))
     return ensure_min_partitions(df, target)
 
 

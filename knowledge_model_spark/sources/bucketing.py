@@ -46,12 +46,11 @@ def bucketed_join(
     left_table: str,
     right_table: str,
     on: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key.
+    """Inner-join two same-bucketed tables on their bucket key.
 
     With ``spark.sql.sources.bucketing.enabled`` (default true) and equal
     bucket counts, the plan contains no Exchange: each task merge-joins
     bucket i of the left with bucket i of the right.
     """
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    return spark.table(left_table).join(spark.table(right_table), on)

@@ -23,12 +23,9 @@ from pyspark.sql import types as T
 from knowledge_model_spark.schemas import CORPUS_CHUNK_SCHEMA, TRAINING_RECORD_SCHEMA
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = CORPUS_CHUNK_SCHEMA,
-) -> tuple[DataFrame, DataFrame]:
-    """Read JSONL with explicit schema; returns (good, dead_letter).
+def read_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
+    """Read JSONL with the explicit ``CORPUS_CHUNK_SCHEMA``; returns
+    (good, dead_letter).
 
     PERMISSIVE mode lands malformed lines in ``_corrupt_record`` instead
     of failing the scan — the Spark-native form of the reference's
@@ -36,7 +33,7 @@ def read_jsonl(
     (fetch_pubmed.py:83-90).  The explicit schema keeps the reader
     single-pass (no inference scan) — mandatory at 100 TB.
 
-    No ``.cache()``: caching the full corpus to satisfy Spark's
+    No caching: caching the full corpus to satisfy Spark's
     corrupt-record-only-projection rule (which fires even on
     ``good.count()``, where pruning leaves only the corrupt-column
     filter) would spill the entire 100 TB input to executor storage.
@@ -46,7 +43,7 @@ def read_jsonl(
     the native reader, streaming, nothing materialized.
     """
     full_schema = T.StructType(
-        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
+        CORPUS_CHUNK_SCHEMA.fields + [T.StructField("_corrupt_record", T.StringType())]
     )
     parsed = spark.read.text(path).select(
         F.col("value"),
@@ -57,7 +54,7 @@ def read_jsonl(
         ).alias("__r"),
     )
     good = parsed.filter(F.col("__r._corrupt_record").isNull()).select(
-        *[F.col(f"__r.{f.name}").alias(f.name) for f in schema.fields]
+        *[F.col(f"__r.{f.name}").alias(f.name) for f in CORPUS_CHUNK_SCHEMA.fields]
     )
     dead = parsed.filter(F.col("__r._corrupt_record").isNotNull()).select(
         F.col("value").alias("_corrupt_record")
@@ -68,12 +65,11 @@ def read_jsonl(
 def write_partitioned(
     df: DataFrame,
     path: str,
-    year_col: str = "year",
-    month_col: str = "month",
     fmt: str = "parquet",
     compression: str | None = None,
 ) -> None:
-    """Hive-partitioned columnar sink — the engine's canonical layout.
+    """Hive-partitioned columnar sink on ``(year, month)`` — the engine's
+    canonical layout.
 
     ``partitionBy(year, month)`` replaces the reference's hand-built
     ``data/clean/YYYY/MM/`` tree (pipeline.py:75-76) and S3 key layout
@@ -88,7 +84,7 @@ def write_partitioned(
     writer = (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(year_col, month_col)
+        .partitionBy("year", "month")
         .format(fmt)
     )
     if compression is not None:
@@ -98,8 +94,9 @@ def write_partitioned(
     writer.save(path)
 
 
-def read_evolved(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read a partitioned table whose schema GREW across ingest months.
+def read_evolved(spark: SparkSession, path: str) -> DataFrame:
+    """Read a partitioned Parquet table whose schema GREW across ingest
+    months.
 
     ``mergeSchema`` unions the per-file schemas (new columns arrive as
     NULL for old files) — the monthly-ingest reality the reference
@@ -108,7 +105,7 @@ def read_evolved(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFr
     metadata pass at planning time, so it's an explicit opt-in reader,
     not the default scan.
     """
-    return spark.read.option("mergeSchema", "true").format(fmt).load(path)
+    return spark.read.option("mergeSchema", "true").parquet(path)
 
 
 def upsert_partitioned(
@@ -117,10 +114,9 @@ def upsert_partitioned(
     path: str,
     key_cols: list[str],
     order_col: str,
-    year_col: str = "year",
-    month_col: str = "month",
 ) -> None:
-    """Latest-wins upsert into a partitioned Parquet sink — the engine's
+    """Latest-wins upsert into a ``(year, month)``-partitioned Parquet
+    sink — the engine's
     MERGE: the reference's per-row lookup-then-insert
     (reference: ingestion/pipeline.py:135,181-207) becomes one set
     operation touching ONLY the partitions present in ``updates``.
@@ -135,9 +131,9 @@ def upsert_partitioned(
 
     target = updates
     if os.path.exists(path):
-        parts = updates.select(year_col, month_col).distinct()
+        parts = updates.select("year", "month").distinct()
         existing = spark.read.parquet(path).join(
-            F.broadcast(parts), [year_col, month_col], "left_semi"
+            F.broadcast(parts), ["year", "month"], "left_semi"
         )
         target = existing.unionByName(updates)
     w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
@@ -149,7 +145,7 @@ def upsert_partitioned(
     (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(year_col, month_col)
+        .partitionBy("year", "month")
         .parquet(path)
     )
 
@@ -180,14 +176,15 @@ def normalize_training_records(df: DataFrame) -> DataFrame:
 
 
 def weighted_corpus_merge(
-    raw: DataFrame, instruct: DataFrame, raw_weight: float = 0.8, seed: int = 42
+    raw: DataFrame, instruct: DataFrame, raw_weight: float = 0.8
 ) -> DataFrame:
     """≈80/20 weighted merge of raw corpus + instruction pairs
     (reference: pipeline_runner.py:49-57 — the merge script it invokes is
     absent from the snapshot; semantics reconstructed as weighted union).
 
     Downsamples the over-represented side so the output ratio approaches
-    raw_weight : (1 - raw_weight) without ever collecting to the driver.
+    raw_weight : (1 - raw_weight) without ever collecting to the driver
+    (``sample`` seed 42, so reruns keep the same rows).
 
     Sizing uses ONE zero-column counting job over both corpora (tagged
     union → groupBy(side).count()) instead of two eager ``count()``
@@ -206,10 +203,10 @@ def weighted_corpus_merge(
         return raw.unionByName(instruct, allowMissingColumns=True)
     target_ins = n_raw * (1 - raw_weight) / raw_weight
     if n_ins > target_ins:
-        instruct = instruct.sample(fraction=min(1.0, target_ins / n_ins), seed=seed)
+        instruct = instruct.sample(fraction=min(1.0, target_ins / n_ins), seed=42)
     else:
         raw = raw.sample(
-            fraction=min(1.0, n_ins * raw_weight / (1 - raw_weight) / n_raw), seed=seed
+            fraction=min(1.0, n_ins * raw_weight / (1 - raw_weight) / n_raw), seed=42
         )
     return raw.unionByName(instruct, allowMissingColumns=True)
 
@@ -278,9 +275,9 @@ def read_csv_deadletter(
     path: str,
     schema: T.StructType,
     sep: str = ",",
-    header: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Schema'd CSV/TSV reader; returns (good, dead_letter).
+    """Schema'd CSV/TSV reader; drops the header line (the schema's field
+    names joined by ``sep``) and returns (good, dead_letter).
 
     Same warn-and-continue contract as :func:`read_jsonl`, via
     ``from_csv`` over a text scan: malformed lines (wrong arity, type
@@ -301,9 +298,8 @@ def read_csv_deadletter(
     import re as _re
 
     lines = spark.read.text(path)
-    if header:
-        header_line = sep.join(f.name for f in schema.fields)
-        lines = lines.filter(F.col("value") != header_line)
+    header_line = sep.join(f.name for f in schema.fields)
+    lines = lines.filter(F.col("value") != header_line)
     parsed = lines.select(
         F.col("value"),
         F.from_csv(

@@ -37,12 +37,13 @@ except Exception:  # noqa: BLE001
     faiss = None
 
 
-def export_embeddings(df: DataFrame, path: str, id_col: str = "vec_id", vec_col: str = "embedding") -> dict:
-    """Distributed export of (id, vector) + manifest; returns the manifest."""
+def export_embeddings(df: DataFrame, path: str) -> dict:
+    """Distributed export of ``df``'s (vec_id, embedding) rows as
+    (id, vector) + manifest; returns the manifest."""
     vec_dir = os.path.join(path, "vectors")
     out = df.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vec_col).cast("array<float>").alias("vector"),
+        F.col("vec_id").cast("long").alias("id"),
+        F.col("embedding").cast("array<float>").alias("vector"),
     ).filter(F.col("vector").isNotNull())
     out.write.mode("overwrite").parquet(vec_dir)
     dim_count = out.select(
@@ -51,8 +52,8 @@ def export_embeddings(df: DataFrame, path: str, id_col: str = "vec_id", vec_col:
     manifest = {
         "dim": int(dim_count["dim"]),
         "count": int(dim_count["count"]),
-        "id_col": id_col,
-        "vec_col": vec_col,
+        "id_col": "vec_id",
+        "vec_col": "embedding",
         "metric": "ip",  # IndexFlatIP parity (vector_store.py:44-47)
     }
     with open(os.path.join(path, "manifest.json"), "w") as f:

@@ -75,24 +75,21 @@ def fetch_with_retries(
     fetcher: Callable[[str], tuple[str, str]],
     bucket: TokenBucket,
     max_retries: int = 3,
-    base_backoff: float = 0.5,
-    jitter: float = 0.3,
-    sleep=time.sleep,
-    rng: random.Random | None = None,
 ) -> tuple[str, str | None, str, bool, str | None, int]:
-    """One key through the retry ladder: backoff 0.5·2^(n−1) s + jitter
-    (reference: fetch_pubmed.py:134-145, inside_request_pdf.py:33-46)."""
-    rng = rng or random.Random(hash(key) & 0xFFFF)
+    """One key through the retry ladder: backoff 0.5·2^(n−1) s + up to
+    0.3 s jitter (reference: fetch_pubmed.py:134-145,
+    inside_request_pdf.py:33-46)."""
+    rng = random.Random(hash(key) & 0xFFFF)
     last_err = None
     for attempt in range(1, max_retries + 1):
-        bucket.acquire(sleep=sleep)
+        bucket.acquire()
         try:
             body, section = fetcher(key)
             return (key, body, section, True, None, attempt)
         except Exception as exc:  # noqa: BLE001 — connector boundary
             last_err = str(exc)
             if attempt < max_retries:
-                sleep(base_backoff * (2 ** (attempt - 1)) + rng.uniform(0, jitter))
+                time.sleep(0.5 * (2 ** (attempt - 1)) + rng.uniform(0, 0.3))
     return (key, None, "NONE", False, last_err, max_retries)
 
 
@@ -135,7 +132,6 @@ def paged_scan(
     page_size: int = 500,
     start_offset: int = 0,
     rate: float = 10.0,
-    max_pages: int = 10_000,
 ) -> DataFrame:
     """Driver-side paged id scan with offset resume → key DataFrame.
 
@@ -148,13 +144,13 @@ def paged_scan(
 
     Deliberately driver-sequential: the listing API itself is a serial
     cursor (the reference's too); only the per-id BODY fetches fan out —
-    feed the returned keys to :func:`fetch_partitioned`.  A ``max_pages``
+    feed the returned keys to :func:`fetch_partitioned`.  A 10,000-page
     guard bounds a runaway cursor.
     """
     bucket = TokenBucket(rate)
     ids: list[str] = []
     offset = start_offset
-    for _ in range(max_pages):
+    for _ in range(10_000):
         bucket.acquire()
         page = page_fetcher(offset)
         ids.extend(page)

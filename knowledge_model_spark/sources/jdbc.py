@@ -13,13 +13,11 @@ get wrong:
   DataFrame — Catalyst pushes them into the JDBC source) keeps the
   database from shipping unneeded rows/columns.
 
-No JDBC endpoint exists in the test container, so ``jdbc_options`` is a
-pure function unit-tested directly; ``read_jdbc`` is a thin applier.
+``jdbc_options`` is a pure function, unit-tested without an endpoint;
+apply it with ``spark.read.format("jdbc").options(**opts).load()``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 def jdbc_options(
@@ -31,10 +29,10 @@ def jdbc_options(
     lower_bound: int | str | None = None,
     upper_bound: int | str | None = None,
     num_partitions: int | None = None,
-    fetch_size: int = 10_000,
     properties: dict[str, str] | None = None,
 ) -> dict[str, str]:
-    """Validated option dict for a partition-parallel JDBC scan.
+    """Validated option dict for a partition-parallel JDBC scan, fetching
+    10,000 rows per round trip unless ``properties`` sets ``fetchsize``.
 
     Exactly one of ``table`` / ``query``.  Partitioned reads require the
     full (column, lower, upper, N) quadruple — Spark silently falls back
@@ -46,7 +44,7 @@ def jdbc_options(
     if query is not None and partition_column is not None:
         # Spark requires partitioning on dbtable; wrap the query instead.
         table, query = f"({query}) AS __sub", None
-    opts: dict[str, str] = {"url": url, "fetchsize": str(fetch_size)}
+    opts: dict[str, str] = {"url": url, "fetchsize": "10000"}
     if query is not None:
         opts["query"] = query
     else:
@@ -69,7 +67,3 @@ def jdbc_options(
         opts[k] = str(v)
     return opts
 
-
-def read_jdbc(spark: SparkSession, url: str, table: str | None = None, **kwargs) -> DataFrame:
-    """``spark.read.format("jdbc")`` with :func:`jdbc_options` applied."""
-    return spark.read.format("jdbc").options(**jdbc_options(url, table, **kwargs)).load()

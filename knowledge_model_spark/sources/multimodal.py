@@ -1962,7 +1962,7 @@ def make_synthetic_media(spark, n: int = 64, kind: str = "image") -> DataFrame:
     return rows
 
 
-def arrow_byte_stats(df, binary_col: str = "payload", id_col: str = "doc_id"):
+def arrow_byte_stats(df):
     """Per-row byte statistics through ``mapInArrow`` — the Arrow-native
     sibling of the mapInPandas kernels above: batches stay as
     ``pyarrow.RecordBatch`` end to end (no pandas materialization, no
@@ -1970,18 +1970,17 @@ def arrow_byte_stats(df, binary_col: str = "payload", id_col: str = "doc_id"):
     where pandas would only add a copy.  Completes the §2.10 map-family
     surface (mapInPandas / applyInPandas / cogroup / mapInArrow).
 
-    Emits (id, n_bytes, first_byte, byte_sum_mod) per row.
+    Emits (doc_id, n_bytes, first_byte, byte_sum_mod) per row of ``df``'s
+    (doc_id, payload) columns.
     """
     import pyarrow as pa
 
-    out_schema = (
-        f"{id_col} long, n_bytes long, first_byte int, byte_sum_mod long"
-    )
+    out_schema = "doc_id long, n_bytes long, first_byte int, byte_sum_mod long"
 
     def kernel(batches):
         for batch in batches:
-            ids = batch.column(id_col)
-            payloads = batch.column(binary_col)
+            ids = batch.column("doc_id")
+            payloads = batch.column("payload")
             n_bytes, first, sums = [], [], []
             for buf in payloads:
                 b = buf.as_py() or b""
@@ -1995,10 +1994,10 @@ def arrow_byte_stats(df, binary_col: str = "payload", id_col: str = "doc_id"):
                     pa.array(first, type=pa.int32()),
                     pa.array(sums, type=pa.int64()),
                 ],
-                names=[id_col, "n_bytes", "first_byte", "byte_sum_mod"],
+                names=["doc_id", "n_bytes", "first_byte", "byte_sum_mod"],
             )
 
-    return df.select(id_col, binary_col).mapInArrow(kernel, out_schema)
+    return df.select("doc_id", "payload").mapInArrow(kernel, out_schema)
 
 
 # ------------------------------------------------- perceptual hashing

@@ -869,12 +869,11 @@ def triage_pdf_pages(b: bytes) -> list[dict] | None:
 def make_reference_shaped_pages(
     text: str,
     words_per_page: int = 40,
-    line_words: int = 10,
     furniture: bool = True,
 ) -> list[str]:
     """Render document text into PDF page strings shaped like a REAL
     scanned article (reference parse_pdfs.py:23-54's input): each page
-    carries a ``Page N of M`` header, multi-word body lines with
+    carries a ``Page N of M`` header, 10-word body lines with
     hyphen-linebreak splits at line junctions (``transfor-\\n mation``),
     a copyright footer, and a bare page-number line — exactly the
     artifacts ``strip_page_furniture`` and ``rejoin_hyphen_linebreaks``
@@ -890,8 +889,8 @@ def make_reference_shaped_pages(
     for p in range(n_pages):
         chunk = words[p * words_per_page : (p + 1) * words_per_page]
         lines = [
-            " ".join(chunk[i : i + line_words])
-            for i in range(0, len(chunk), line_words)
+            " ".join(chunk[i : i + 10])
+            for i in range(0, len(chunk), 10)
         ] or [""]
         if furniture:
             for k in range(len(lines) - 1):

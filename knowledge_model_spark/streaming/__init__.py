@@ -10,7 +10,6 @@ watermarked windowed aggregations, stateful dedup, and session windows.
 from knowledge_model_spark.streaming.windows import (
     ohlc_stream,
     sessionized_stream,
-    sliding_counts,
     stateful_capped_sessions,
     stateful_running_totals_tws,
     stream_stream_interval_join,
@@ -21,7 +20,6 @@ from knowledge_model_spark.streaming.windows import (
 __all__ = [
     "tumbling_counts",
     "ohlc_stream",
-    "sliding_counts",
     "sessionized_stream",
     "stateful_capped_sessions",
     "stateful_running_totals_tws",

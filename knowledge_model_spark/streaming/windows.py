@@ -17,64 +17,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Event streams carry their event time in ``ts``; every operator here
+# bounds its state by this watermark delay.
+WATERMARK = "2 hours"
 
-def tumbling_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window counts + value sum."""
-    group_cols = group_cols or ["event_type"]
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window counts + value sum per
+    ``event_type``."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), *group_cols)
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
-            *group_cols,
+            "event_type",
             "n",
             "total_value",
         )
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked sliding-window event counts."""
+def sessionized_stream(events: DataFrame) -> DataFrame:
+    """Per-``user_id`` session windows with a 30-minute inactivity gap
+    (session_window) — the streaming form of events_sessionize_30m."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count("*").alias("n"), F.avg("value").alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), "n", "avg_value")
-    )
-
-
-def sessionized_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """Session windows with a dynamic inactivity gap (session_window) —
-    the streaming form of events_sessionize_30m."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), F.col(key_col))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("user_id"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum("value").alias("total_value"),
         )
         .select(
-            F.col(key_col),
+            F.col("user_id"),
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -83,15 +59,10 @@ def sessionized_stream(
     )
 
 
-def streaming_dedup(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_dedup(events: DataFrame, key_cols: list[str]) -> DataFrame:
     """Bounded-state streaming dedup: duplicates arriving within the
     watermark horizon are dropped; state for older keys is reclaimed."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
         key_cols
     )
 
@@ -99,15 +70,12 @@ def streaming_dedup(
 def stream_stream_interval_join(
     left: DataFrame,
     right: DataFrame,
-    key_col: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "r_ts",
-    watermark: str = "2 hours",
+    watermark: str = WATERMARK,
     interval: str = "30 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Watermarked stream-stream join: right events within ``interval``
-    AFTER the matching left event, per key.
+    AFTER the matching left event, per ``user_id``.
 
     The §2.9 category the batch twins can't show: both sides buffer
     state; the watermarks + the two-sided time-range condition bound how
@@ -122,29 +90,28 @@ def stream_stream_interval_join(
     not holding left state forever.  Spark requires the time-range
     condition for outer stream-stream joins for this reason.
 
-    ``right`` must already expose its event time as ``right_ts`` (alias
-    before calling — both inputs may derive from the same source, and
-    self-joins need distinct column names).
+    ``right`` must already expose its key and event time as
+    ``r_user_id`` and ``r_ts`` (alias before calling — both inputs may
+    derive from the same source, and self-joins need distinct column
+    names).
     """
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
+    lw = left.withWatermark("ts", watermark)
+    rw = right.withWatermark("r_ts", watermark)
     cond = (
-        (lw[key_col] == rw[f"r_{key_col}"])
-        & (rw[right_ts] >= lw[left_ts])
-        & (rw[right_ts] <= lw[left_ts] + F.expr(f"INTERVAL {interval}"))
+        (lw["user_id"] == rw["r_user_id"])
+        & (rw["r_ts"] >= lw["ts"])
+        & (rw["r_ts"] <= lw["ts"] + F.expr(f"INTERVAL {interval}"))
     )
     return lw.join(rw, cond, how)
 
 
 def stateful_capped_sessions(
     events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
     gap_s: int = 1800,
     max_events: int = 50,
 ) -> DataFrame:
-    """Custom stateful sessionization via ``applyInPandasWithState``.
+    """Custom per-``user_id`` stateful sessionization via
+    ``applyInPandasWithState``.
 
     Sessions close on inactivity gap (like ``session_window``) OR when
     they reach ``max_events`` — a compound close condition the built-in
@@ -162,7 +129,7 @@ def stateful_capped_sessions(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_schema = (
-        f"{key_col} long, session_start_us long, session_end_us long, "
+        "user_id long, session_start_us long, session_end_us long, "
         "n_events long, total_value double, closed_reason string"
     )
     state_schema = "start long, last long, n long, total double"
@@ -178,7 +145,7 @@ def stateful_capped_sessions(
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    key_col,
+                    "user_id",
                     "session_start_us",
                     "session_end_us",
                     "n_events",
@@ -199,8 +166,8 @@ def stateful_capped_sessions(
         # the concat is small.
         chunks = [pdf for pdf in pdf_iter if len(pdf)]
         if chunks:
-            allpdf = pd.concat(chunks).sort_values(ts_col)
-            for ts, value in zip(allpdf[ts_col], allpdf["value"]):
+            allpdf = pd.concat(chunks).sort_values("ts")
+            for ts, value in zip(allpdf["ts"], allpdf["value"]):
                 ts_us = int(ts.value // 1000)  # pandas Timestamp ns → µs
                 if last is not None and ts_us - last > gap_us:
                     rows.append((uid, start, last, n, total, "gap"))
@@ -228,7 +195,7 @@ def stateful_capped_sessions(
         yield pd.DataFrame(
             rows,
             columns=[
-                key_col,
+                "user_id",
                 "session_start_us",
                 "session_end_us",
                 "n_events",
@@ -238,8 +205,8 @@ def stateful_capped_sessions(
         )
 
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
+        events.withWatermark("ts", WATERMARK)
+        .groupBy("user_id")
         .applyInPandasWithState(
             fn,
             outputStructType=out_schema,
@@ -254,7 +221,6 @@ def stream_static_enrich(
     stream: DataFrame,
     dim: DataFrame,
     key_col: str,
-    how: str = "left",
 ) -> DataFrame:
     """Stream-static enrichment join: decorate a live event stream with a
     slow-changing dimension table (user profile, document metadata).
@@ -267,16 +233,11 @@ def stream_static_enrich(
     read, not a shuffle of the stream.  Left join keeps events whose
     dimension row is missing (nulls), the ingest-friendly default.
     """
-    return stream.join(F.broadcast(dim), key_col, how)
+    return stream.join(F.broadcast(dim), key_col, "left")
 
 
-def stateful_running_totals_tws(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-key running totals via ``transformWithStateInPandas`` — the
+def stateful_running_totals_tws(events: DataFrame) -> DataFrame:
+    """Per-``user_id`` running totals via ``transformWithStateInPandas`` — the
     Spark 4 arbitrary-state API (StatefulProcessor + typed state
     handles), completing the stateful surface next to the classic
     ``applyInPandasWithState`` sessionizer above.
@@ -322,11 +283,11 @@ def stateful_running_totals_tws(
                     continue
                 n += len(pdf)
                 total += float(pdf["value"].sum())
-                last_us = max(last_us, int(pdf[ts_col].max().value // 1000))
+                last_us = max(last_us, int(pdf["ts"].max().value // 1000))
             self._state.update((n, total, last_us))
             yield pd.DataFrame(
                 {
-                    key_col: [key[0]],
+                    "user_id": [key[0]],
                     "n_events": [n],
                     "total_value": [total],
                     "last_seen_us": [last_us],
@@ -336,12 +297,10 @@ def stateful_running_totals_tws(
         def close(self) -> None:
             pass
 
-    out_schema = (
-        f"{key_col} long, n_events long, total_value double, last_seen_us long"
-    )
+    out_schema = "user_id long, n_events long, total_value double, last_seen_us long"
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
+        events.withWatermark("ts", WATERMARK)
+        .groupBy("user_id")
         .transformWithStateInPandas(
             RunningTotals(),
             outputStructType=out_schema,
@@ -351,42 +310,29 @@ def stateful_running_totals_tws(
     )
 
 
-def windowed_distinct_users(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    rsd: float = 0.01,
-) -> DataFrame:
-    """Watermarked tumbling-window APPROXIMATE distinct-user counts.
+def windowed_distinct_users(events: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling-window APPROXIMATE distinct-``user_id``
+    counts (HLL, 1% relative standard deviation).
 
     Streaming cannot hold per-window distinct sets (unbounded state per
     window under late data); ``approx_count_distinct`` keeps one HLL
     register block per window — algebraic, mergeable across
     micro-batches, watermark-evictable.  Same trade as the batch HLL
     rollup (operators/sketches.py): exact below the sparse threshold,
-    ~rsd beyond.  The batch twin for tests is the identical expression
+    ~1% beyond.  The batch twin for tests is the identical expression
     without the watermark."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"))
-        .agg(F.approx_count_distinct(user_col, rsd=rsd).alias("n_users"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.approx_count_distinct("user_id", rsd=0.01).alias("n_users"))
         .select(F.col("w.start").alias("window_start"), "n_users")
     )
 
 
-def ohlc_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    group_cols: list[str] | None = None,
-) -> DataFrame:
+def ohlc_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.relational.ohlc_bars``: watermarked
-    tumbling OHLC bars.
+    1-hour tumbling OHLC bars of ``value`` per ``event_type``, ties in
+    ``ts`` broken by ``event_id``.
 
     min_by/max_by over the decimal-packed (ts, tiebreak) key are
     algebraic, so the state per open window is ONE partial bar (7
@@ -396,14 +342,13 @@ def ohlc_stream(
     maintainable, giving batch/stream result parity by construction
     (asserted in tests/test_streaming.py).
     """
-    group_cols = group_cols or ["event_type"]
-    key = F.unix_micros(F.col(ts_col)).cast("decimal(38,0)") * F.lit(
+    key = F.unix_micros(F.col("ts")).cast("decimal(38,0)") * F.lit(
         10**12
-    ).cast("decimal(38,0)") + F.col(tiebreak_col).cast("decimal(38,0)")
-    v = F.col(value_col)
+    ).cast("decimal(38,0)") + F.col("event_id").cast("decimal(38,0)")
+    v = F.col("value")
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), *group_cols)
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.min_by(v, key).alias("open"),
             F.max(v).alias("high"),
@@ -414,7 +359,7 @@ def ohlc_stream(
         )
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            *group_cols,
+            "event_type",
             "open",
             "high",
             "low",

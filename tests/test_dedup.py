@@ -314,19 +314,26 @@ def test_minhash_incremental_pairs_frees_its_sketch_cache(spark, tmp_path):
     assert persistent() - before == set()
 
 
-def test_reused_sketches_leave_no_cache_entry(spark, docs):
-    """The operators that reuse a sketch materialize it with an eager
-    local checkpoint, not a cache that no caller releases: after each
-    collect, the session's cache manager is still empty."""
+def test_reused_sketches_leave_no_cache_entry(spark, docs, tables):
+    """The operators that reuse a sketch or another intermediate
+    materialize it with an eager local checkpoint, not a cache that no
+    caller releases: after each collect, the session's cache manager is
+    still empty."""
     import numpy as np
 
     from knowledge_model_spark.operators.dedup import semantic_dedup_pairs
+    from knowledge_model_spark.operators.quantization import ivfpq_top_k
+    from knowledge_model_spark.operators.sketches import bitmap_distinct_rollup
+    from knowledge_model_spark.operators.text_rank import bow_cosine_pairs
 
     rng = np.random.default_rng(3)
     vecs = rng.standard_normal((8, 64))
     vecs[1] = vecs[0] + 0.01  # one planted near-dup
     emb = spark.createDataFrame(
         [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
+    )
+    queries = tables["embeddings"].filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     runs = {
         "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, "doc_id", "text"),
@@ -336,6 +343,14 @@ def test_reused_sketches_leave_no_cache_entry(spark, docs):
         "semantic_dedup_pairs": lambda: semantic_dedup_pairs(
             emb, "vec_id", "embedding", n_clusters=2
         ),
+        "bow_cosine_pairs": lambda: bow_cosine_pairs(docs, "doc_id", "text"),
+        "ivfpq_top_k": lambda: ivfpq_top_k(
+            tables["embeddings"], queries, "vec_id", "embedding", "query_id", "qv", k=5
+        ),
+        "bitmap_distinct_rollup": lambda: bitmap_distinct_rollup(
+            tables["events"].withColumn("day", F.col("ts").cast("date")),
+            ["event_type", "day"], ["event_type"], "user_id",
+        )[1],
     }
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()

