@@ -718,15 +718,14 @@ def minhash_incremental_pairs(
 
 
 def minhash_incremental_survivors(
-    new_df: DataFrame, id_col: str, text_col: str, sketch_store: str, threshold: float = 0.8
+    new_df: DataFrame, id_col: str, text_col: str, sketch_store: str
 ) -> DataFrame:
     """Rows of ``new_df`` left by :func:`minhash_incremental_pairs` against
-    ``sketch_store`` (which it extends), first-seen-wins: each pair dooms
-    its new side (its other side arrived earlier), the larger id when both
-    are new, and a broadcast left-anti join drops the doomed ids."""
-    pairs = minhash_incremental_pairs(
-        new_df, id_col, text_col, sketch_store, threshold=threshold
-    )
+    ``sketch_store`` (which it extends) at threshold 0.8, first-seen-wins:
+    each pair dooms its new side (its other side arrived earlier), the
+    larger id when both are new, and a broadcast left-anti join drops the
+    doomed ids."""
+    pairs = minhash_incremental_pairs(new_df, id_col, text_col, sketch_store)
     new_b = new_df.select(F.col(id_col).alias("b")).distinct()
     doomed = pairs.join(F.broadcast(new_b), F.col("id_b") == F.col("b"), "left")
     doomed = doomed.select(F.coalesce("b", "id_a").alias(id_col)).distinct()

@@ -6,8 +6,9 @@ pipelines/flows/continuous.py:8-38, deployments/nas_daily.py:19-32):
 
 1. find the first unprocessed month since the corpus epoch
    (reference: pipelines/tasks/fetch_clean.py:35-53 probes directory
-   existence; here it is a calendar anti-join against the sink's
-   partitions — pure metadata, no data scan),
+   existence; here it is a set difference on the driver: the sink's
+   ``year=/month=`` directories are listed, never read, and the source's
+   months come from one distinct-months job),
 2. drop the month's MinHash near-duplicates of earlier docs, then clean +
    chunk + embed the survivors (partition pruning scans one month only),
 3. stage the passages and gate recall@K over them plus the committed
@@ -17,8 +18,7 @@ pipelines/flows/continuous.py:8-38, deployments/nas_daily.py:19-32):
    reference: ingestion/pipeline.py:78-81): a failed month stays the
    first missing one.
 
-Prefect process hops become Spark stage boundaries; a cron scheduler (or
-Structured Streaming with Trigger.AvailableNow over the landing dir)
+Prefect process hops become Spark stage boundaries; a cron scheduler
 drives `continuous_update` instead of a workflow engine.
 """
 

@@ -16,7 +16,7 @@ multimodal north-star columns (binary payload → mapInPandas features).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from knowledge_model_spark.functions.chunking import split_words

@@ -18,7 +18,6 @@ from knowledge_model_spark.functions.text_analysis import (
     bpe_ish_token_count,
     fingerprint,
     lang_id,
-    normalize_for_dedup,
     quality_score,
     token_count,
 )

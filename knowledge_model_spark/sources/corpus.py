@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from knowledge_model_spark.schemas import CORPUS_CHUNK_SCHEMA, TRAINING_RECORD_SCHEMA
+from knowledge_model_spark.schemas import CORPUS_CHUNK_SCHEMA
 
 
 def read_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
@@ -209,65 +209,6 @@ def weighted_corpus_merge(
             fraction=min(1.0, n_ins * raw_weight / (1 - raw_weight) / n_raw), seed=42
         )
     return raw.unionByName(instruct, allowMissingColumns=True)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 4,
-) -> dict[str, tuple[int, int]]:
-    """Small-file compaction for a hive-partitioned Parquet table.
-
-    Streaming ingest (streaming/ingest.py) appends one file set per
-    micro-batch; months of AvailableNow runs leave each partition with
-    hundreds of kilobyte-scale files, and at 100 TB the scan cost
-    becomes footer-reads and task-scheduling, not data.  This
-    maintenance pass rewrites ONLY the fragmented partitions (more than
-    ``min_files`` files): each is read and coalesced to
-    ``ceil(bytes / target_bytes)`` files, written back with dynamic
-    partition overwrite so untouched partitions keep their files and a
-    crashed rewrite never leaves a partition half-empty (overwrite is
-    per-partition atomic swap, same idempotence story as
-    ``write_partitioned``).
-
-    Partition discovery walks the filesystem driver-side — metadata
-    only, never data (swap ``os`` for the Hadoop FS API on a real
-    cluster; the per-partition plan is identical).  Returns
-    {partition_dir: (files_before, files_after)}.
-    """
-    import math
-    import os
-
-    frag: dict[str, tuple[int, int]] = {}
-    for dirpath, _dirnames, filenames in os.walk(path):
-        parts = [f for f in filenames if f.endswith(".parquet")]
-        if len(parts) <= min_files:
-            continue
-        nbytes = sum(os.path.getsize(os.path.join(dirpath, f)) for f in parts)
-        n_out = max(1, math.ceil(nbytes / target_bytes))
-        if n_out >= len(parts):
-            continue
-        frag[dirpath] = (len(parts), n_out)
-    if not frag:
-        return frag
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for dirpath, (_n_in, n_out) in frag.items():
-            rel = os.path.relpath(dirpath, path)
-            # re-derive the partition columns from the hive path (k=v
-            # segments) so the rewrite lands back in the same partition
-            kv = [seg.split("=", 1) for seg in rel.split(os.sep) if "=" in seg]
-            pdf = spark.read.parquet(dirpath).coalesce(n_out)
-            for k, v in kv:
-                pdf = pdf.withColumn(k, F.lit(v).cast("string"))
-            pdf.write.mode("overwrite").partitionBy(
-                *[k for k, _ in kv]
-            ).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return frag
 
 
 def read_csv_deadletter(

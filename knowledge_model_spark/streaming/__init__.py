@@ -3,8 +3,13 @@
 The reference has no streaming runtime — incrementality is cron +
 filesystem state (reference: deployments/nas_daily.py:19-32,
 pipelines/tasks/fetch_clean.py:35-53).  This package supplies the real
-thing: file-source incremental ingest with Trigger.AvailableNow,
-watermarked windowed aggregations, stateful dedup, and session windows.
+thing: watermarked windowed aggregations, stateful dedup, and session
+windows, plus (in ``streaming.ingest``) two Trigger.AvailableNow sinks
+that keep derived tables current from new landing files.
+``stream_index_ingest`` appends IVF postings at-least-once (a replayed
+micro-batch appends again); ``stream_vocab_ingest`` skips replayed batch
+ids.  Documents enter the corpus sink only through
+``pipelines.ingest_tick``.
 """
 
 from knowledge_model_spark.streaming.windows import (

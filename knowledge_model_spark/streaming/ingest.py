@@ -1,21 +1,21 @@
-"""Streaming file-source ingest: the reference's cron-plus-directory
-incrementality as real Structured Streaming.
+"""Streaming file-source maintenance of two derived tables: the reference's
+cron-plus-directory incrementality as real Structured Streaming.
 
 The reference schedules a daily Prefect flow and tracks progress by
 probing directory existence (reference: deployments/nas_daily.py:19-32,
-pipelines/tasks/fetch_clean.py:35-53 "first missing month", and
-skip-if-exists idempotency pipeline.py:78-81).  The Spark-native form is
-a file-source stream:
+pipelines/tasks/fetch_clean.py:35-53 "first missing month").  Documents
+enter the corpus sink only through ``pipelines.ingest_tick``; the streams
+here keep two tables derived from new landing files up to date:
 
-- ``readStream`` over a JSONL landing directory with an explicit schema
+- ``readStream`` over a Parquet landing directory with an explicit schema
   (new files ARE the increment; no directory probing),
 - ``Trigger.AvailableNow`` — drain everything currently available, then
   stop: exactly the cron-batch semantics, but offsets live in the
-  checkpoint, so a crashed run resumes mid-listing instead of
-  reprocessing the month,
-- ``foreachBatch`` sinks running batch pipelines per micro-batch.  Spark
-  may replay a batch after a crash, so an appending sink is
-  at-least-once; ``stream_vocab_ingest`` skips replays by batch id.
+  checkpoint, so a crashed run resumes mid-listing,
+- ``foreachBatch`` sinks, which Spark may replay after a crash.
+  ``stream_index_ingest`` appends IVF postings with no batch-id check, so
+  a replayed batch lands its postings twice (at-least-once);
+  ``stream_vocab_ingest`` skips replays by batch id.
 
 State scales because the only streaming state is the file-listing
 offset log; the heavy lifting happens in the batch engine per
@@ -25,22 +25,12 @@ micro-batch (Catalyst-optimized, same plans as the batch twins).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
     LongType,
-    StringType,
     StructField,
     StructType,
-)
-
-CORPUS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("source", StringType()),
-    ]
 )
 
 
@@ -54,69 +44,6 @@ def _drain(stream: DataFrame, sink, checkpoint_dir: str) -> None:
         .start()
         .awaitTermination()
     )
-
-
-def _append_corpus(
-    spark: SparkSession, landing_dir: str, out_dir: str, checkpoint_dir: str, keep
-) -> int:
-    """Append ``keep(batch_df)`` of each JSONL micro-batch from
-    ``landing_dir`` (with a ``batch_source_file`` lineage column) to
-    ``out_dir``, partitioned by source; returns the micro-batches run."""
-    n_batches = 0
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        # partition by source → pruning-friendly layout, mirrors the
-        # reference's YYYY/MM directory convention (upload_s3.py:125-131)
-        keep(batch_df).write.mode("append").partitionBy("source").parquet(out_dir)
-
-    stream = spark.readStream.schema(CORPUS_SCHEMA).json(landing_dir)
-    _drain(stream.withColumn("batch_source_file", F.input_file_name()), sink, checkpoint_dir)
-    return n_batches
-
-
-def stream_corpus_ingest(
-    spark: SparkSession, landing_dir: str, out_dir: str, checkpoint_dir: str
-) -> int:
-    """Drain all new JSONL files from ``landing_dir`` into partitioned
-    Parquet at ``out_dir``; returns the number of micro-batches run.
-
-    Re-running after new files land processes ONLY the new files
-    (checkpointed offsets); re-running with no new files is a zero-batch
-    no-op.
-    """
-    return _append_corpus(spark, landing_dir, out_dir, checkpoint_dir, lambda df: df)
-
-
-def stream_dedup_ingest(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    sketch_store: str,
-    threshold: float = 0.8,
-) -> int:
-    """Streaming ingest with near-dup suppression against ALL history:
-    each micro-batch keeps only its
-    :func:`~knowledge_model_spark.operators.dedup.minhash_incremental_survivors`
-    against the durable sketch store (the first-seen-wins step of
-    ``pipelines.ingest_tick``).  Returns the number of micro-batches run.
-
-    The composed form of the reference's monthly ingest + skip-if-exists
-    idempotency (pipeline.py:78-81) — except dedup here is NEAR-dup over
-    the whole accumulated corpus.  Candidate work is ∝ corpus size: every
-    batch re-shuffles the whole store into the bucket groupBy (pruning it
-    to the batch's buckets is ROADMAP direction 4).
-    """
-    from knowledge_model_spark.operators.dedup import minhash_incremental_survivors
-
-    def keep(batch_df: DataFrame) -> DataFrame:
-        return minhash_incremental_survivors(
-            batch_df, "doc_id", "text", sketch_store, threshold=threshold
-        )
-
-    return _append_corpus(spark, landing_dir, out_dir, checkpoint_dir, keep)
 
 
 EMBEDDING_SCHEMA = StructType(
@@ -141,12 +68,15 @@ def stream_index_ingest(
     embedding rows is assigned against the stored centroids and
     appended to the postings table — the streaming form of the
     reference's monthly FAISS rebuild (pipeline.py:215-226), at
-    per-batch cost with checkpointed exactly-once file offsets.
+    per-batch cost with checkpointed file offsets.
 
     The FIRST batch bootstraps the index (trains the frozen centroid
     table from itself); every later batch appends.  Returns the number
     of micro-batches run; a re-run with no new files is a zero-batch
     no-op, and a crashed run resumes mid-listing from the checkpoint.
+    The append has no batch-id check: a batch that Spark replays after a
+    crash between the append and the offset commit appends its postings
+    again (at-least-once).
     """
     from knowledge_model_spark.operators.similarity import (
         ivf_index_append,

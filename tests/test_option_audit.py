@@ -1,4 +1,5 @@
-"""Lint: no engine function keeps an option that nothing sets.
+"""Lint: no engine function keeps an option that nothing sets, and no engine
+module keeps an import that nothing uses.
 
 Walks the engine package, the query registry, ``perfbench/``, ``tools/``,
 ``tests/``, ``bench.py`` and ``__spark_entry__.py`` with ``ast`` (no
@@ -14,6 +15,9 @@ not a ``@register``-ed query:
 A defaulted parameter that no call sets is a configuration that no test or
 benchmark covers: inline its default instead.  Deployment settings that a
 user picks per cluster are allowlisted below.
+
+(c) no top-level import of a package module other than an ``__init__``
+    goes unused; a name listed in the module's ``__all__`` counts as used.
 """
 
 from __future__ import annotations
@@ -134,3 +138,27 @@ def test_every_public_function_is_referenced():
 def test_every_default_is_set_by_some_call():
     _, unset = _audit()
     assert not unset, "defaulted parameters no call sets:\n" + "\n".join(unset)
+
+
+def _unused_imports(path: Path, tree: ast.Module) -> list[str]:
+    bound = {}  # name -> line of the top-level import that binds it
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                bound[a.asname or a.name.split(".")[0]] = a.lineno
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            for a in node.names:
+                bound[a.asname or a.name] = a.lineno
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets):
+            used.update(ast.literal_eval(node.value))
+    rel = path.relative_to(ROOT)
+    return [f"{rel}:{line} {name}" for name, line in bound.items() if name not in used]
+
+
+def test_every_top_level_import_is_used():
+    unused = [u for p in sorted(PACKAGE.rglob("*.py")) if p.name != "__init__.py"
+              for u in _unused_imports(p, ast.parse(p.read_text(), filename=str(p)))]
+    assert not unused, "unused imports:\n" + "\n".join(unused)

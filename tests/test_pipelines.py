@@ -119,6 +119,14 @@ def test_first_missing_month_on_sink_without_partitions(spark, monthly_source, t
     assert first_missing_month(monthly_source, sink) == (2024, 1)
 
 
+def test_first_missing_month_lists_directories_never_data(spark, monthly_source, tmp_path):
+    # month 1 is committed but its one file is not Parquet: any read fails
+    month1 = tmp_path / "listed" / "year=2024" / "month=1"
+    month1.mkdir(parents=True)
+    (month1 / "part-0.parquet").write_bytes(b"not a parquet file")
+    assert first_missing_month(monthly_source, str(tmp_path / "listed")) == (2024, 2)
+
+
 def test_month_with_no_survivors_commits_empty_and_is_done(spark, tables, tmp_path):
     # month 2 re-lands month 1's texts under new ids: the dedup dooms all
     month1 = (

@@ -2210,52 +2210,6 @@ def test_quarantine_tsv_writer_two_phase_commit(spark, tmp_path):
     assert recs["PMID0"] == "fetch_timeout" and recs["PMID1"] == "parse_error"
 
 
-def test_compact_partitions_rewrites_only_fragmented(spark, tmp_path):
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    from knowledge_model_spark.sources.corpus import compact_partitions
-
-    path = str(tmp_path / "tbl")
-    # months 1 and 2 fragmented (12 files each), month 3 healthy (2)
-    for month, nfiles in ((1, 12), (2, 12), (3, 2)):
-        (
-            spark.range(month * 1000, month * 1000 + 600)
-            .select(
-                F.col("id"),
-                F.lit(2024).alias("year"),
-                F.lit(month).alias("month"),
-            )
-            .repartition(nfiles)
-            .write.mode("append")
-            .partitionBy("year", "month")
-            .parquet(path)
-        )
-
-    def files_in(month):
-        return glob.glob(
-            os.path.join(path, "year=2024", f"month={month}", "*.parquet")
-        )
-
-    before = spark.read.parquet(path)
-    before_ids = sorted(r["id"] for r in before.collect())
-    assert len(files_in(1)) == 12 and len(files_in(3)) == 2
-
-    report = compact_partitions(spark, path, target_bytes=1 << 30, min_files=4)
-    assert len(report) == 2  # months 1 and 2 only
-    for _dir, (n_in, n_out) in report.items():
-        assert n_in == 12 and n_out == 1
-
-    assert len(files_in(1)) == 1 and len(files_in(2)) == 1
-    assert len(files_in(3)) == 2  # untouched partition keeps its files
-    after = spark.read.parquet(path)
-    assert sorted(r["id"] for r in after.collect()) == before_ids
-    # idempotent: a second pass finds nothing to do
-    assert compact_partitions(spark, path, target_bytes=1 << 30, min_files=4) == {}
-
-
 def test_read_csv_deadletter(spark, tmp_path):
     from pyspark.sql import types as T
 

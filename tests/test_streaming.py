@@ -171,90 +171,6 @@ def test_stream_stream_interval_join_matches_batch(spark, event_stream_dir, tmp_
     assert got == want and want > 0
 
 
-def test_stream_corpus_ingest_incremental_resume(spark, tmp_path):
-    """AvailableNow drains current files; a second run after new files
-    land processes ONLY the new files (checkpointed offsets), and a third
-    run with nothing new is a no-op."""
-    import json
-
-    from knowledge_model_spark.streaming.ingest import stream_corpus_ingest
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drop(name, rows):
-        with open(landing / name, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    drop("a.jsonl", [{"doc_id": 1, "text": "alpha", "source": "s1"},
-                     {"doc_id": 2, "text": "beta", "source": "s2"}])
-    n1 = stream_corpus_ingest(spark, str(landing), out, ckpt)
-    assert n1 >= 1
-    got1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert got1 == {1, 2}
-
-    drop("b.jsonl", [{"doc_id": 3, "text": "gamma", "source": "s1"}])
-    stream_corpus_ingest(spark, str(landing), out, ckpt)
-    df = spark.read.parquet(out)
-    assert {r["doc_id"] for r in df.collect()} == {1, 2, 3}
-    # doc 1/2 not reprocessed: exactly one row each
-    assert df.count() == 3
-
-    n3 = stream_corpus_ingest(spark, str(landing), out, ckpt)
-    assert n3 == 0  # nothing new → zero micro-batches
-    assert spark.read.parquet(out).count() == 3
-
-    # transform seam: lineage column + partition layout are real
-    assert "batch_source_file" in df.columns
-    assert {r["source"] for r in df.select("source").distinct().collect()} == {"s1", "s2"}
-
-
-def test_stream_dedup_ingest_suppresses_cross_batch_dups(spark, tmp_path):
-    """A doc in batch 2 that near-duplicates batch-1 content never lands
-    in the output, at per-batch cost (batch 1 is not resketched)."""
-    import json
-
-    from knowledge_model_spark.streaming.ingest import stream_dedup_ingest
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    store = str(tmp_path / "sketches")
-    base = ("the quick brown fox jumps over the lazy dog while the cat "
-            "sleeps on the warm windowsill and birds sing in the garden "
-            "trees all day long through spring and summer afternoons")
-
-    def drop(name, rows):
-        with open(landing / name, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    drop("a.jsonl", [
-        {"doc_id": 1, "text": base, "source": "s1"},
-        {"doc_id": 2, "text": "entirely different content about columnar "
-                              "storage engines and vectorized execution "
-                              "kernels processing large analytical workloads",
-         "source": "s1"},
-    ])
-    stream_dedup_ingest(spark, str(landing), out, ckpt, store, threshold=0.6)
-    assert {r["doc_id"] for r in spark.read.parquet(out).collect()} == {1, 2}
-
-    drop("b.jsonl", [
-        {"doc_id": 3, "text": base.replace("quick", "rapid"), "source": "s2"},  # near-dup of 1
-        {"doc_id": 4, "text": "novel text about watermarked streaming "
-                              "aggregation state and checkpoint recovery "
-                              "semantics in long running pipelines",
-         "source": "s2"},
-    ])
-    stream_dedup_ingest(spark, str(landing), out, ckpt, store, threshold=0.6)
-    got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert got == {1, 2, 4}  # 3 suppressed as a near-dup of historical 1
-
-
 def test_stream_static_enrich_matches_batch(spark, event_stream_dir, tmp_path):
     from knowledge_model_spark.streaming import windows as W
 
